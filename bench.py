@@ -1,11 +1,11 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Output contract (round 11): the FINAL stdout line is a COMPACT JSON
-object {"metric", "value", "unit", "sf", "n_queries"} guaranteed to fit
-a bounded tail capture; the full per-query map is printed on its own
-preceding stdout line AND written to BENCH_local.json beside this
-script.
+Output: the full per-query map is written to BENCH_detail.json beside
+this script and printed as ≤900-char JSON chunk lines; the FINAL stdout
+line is a compact JSON object {"metric", "value", "unit", "sf",
+"n_queries", "runs"} that fits a bounded tail capture. Diagnostics go
+to stderr.
 
 Each query is fully materialized via a count-ish action (collect for
 small results) so the measured time includes the whole plan, not just
@@ -64,7 +64,6 @@ HEADLINE = [
     "doc_dedup_substrings",
     "emb_pq_adc_topk",
     "doc_bpe_token_stats",
-    # round-5 second-half additions (one per new family)
     "doc_paragraph_dedup",
     "doc_bm25_search",
     "doc_dsir_sample",
@@ -77,16 +76,11 @@ HEADLINE = [
     "doc_pmi_pairs",
     "doc_token_entropy",
     "doc_decontaminate_bloom",
-    # round-9: the third composed flagship joins the headline so its
-    # wall-clock has a round-over-round trace like the other two, and
-    # the new iterative-training entry gets a trace from birth
     "events_activity_pipeline",
     "doc_lr_quality_filter",
     "emb_pq_rerank_topk",
     "emb_ivfpq_topk",
     "emb_knn_pagerank",
-    # round-9 second-half additions — every new query gets a
-    # wall-clock trace from birth
     "emb_semantic_decontaminate",
     "emb_centrality_weighted_sample",
     "emb_hard_negatives",
@@ -95,43 +89,30 @@ HEADLINE = [
     "emb_knn_pagerank_weighted",
     "emb_curation_manifest",
     "emb_contrastive_triplets",
-    # round-10: arbitrary-α temperature mixture + the 5th composed
-    # flagship trace from birth
     "doc_temperature_mixture_alpha3",
     "doc_training_shard_manifest",
     "emb_knn_label_consensus",
     "doc_perplexity_buckets_by_lang",
     "doc_langid_eval_report",
     "doc_split_leakage_audit",
-    # round-11: the Naive-Bayes langid successor pair and the URL
-    # curation plane get traces from birth
     "doc_langid_nb",
     "doc_langid_nb_eval_report",
     "doc_url_curation",
     "doc_pii_scrub",
     "emb_dim_truncation_recall",
     "doc_lr_calibration_report",
-    # round-12: domain flagship #6 (the reference's composed batch
-    # pipeline) gets a wall-clock trace from birth — the oracle entry
-    # through signals and the stateful backtest tail
     "domain_pipeline",
     "domain_pipeline_backtest",
-    # round-12 second half: the Gopher repetition battery, the
-    # winnowing overlap tier and the 7th composed flagship get traces
-    # from birth
     "doc_repetition_rules",
     "doc_winnow_overlap_pairs",
     "doc_decontamination_audit",
     "doc_winnow_containment_estimate",
     "emb_bitext_margin_mine",
     "emb_bitext_margin_mine_ivf",
-    # round-13: the PSI drift monitor and the OOV-rate report get
-    # traces from birth
     "doc_feature_drift_psi",
     "doc_vocab_oov_rate",
     "emb_drift_psi",
     "events_drift_trend_psi",
-    # round-14 additions (traced from birth)
     "doc_ngram_novelty",
     "doc_langid_kappa_report",
     "events_scd2_history",
@@ -152,7 +133,7 @@ def main() -> None:
     # Console progress bars (`\r[Stage …]`) are pure noise in a batch
     # harness and, when the caller captures stdout+stderr merged, their
     # carriage-return spam can clip the headline JSON line out of a
-    # bounded tail capture (observed round 9: BENCH_r09 parsed:null).
+    # bounded tail capture.
     spark = get_spark(
         app_name="bench",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
@@ -170,19 +151,17 @@ def main() -> None:
     # Shared-host diagnostic: a load average far above this process's
     # own footprint means external tenants are stealing cores and the
     # absolute timings below are inflated (measured 39→199 s total on
-    # identical code under load-avg ~6; see SURVEY round-4 log).
+    # identical code under load-avg ~6).
     print(f"# host load-avg at start: {os.getloadavg()}", file=sys.stderr)
 
     # Contention hardening: SPARK_GRAFT_BENCH_RUNS=N takes the MIN of
     # N runs per query — the min is the least-contended observation,
     # the statistic robust to another tenant stealing cores mid-run.
-    # DEFAULT IS 2 (round 12): this host is permanently multi-tenant
-    # (load-avg observed 0.3→28 with zero logged-in users) and
-    # single-run driver benches mis-signaled regressions in rounds 4,
-    # 10 and 11; the final JSON line carries "runs" so consumers can
-    # see the method. Each query also logs its own load-avg delta so a
-    # single inflated number is attributable to host noise (load rose
-    # under it) vs a real regression (load flat).
+    # The default is 2: on a multi-tenant host single-run benches
+    # mis-signal regressions. The final JSON line carries "runs" so
+    # consumers can see the method. Each query also logs its own
+    # load-avg delta so a single inflated number is attributable to
+    # host noise (load rose under it) vs a real regression (load flat).
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
     timings: dict[str, float] = {}
     for name in HEADLINE:
@@ -209,19 +188,10 @@ def main() -> None:
     # The headline JSON must be the FINAL, unwrapped line of output:
     # stop the session BEFORE printing (JVM shutdown can log to stderr)
     # and flush both streams so even a merged stdout+stderr capture
-    # sees the JSON last, with nothing trailing it.
-    #
-    # The caller's tail capture is BOUNDED (~2.2 KB observed round 10):
-    # with 69 headline queries the full per-query map (~2.7 KB) clips
-    # the head of the line and the parse fails (BENCH_r10 parsed:null).
-    # So the per-query map goes (a) to BENCH_local.json next to this
-    # script and (b) on its OWN stdout line first, and the FINAL line
-    # is a compact object (<200 bytes) that any bounded tail holds
-    # whole.
-    # Distinct metric name on the detail line: a consumer that greps by
-    # metric name (rather than strictly taking the LAST line) must not
-    # pick up this truncation-prone full map instead of the compact
-    # final line (round-11 advice).
+    # sees the JSON last, with nothing trailing it. The per-query map
+    # goes to BENCH_detail.json and, for a bounded (~2 KB) tail
+    # capture, into chunk lines of at most 900 chars each, in HEADLINE
+    # order, so the last two chunks always survive whole.
     full = {
         "metric": "headline_query_wall_clock_detail",
         "value": total,
@@ -232,28 +202,6 @@ def main() -> None:
     }
     try:
         with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_local.json"),
-            "w",
-        ) as f:
-            json.dump(full, f)
-            f.write("\n")
-    except OSError:
-        pass  # read-only checkout: the stdout copy below still has it
-    # Round-16 (r15 judge item): the caller's bounded tail capture
-    # (~2 KB) clips the single full detail line below once the catalog
-    # passed ~70 queries, leaving the round-over-round PERF comparison
-    # with per_query={}. Two additions-only mitigations:
-    # (a) the full map is ALSO written to BENCH_detail.json (stable
-    #     name, survives the run for file-based consumers), and
-    # (b) the map is re-printed in ≤900-char CHUNK lines, each a
-    #     standalone valid JSON object, emitted immediately before the
-    #     final headline line — a 2 KB tail always holds the last two
-    #     chunks whole. Chunks preserve HEADLINE order so the queries
-    #     that survive in the tail are the same ones round over round.
-    # The original detail line and the final headline line are
-    # unchanged.
-    try:
-        with open(
             os.path.join(
                 os.path.dirname(os.path.abspath(__file__)), "BENCH_detail.json"
             ),
@@ -262,16 +210,17 @@ def main() -> None:
             json.dump(full, f)
             f.write("\n")
     except OSError:
-        pass
+        pass  # read-only checkout: the chunk lines still carry the map
+    # Adding {k: v} to a non-empty dict grows its JSON by exactly
+    # len(json.dumps({k: v})): ", " replaces the braces.
     chunks: list[dict[str, float]] = [{}]
     for k, v in timings.items():
-        if chunks[-1] and len(json.dumps(chunks[-1])) + len(k) + 12 > 760:
+        if chunks[-1] and len(json.dumps(chunks[-1])) + len(json.dumps({k: v})) > 760:
             chunks.append({})
         chunks[-1][k] = v
     spark.stop()
     sys.stderr.flush()
     sys.stdout.flush()
-    print(json.dumps(full), flush=True)
     for i, part in enumerate(chunks):
         print(
             json.dumps(

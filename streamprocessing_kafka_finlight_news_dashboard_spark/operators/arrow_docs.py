@@ -73,8 +73,9 @@ def _shingle_set(text: str, n: int = 3) -> set[str]:
 def bigram_counter(text: str | None) -> Counter:
     """Character-bigram Counter of lower(text) — the per-document twin
     of the explode-and-count formulation (every length-2 substring
-    except the one starting at the last character)."""
-    t = text.lower() if text is not None else ""
+    except the one starting at the last character). Any non-``str``
+    input (None, or NaN/pd.NA for a SQL NULL) counts as empty text."""
+    t = text.lower() if isinstance(text, str) else ""
     return Counter(t[i : i + 2] for i in range(len(t) - 1))
 
 

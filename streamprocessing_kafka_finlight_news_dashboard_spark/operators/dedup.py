@@ -110,19 +110,6 @@ def shingle_rows(
     )
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Per-row shingle array (sorted, distinct) — only for operators
-    that need pairwise array math; prefer :func:`shingle_rows` in
-    anything that fans out, it is ~8× faster at scale."""
-    toks = tokens(text)
-    k = F.size(toks) - (n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
-    return F.array_sort(F.array_distinct(grams))
-
-
 def shingle_arrays(
     df: DataFrame,
     text_col: str = "text",

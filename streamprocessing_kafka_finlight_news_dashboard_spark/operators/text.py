@@ -949,20 +949,6 @@ def langid_dual_predictions(
     return scatter_rr(df.select(id_col, label_col, text_col)).mapInPandas(op, schema)
 
 
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full text-stat block to a documents-shaped table."""
-    t = F.col(text_col)
-    return df.select(
-        "*",
-        token_count(t).alias("n_tokens"),
-        char_count(t).alias("n_chars_measured"),
-        F.round(avg_token_len(t), 6).alias("avg_token_len"),
-        F.round(stopword_ratio(t), 6).alias("stopword_ratio"),
-        quality_score(t).alias("quality"),
-        fingerprint(t).alias("fp"),
-    )
-
-
 def tfidf_top_terms(
     df: DataFrame,
     text_col: str = "text",

@@ -6,13 +6,9 @@ from streamprocessing_kafka_finlight_news_dashboard_spark.plans.catalog import (
     query,
 )
 
-# Importing the plan modules populates the catalog registry.
-#
-# ORDER MATTERS for external correctness tooling that checks entries in
-# registration order: the flagship PIT/time-series queries and the
-# LLM-pipeline surface (doc_*/emb_*/media_*/domain) register FIRST so
-# they are always inside any fixed-size verification window; the TPC-H
-# relational shapes (already extensively verified) register last.
+# Importing the plan modules populates the catalog registry. CATALOG
+# iterates in registration order: this import order, then source order
+# within each module.
 from streamprocessing_kafka_finlight_news_dashboard_spark.plans import (  # noqa: E402,F401
     timeseries,
     timeseries2,
@@ -26,114 +22,5 @@ from streamprocessing_kafka_finlight_news_dashboard_spark.plans import (  # noqa
     relational2,
     relational3,
 )
-
-# Explicit catalog ordering: external correctness tooling verifies entries
-# in iteration order with a bounded window, so the queries most in need of
-# fresh evidence must iterate first. After the side-effect imports above,
-# rebuild the (insertion-ordered) CATALOG dict: the hand-pinned names in
-# _PRIORITY lead, then every entry WITHOUT a green row in the most recent
-# CORRECTNESS_r*.json (new queries and prior hash-mismatches), then the
-# already-driver-verified remainder in registration order. Evidence is
-# cumulative across rounds, so re-checking green entries last maximizes
-# total verified coverage.
-_PRIORITY = [
-    # round-14: no r14 change altered any existing entry's RESULT (the
-    # PSI degenerate-edge/NULL hardening only moves constant-baseline
-    # or NULL-bearing features, of which the four drift entries have
-    # none — all four re-checked oracle-green at sf0.01 after the
-    # change, plus the full 177-entry sweep). The pin list stays at the
-    # two flagship anchors; the two new r14 entries
-    # (doc_ngram_novelty, doc_langid_kappa_report) auto-front as
-    # never-verified, and the window back-fills with the stalest green
-    # tier via the oldest-evidence-first rotation below.
-    "pit_lookback_join",
-    "signal_generation",
-]
-
-
-def _driver_green_tiers() -> tuple[set[str], dict[str, int], set[str]]:
-    """(fresh_green, stale_green, rows_only): classify each catalog entry
-    from its LAST-SEEN driver row across all CORRECTNESS_r*.json files —
-    fresh = that last row is green AND comes from the most recent file;
-    stale = last row is green but from an earlier round (not re-checked
-    since); rows_only = last row is ``err: "no_oracle"`` with a recorded
-    row count — it ran fine but BY DESIGN has no SQL oracle, so it can
-    never turn ``rows_match`` green. An entry whose last row is RED
-    (hash/row mismatch or a non-``no_oracle`` error) lands in NO tier and
-    therefore sorts into the front never-verified window — a query that
-    gained an oracle and then failed must be re-driven first, not parked
-    in the back smoke tier. Stale entries iterate BEFORE fresh ones so
-    verification rotates — a query verified once is re-checked in later
-    rounds rather than being permanently exempted. Rows-only entries sort
-    AFTER stale-green oracles: treating them as "never verified" would
-    park them permanently at the front of the driver's fixed-size window
-    (14/50 slots in round 5), starving the oracle entries of fresh
-    evidence; they still rotate in behind the stale tier for periodic
-    runs-at-all smoke coverage."""
-    import glob
-    import json
-    import os
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    runs = sorted(glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json")))
-    last: dict[str, tuple[int, dict]] = {}
-    n_runs = 0
-    for i, path in enumerate(runs):
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):  # pragma: no cover - absent/corrupt file
-            continue
-        n_runs = i + 1
-        for name, row in rows.items():
-            last[name] = (i, row)
-    fresh: set[str] = set()
-    stale: dict[str, int] = {}  # name -> last-green round index
-    rows_only: set[str] = set()
-    for name, (i, row) in last.items():
-        if row.get("rows_match") and row.get("hash_match") in (True, None):
-            if i == n_runs - 1:
-                fresh.add(name)
-            else:
-                stale[name] = i
-        elif row.get("err") == "no_oracle" and row.get("spark_rows") is not None:
-            # A last-row-``no_oracle`` entry that NOW carries an oracle
-            # (one was added after that driver run) is effectively
-            # never-verified: leave it unclassified so it sorts into the
-            # front window and earns its hash row next round instead of
-            # queueing behind every stale-green entry.
-            entry = CATALOG.get(name)
-            if entry is None or entry.oracle is None:
-                rows_only.add(name)
-        # else: red / timeout / other err — leave unclassified so the
-        # entry sorts into the front tier for immediate re-verification.
-    return fresh, stale, rows_only
-
-
-_fresh, _stale, _rows_only = _driver_green_tiers()
-_ordered = {n: CATALOG[n] for n in _PRIORITY if n in CATALOG}
-# never verified / new / red — but NOT rows-only-by-design entries,
-# which would otherwise monopolize the front of the window forever
-for _n, _q in list(CATALOG.items()):
-    if _n not in _ordered and _n not in _fresh and _n not in _stale and _n not in _rows_only:
-        _ordered[_n] = _q
-# verified, but not recently — rotate back in OLDEST-EVIDENCE-FIRST
-# (ascending last-green round, registration order within a round), so
-# an entry whose freshest row dates to r1 outranks one from r(N-2)
-# instead of queueing behind it in registration order (the r10 verdict
-# counted 30 TPC-H-tail entries starved exactly that way).
-for _n in sorted(_stale, key=lambda n: _stale[n]):
-    if _n in CATALOG and _n not in _ordered:
-        _ordered[_n] = CATALOG[_n]
-for _tier in (
-    lambda n: n in _rows_only,  # no_oracle by design — periodic smoke only
-    lambda n: True,  # freshly verified — safe to re-check last
-):
-    for _n, _q in list(CATALOG.items()):
-        if _n not in _ordered and _tier(_n):
-            _ordered[_n] = _q
-CATALOG.clear()
-CATALOG.update(_ordered)
-del _ordered, _fresh, _stale, _rows_only
 
 __all__ = ["CATALOG", "CatalogQuery", "all_queries", "oracle_map", "query"]

@@ -1,12 +1,13 @@
 """Query catalog: named DataFrame builders + DuckDB oracle SQL.
 
-Every operator from SURVEY.md §2 gets at least one catalog entry; the
-driver runs the Spark builder and the oracle SQL side by side at
-sf=0.01 and hash-compares results (CORRECTNESS_r{N}.json). Entries
-without oracle SQL (genuinely non-SQL-expressible, e.g. the stateful
-portfolio simulation) get a rows-only check.
+Every operator from SURVEY.md §2 gets at least one catalog entry;
+tests/test_queries_oracle.py (and tools/check_all.py at larger scales)
+runs the Spark builder and the oracle SQL side by side and
+hash-compares results. Entries without oracle SQL (genuinely
+non-SQL-expressible, e.g. the stateful portfolio simulation) get a
+rows-only check. CATALOG iterates in registration order.
 
-Contract notes (from the driver):
+Contract notes:
 - compare is order-insensitive but column-NAME sensitive — every
   computed column is aliased identically in builder and oracle;
 - floats are canonicalized by the driver, but we still prefer

@@ -425,8 +425,11 @@ def doc_langid_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     act = cm.groupBy("lang").agg(
         F.sum("c").alias("n_actual"),
         F.sum(
-            # same integer as summing per-row (pred==lang) 0/1 flags:
-            # each matrix cell's rows share one comparison outcome
+            # each matrix cell's rows share one comparison outcome, so
+            # this equals summing per-row (pred==lang) 0/1 flags except
+            # for a lang group whose pred_lang values are all NULL: it
+            # yields 0 here where the flag sum yields NULL. That group
+            # cannot occur: predictions are non-null.
             F.when(F.col("pred_lang") == F.col("lang"), F.col("c")).otherwise(
                 F.lit(0)
             )

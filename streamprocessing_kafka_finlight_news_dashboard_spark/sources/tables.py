@@ -155,10 +155,3 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
     use = names or TABLES
     return {n: load_table(spark, sf_dir, n) for n in use}
 
-
-def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register each table as a temp view so plans can be written in
-    ``spark.sql`` — same Catalyst plan either way (SURVEY §3.1
-    mapping)."""
-    for n, df in load_tables(spark, sf_dir, *names).items():
-        df.createOrReplaceTempView(n)

@@ -139,14 +139,11 @@ def dedup_stream(
     Duplicates later than the watermark are admitted — the documented
     retention trade-off (SURVEY §7.3).
     """
-    marked = stream.withWatermark(event_time_col, watermark)
-    # dropDuplicatesWithinWatermark (Spark 3.5+) dedups on the id alone
-    # while still evicting state at the watermark; the fallback keys
-    # state by (id, event-time), which also bounds state but only
-    # collapses duplicates carrying identical timestamps.
-    if hasattr(marked, "dropDuplicatesWithinWatermark"):
-        return marked.dropDuplicatesWithinWatermark(list(id_cols))
-    return marked.dropDuplicates([*id_cols, event_time_col])
+    # dropDuplicatesWithinWatermark dedups on the id alone while still
+    # evicting state at the watermark.
+    return stream.withWatermark(
+        event_time_col, watermark
+    ).dropDuplicatesWithinWatermark(list(id_cols))
 
 
 def windowed_event_counts(
@@ -594,18 +591,8 @@ def curation_gate_stream(
 
         _is_clean = F.pandas_udf(_clean_batch, T.BooleanType())
         gated = gated.filter(_is_clean(F.col("text")))
-    marked = gated.withWatermark(event_time_col, watermark)
-    if hasattr(marked, "dropDuplicatesWithinWatermark"):
-        return marked.dropDuplicatesWithinWatermark(["fp"])
-    # No silent fallback: dropDuplicates(['fp', event_time_col]) would
-    # only drop rows with identical fingerprint AND timestamp —
-    # re-crawls at different instants would pass, quietly breaking the
-    # one-doc-per-fingerprint contract documented above.
-    raise RuntimeError(
-        "curation_gate_stream requires dropDuplicatesWithinWatermark "
-        "(Spark >= 3.5); this runtime lacks it, and no weaker batch-"
-        "semantics substitute honors the one-doc-per-fingerprint "
-        "contract."
+    return gated.withWatermark(event_time_col, watermark).dropDuplicatesWithinWatermark(
+        ["fp"]
     )
 
 

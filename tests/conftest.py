@@ -11,6 +11,8 @@ from streamprocessing_kafka_finlight_news_dashboard_spark import get_spark
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
+# the scale bench.py and the full oracle sweep run at
+SF_BENCH = os.path.join(os.path.dirname(SF_SMOKE), "sf0.1")
 
 
 @pytest.fixture(scope="session")

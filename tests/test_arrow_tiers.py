@@ -7,6 +7,8 @@ paths, so any divergence here would silently break the oracle gate.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import arrow_docs as A
@@ -134,6 +136,8 @@ def test_twins_agree_on_nasty_strings(spark):
     arrow_bg = A.char_bigram_counts_arrow(df2, id_cols=("doc_id", "lang"))
     cols = ["doc_id", "lang", "bg", "cnt"]
     assert _sorted_rows(jvm_bg, cols) == _sorted_rows(arrow_bg, cols)
+    # pandas can surface a SQL NULL string as NaN instead of None
+    assert A.bigram_counter(float("nan")) == Counter()
 
 
 def test_operators_invariant_to_input_partitioning(docs, spark):

@@ -56,3 +56,27 @@ def test_coverage_doc_header_matches_catalog():
     assert int(m.group(2)) == len(plans.oracle_map()), (
         f"COVERAGE.md says {m.group(2)} oracle-checked; oracle_map has {len(plans.oracle_map())}"
     )
+
+
+def test_catalog_iterates_in_registration_order():
+    """CATALOG iterates in registration order: plan modules in the order
+    plans/__init__.py imports them, then builder source order within a
+    module. Nothing reorders the registry after import."""
+    import ast
+    import inspect
+
+    tree = ast.parse(inspect.getsource(plans))
+    modules = [
+        alias.name
+        for node in tree.body
+        if isinstance(node, ast.ImportFrom) and node.module == plans.__name__
+        for alias in node.names
+    ]
+    keys = [
+        (
+            modules.index(q.builder.__module__.rsplit(".", 1)[-1]),
+            q.builder.__code__.co_firstlineno,
+        )
+        for q in plans.CATALOG.values()
+    ]
+    assert keys == sorted(keys)

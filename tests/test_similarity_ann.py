@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import similarity as S
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import text as X
 from streamprocessing_kafka_finlight_news_dashboard_spark.sources.tables import load_table
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_BENCH, SF_ORACLE, SF_SMOKE
 
 QUERY_IDS = list(range(10))
 
@@ -1384,7 +1384,7 @@ def test_embedding_width_pins_full_width_constant(spark):
     silently turning the derived row into a lie."""
     from streamprocessing_kafka_finlight_news_dashboard_spark.plans.similarity import _TRUNC_DIMS
 
-    for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
+    for sf in (SF_SMOKE, SF_ORACLE, SF_BENCH):
         e = load_table(spark, sf, "embeddings")
         widths = (
             e.select(F.size("embedding").alias("w")).distinct().collect()

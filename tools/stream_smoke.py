@@ -10,7 +10,6 @@ be insensitive to store size beyond the join's shuffle of the store
 side — the 100 TB contract the module docstring states.
 
 Run: python tools/stream_smoke.py [multipliers...]   (default 1 10 50)
-Output convention: committed as SMOKE_r{N}_stream*.txt
 """
 
 from __future__ import annotations
