@@ -20,6 +20,7 @@ from __future__ import annotations
 import math
 
 import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -88,3 +89,14 @@ def sentiment_udf(texts: pd.Series) -> pd.Series:
         analyzer = SentimentIntensityAnalyzer()
         return texts.fillna("").map(lambda t: analyzer.polarity_scores(t)["compound"])
     return texts.fillna("").map(_fallback_compound)
+
+
+def with_sentiment(df: DataFrame, body_col: str) -> DataFrame:
+    """Add ``text`` = trim(title ⊕ ' ' ⊕ ``body_col``), null-safe
+    (reference scripts/03_add_sentiment.py:25), and its ``sentiment``
+    score — the one text-and-score step of both planes: the batch news
+    table's body is ``description``, the stream envelope's ``summary``."""
+    text = F.trim(
+        F.concat_ws(" ", F.coalesce("title", F.lit("")), F.coalesce(body_col, F.lit("")))
+    )
+    return df.withColumn("text", text).withColumn("sentiment", sentiment_udf(F.col("text")))

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from streamprocessing_kafka_finlight_news_dashboard_spark.functions.sentiment import sentiment_udf
+from streamprocessing_kafka_finlight_news_dashboard_spark.functions.sentiment import with_sentiment
 
 
 def dedup_articles_keep_last(news: DataFrame, order_col: str = "published_utc") -> DataFrame:
@@ -28,10 +28,7 @@ def add_sentiment(news: DataFrame) -> DataFrame:
     (reference scripts/03_add_sentiment.py:25), scored by the
     Arrow-batched sentiment pandas UDF (F1) — the engine's only
     Python-side hot-path operator, by necessity."""
-    text = F.trim(
-        F.concat_ws(" ", F.coalesce("title", F.lit("")), F.coalesce("description", F.lit("")))
-    )
-    return news.withColumn("text", text).withColumn("sentiment", sentiment_udf(F.col("text")))
+    return with_sentiment(news, "description")
 
 
 def sentiment_distribution(news_scored: DataFrame) -> DataFrame:

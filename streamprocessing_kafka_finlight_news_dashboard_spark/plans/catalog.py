@@ -1,8 +1,8 @@
 """Query catalog: named DataFrame builders + DuckDB oracle SQL.
 
 Every operator from SURVEY.md §2 gets at least one catalog entry;
-tests/test_queries_oracle.py (and tools/check_all.py at larger scales)
-runs the Spark builder and the oracle SQL side by side and
+tests/test_queries_oracle.py (and ``tools/check_all.py [NAME...] --sf DIR``
+at larger scales) runs the Spark builder and the oracle SQL side by side and
 hash-compares results. Entries without oracle SQL (genuinely
 non-SQL-expressible, e.g. the stateful portfolio simulation) get a
 rows-only check. CATALOG iterates in registration order.

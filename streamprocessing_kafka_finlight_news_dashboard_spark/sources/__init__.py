@@ -1,7 +1,6 @@
 from streamprocessing_kafka_finlight_news_dashboard_spark.sources.tables import (
     TABLES,
     load_table,
-    load_tables,
 )
 
-__all__ = ["TABLES", "load_table", "load_tables"]
+__all__ = ["TABLES", "load_table"]

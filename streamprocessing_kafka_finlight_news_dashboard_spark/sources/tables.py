@@ -148,10 +148,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif col == "ts" and dtype == "timestamp_ntz":  # MICROS, utc-naive
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    """Load several tables at once; defaults to all of them."""
-    use = names or TABLES
-    return {n: load_table(spark, sf_dir, n) for n in use}
-

@@ -46,17 +46,18 @@ the benchmark grams and the rates table (both epoch-bounded, MBs). The
 span store grows ~linearly in corpus tokens; it is the relational
 analogue of the suffix-array service ExactSubstr deployments run, and
 partition-pruned per batch. Stats partials are language/domain-sized.
-All per-batch writes land in ``batch_id=<gen>-<N>`` partition dirs with
-OVERWRITE + a single atomic-rename ledger marker per batch (the commit
-point for EVERY family), so replays rebuild partials instead of
-duplicating them, and heal() deletes any family's uncommitted orphans
-at writer start.
+All main families share ONE committed-batch ledger, whose marker is
+the commit point for all of a batch's writes; the stats families sit in
+a nested ``stats/`` store with its own ledger (format, crash matrix and
+single-writer assumption: :mod:`streaming.ledger`).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+
+from streamprocessing_kafka_finlight_news_dashboard_spark.streaming import ledger as L
 
 __all__ = [
     "write_stream_curation_pipeline",
@@ -80,24 +81,6 @@ _FAMILY_SCHEMAS = {
     "spans": "key string",
     "fps": "fp string",
 }
-
-
-def _read_family(spark, root: str, schema: str, part_val: str) -> DataFrame | None:
-    """Committed-so-far rows of one store family, EXCLUDING this
-    attempt's own partition (a replay after a crash between the family
-    write and the marker must not see its own partial output — the
-    same self-exclusion as merge_canonical_docs' bands read). Returns
-    None when the family has no partitions yet."""
-    import os
-
-    if not (
-        os.path.isdir(root)
-        and any(e.startswith("batch_id=") for e in os.listdir(root))
-    ):
-        return None
-    return spark.read.schema(schema).parquet(root).filter(
-        F.col("batch_id").cast("string") != F.lit(part_val)
-    )
 
 
 def write_stream_curation_pipeline(
@@ -136,25 +119,22 @@ def write_stream_curation_pipeline(
     report per-period PSI of the kept corpus over the whole ingest —
     the composed-pipeline twin of the standalone stats writer's
     trend family."""
-    import hashlib
     import os
-    import shutil
 
     from streamprocessing_kafka_finlight_news_dashboard_spark.operators import dedup as DD
     from streamprocessing_kafka_finlight_news_dashboard_spark.operators import text as X
     from streamprocessing_kafka_finlight_news_dashboard_spark.operators import url as UU
     from streamprocessing_kafka_finlight_news_dashboard_spark.operators.arrow_docs import shingle_rows_arrow
-    from streamprocessing_kafka_finlight_news_dashboard_spark.streaming.pipeline import merge_canonical_docs
+    from streamprocessing_kafka_finlight_news_dashboard_spark.streaming.pipeline import (
+        check_drift_bucketing_version,
+        merge_canonical_docs,
+    )
 
     if blocklist is None:
         blocklist = UU.BLOCKLIST
     store = store_dir.rstrip("/")
     paths = {fam: f"{store}/{fam}" for fam in _FAMILIES}
     stats_dir = f"{store}/stats"
-    ledger = f"{store}/_ledger"
-    stats_ledger = f"{stats_dir}/_ledger"
-    gen = hashlib.md5(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:8]
-    healed: list[bool] = []
 
     # Epoch-frozen broadcast sides, materialized ONCE at writer start:
     # the rates table and the benchmark gram set do not change within
@@ -196,89 +176,36 @@ def write_stream_curation_pipeline(
         raise ValueError("drift_period_col requires drift_edges")
 
     def heal() -> None:
-        """Delete crash leftovers of ANY generation (single-writer
-        assumption, as write_stream_dedup_canonical documents).
-        Compaction-aware: interrupted compactions are FINISHED first
-        (the in-merge store reads scan families raw, so a compact
-        partition must never coexist with the batches it replaced);
-        main-family partitions are committed iff their main marker
-        lives (compact partitions carry one); stats partitions answer
-        to the stats ledger's own committed set; and a stats marker
-        for an ordinary batch id that was NEVER main-committed —
-        neither a live marker nor inside any compact manifest's
-        replaces list — is the crash window between the two marker
-        writes under a dead generation (live ones replay and rewrite
-        it), so marker and partials both go."""
-        from streamprocessing_kafka_finlight_news_dashboard_spark.streaming.pipeline import (
-            _check_drift_bucketing_version,
-            _committed_stats_batches,
-            _heal_compaction,
-        )
-
+        """Both ledgers' :func:`streaming.ledger.heal`, then the one
+        crash window the composition adds: a stats marker for an
+        ordinary batch that was NEVER main-committed — neither a live
+        main marker nor inside any main compaction manifest — is a crash
+        between the two marker writes under a dead generation (live ones
+        replay and rewrite it), so marker and partials both go."""
         if frozen_edges is not None:
             # bucketing-scheme stamp/check BEFORE any new drift partial
             # lands — mixed-generation histogram merges are refused,
             # same guard as the standalone stats writer (r14 advice)
-            _check_drift_bucketing_version(stats_dir, writing=True)
-        _heal_compaction(store, _FAMILIES)
-        _heal_compaction(stats_dir, _STATS_FAMILIES)
-        for root in paths.values():
-            if not os.path.isdir(root):
-                continue
-            for entry in os.listdir(root):
-                if not entry.startswith("batch_id="):
-                    continue
-                part = entry.split("=", 1)[1]
-                if not os.path.exists(os.path.join(ledger, f"batch-{part}")):
-                    shutil.rmtree(os.path.join(root, entry))
-        stats_committed = (
-            set(_committed_stats_batches(stats_dir))
-            if os.path.isdir(stats_ledger)
-            else set()
-        )
-        for sub in _STATS_FAMILIES:
-            root = os.path.join(stats_dir, sub)
-            if not os.path.isdir(root):
-                continue
-            for entry in os.listdir(root):
-                if not entry.startswith("batch_id="):
-                    continue
-                if entry.split("=", 1)[1] not in stats_committed:
-                    shutil.rmtree(os.path.join(root, entry))
-        ever_main = _ever_main_committed(ledger)
-        if os.path.isdir(stats_ledger):
-            for entry in os.listdir(stats_ledger):
-                if not entry.startswith("batch-"):
-                    continue
-                pid = entry[len("batch-"):]
-                if pid.startswith("compact-") or pid in ever_main:
-                    continue
-                os.remove(os.path.join(stats_ledger, entry))
-                for sub in _STATS_FAMILIES:
-                    d = os.path.join(stats_dir, sub, f"batch_id={pid}")
-                    if os.path.isdir(d):
-                        shutil.rmtree(d)
+            check_drift_bucketing_version(stats_dir, writing=True)
+        L.heal(store, _FAMILIES)
+        L.heal(stats_dir, _STATS_FAMILIES)
+        ever_main = L.ever_committed(store)
+        for pid in L.committed_batches(stats_dir):
+            if not L.is_compaction(pid) and pid not in ever_main:
+                L.drop_batch(stats_dir, pid, _STATS_FAMILIES)
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        os.makedirs(ledger, exist_ok=True)
-        if not healed:
-            heal()
-            healed.append(True)
-        part_val = f"{gen}-{batch_id}"
-        marker = os.path.join(ledger, f"batch-{part_val}")
-        if os.path.exists(marker):
-            return
+    def write(batch_df: DataFrame, part_val: str) -> bool:
         spark = batch_df.sparkSession
         batch = batch_df.persist()
         pinned = [batch]  # persisted frames released in finally
         try:
             if not len(batch.take(1)):
-                return
+                return False
             # ---- stage -1: URL gate (frozen rates + seen-canon store)
             # marked feeds three consumers (gate, new-canon keys,
             # domain partial) — persist so the dup window runs once
             marked = UU.url_marked(batch, url_col=url_col)
-            seen_canon = _read_family(spark, paths["urlcanon"], _FAMILY_SCHEMAS["urlcanon"], part_val)
+            seen_canon = L.read_others(spark, paths["urlcanon"], part_val, _FAMILY_SCHEMAS["urlcanon"])
             if seen_canon is not None:
                 marked = marked.join(
                     seen_canon.select(F.col("canon").alias("__canon"))
@@ -366,7 +293,7 @@ def write_stream_curation_pipeline(
             clean = clean.localCheckpoint(eager=False)
             funnel_stages.append((4, "decontaminate", clean))
             # ---- stage 1.75: incremental ExactSubstr cut (span store)
-            seen_spans = _read_family(spark, paths["spans"], _FAMILY_SCHEMAS["spans"], part_val)
+            seen_spans = L.read_others(spark, paths["spans"], part_val, _FAMILY_SCHEMAS["spans"])
             cut = DD.dedup_substrings(
                 clean,
                 k=substr_k,
@@ -389,7 +316,7 @@ def write_stream_curation_pipeline(
             fped = cutdocs.withColumn("fp", fp).withColumn(
                 "__min_id", F.min("doc_id").over(W.partitionBy("fp"))
             )
-            seen_fps = _read_family(spark, paths["fps"], _FAMILY_SCHEMAS["fps"], part_val)
+            seen_fps = L.read_others(spark, paths["fps"], part_val, _FAMILY_SCHEMAS["fps"])
             if seen_fps is not None:
                 fped = fped.join(
                     seen_fps.select("fp").distinct().withColumn("__fseen", F.lit(1)),
@@ -429,7 +356,7 @@ def write_stream_curation_pipeline(
             # without the pin each re-scans the just-written partition)
             kept_final = (
                 spark.read.schema("doc_id long, lang string, text string")
-                .parquet(f"{paths['docs']}/batch_id={part_val}")
+                .parquet(L.partition_path(paths["docs"], part_val))
                 .persist()
             )
             pinned.append(kept_final)
@@ -498,41 +425,32 @@ def write_stream_curation_pipeline(
             # already-small result instead, keeping the wide work at
             # full parallelism; spans stay un-collapsed (corpus-sized).
             new_canons.repartition(1).write.mode("overwrite").parquet(
-                f"{paths['urlcanon']}/batch_id={part_val}"
+                L.partition_path(paths["urlcanon"], part_val)
             )
             new_spans.write.mode("overwrite").parquet(
-                f"{paths['spans']}/batch_id={part_val}"
+                L.partition_path(paths["spans"], part_val)
             )
             new_fps.repartition(1).write.mode("overwrite").parquet(
-                f"{paths['fps']}/batch_id={part_val}"
+                L.partition_path(paths["fps"], part_val)
             )
-            os.makedirs(stats_ledger, exist_ok=True)
             for sub, frame in stats_partials:
                 frame.coalesce(1).write.mode("overwrite").parquet(
-                    f"{stats_dir}/{sub}/batch_id={part_val}"
+                    L.partition_path(os.path.join(stats_dir, sub), part_val)
                 )
-            # stats marker first (idempotent tmp+rename; a replay
-            # rewrites identical partials), then the MAIN marker — the
-            # single commit point for every family of this batch. A
-            # crash between the two leaves a stats-only orphan: heal()
+            # stats marker first (a replay rewrites identical partials),
+            # then the MAIN marker (start_writer commits it on return)
+            # — the single commit point for every family of this batch.
+            # A crash between the two leaves a stats-only orphan: heal()
             # removes it at the next writer start, and
             # read_curation_stats masks it for LIVE readers by
             # intersecting with the main ledger
-            for led in (stats_ledger, ledger):
-                tmp = os.path.join(led, f"batch-{part_val}._tmp")
-                with open(tmp, "w") as fh:
-                    fh.write("committed")
-                os.rename(tmp, os.path.join(led, f"batch-{part_val}"))
+            L.commit(L.ledger_dir(stats_dir), part_val)
+            return True
         finally:
             for frame in pinned:
                 frame.unpersist()
 
-    return (
-        docs_stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return L.start_writer(docs_stream, store, checkpoint_dir, heal, write)
 
 
 def compact_curation_store(
@@ -549,21 +467,18 @@ def compact_curation_store(
     writer/readers; a crash inside the marker→cleanup window is
     finished by the next compact call or the next writer start's heal.
     Returns (main batches replaced, stats batches replaced)."""
-    from streamprocessing_kafka_finlight_news_dashboard_spark.streaming.pipeline import (
-        _compact_ledgered_store,
-        compact_stats_store,
-    )
+    from streamprocessing_kafka_finlight_news_dashboard_spark.streaming.pipeline import compact_stats_store
 
     store = store_dir.rstrip("/")
-    n_main = _compact_ledgered_store(
+    n_main = L.compact(
         spark,
         store,
         {
             "urlcanon": lambda df: df.select("canon").distinct(),
             "spans": lambda df: df.select("key").distinct(),
             "fps": lambda df: df.select("fp").distinct(),
-            "docs": lambda df: df.drop("batch_id"),
-            "bands": lambda df: df.drop("batch_id"),
+            "docs": lambda df: df,
+            "bands": lambda df: df,
         },
         coalesce_one=False,
         _crash_after_marker=_crash_after_marker,
@@ -578,26 +493,12 @@ def read_curation_store_docs(spark, store_dir: str) -> DataFrame:
     """Committed kept canonicals ``(doc_id, lang, text)`` — the drained
     equivalent of the batch flagship's `s4` curated corpus (ledger-
     filtered, so an unhealed crash leftover never leaks into reads)."""
-    import os
-
-    from streamprocessing_kafka_finlight_news_dashboard_spark.streaming.pipeline import _committed_stats_batches
-
-    store = store_dir.rstrip("/")
-    root = f"{store}/docs"
-    # manifest-aware committed set: a crash between a compaction's
-    # marker and its physical cleanup must not double-count the
-    # replaced batches
-    committed = _committed_stats_batches(store)
-    if not committed or not (
-        os.path.isdir(root)
-        and any(e.startswith("batch_id=") for e in os.listdir(root))
-    ):
-        return spark.createDataFrame([], "doc_id long, lang string, text string")
-    return (
-        spark.read.parquet(root)
-        .filter(F.col("batch_id").cast("string").isin(committed))
-        .select("doc_id", "lang", "text")
-    )
+    return L.read_committed(
+        spark,
+        store_dir.rstrip("/") + "/docs",
+        L.committed_batches(store_dir),
+        "doc_id long, lang string, text string",
+    ).select("doc_id", "lang", "text")
 
 
 def read_curation_store_manifest(spark, store_dir: str) -> DataFrame:
@@ -615,30 +516,6 @@ def read_curation_store_manifest(spark, store_dir: str) -> DataFrame:
     )
 
 
-def _ever_main_committed(ledger: str) -> set[str]:
-    """Every batch id the MAIN ledger has ever committed: live markers
-    plus every id inside a compact manifest's ``replaces`` list (a
-    main compaction removes the ordinary markers it merged, but those
-    batches WERE committed — their stats partials stay valid). Shared
-    by heal() and :func:`read_curation_stats`, so the write-side and
-    read-side notions of "main-committed" cannot diverge."""
-    import json
-    import os
-
-    out: set[str] = set()
-    if not os.path.isdir(ledger):
-        return out
-    for entry in os.listdir(ledger):
-        if not entry.startswith("batch-") or entry.endswith("._tmp"):
-            continue
-        pid = entry[len("batch-") :]
-        out.add(pid)
-        if pid.startswith("compact-"):
-            with open(os.path.join(ledger, entry)) as fh:
-                out |= set(json.load(fh).get("replaces", []))
-    return out
-
-
 def read_curation_stats(spark, store_dir: str, family: str) -> DataFrame:
     """Merged stats family (``mixture`` | ``domains`` | ``drift``) of
     the composed curation store, restricted to batches committed in
@@ -650,39 +527,34 @@ def read_curation_stats(spark, store_dir: str, family: str) -> DataFrame:
     (``pipeline.read_drift_counts`` etc.) consult only the stats
     ledger and over-count inside that window until the next writer
     start heals the orphan; THIS reader intersects with the main
-    ledger's ever-committed set (:func:`_ever_main_committed`), so a
+    ledger's ever-committed set (:func:`streaming.ledger.ever_committed`,
+    shared with the writer's heal), so a
     live report taken mid-crash matches the kept corpus exactly.
     Stats-compaction tokens pass through unconditionally: compaction
     is a maintenance op with no concurrent writer, so every batch a
     compact partition merged was already main-committed."""
-    import os
-
     from streamprocessing_kafka_finlight_news_dashboard_spark.streaming.pipeline import (
-        _STATS_SCHEMAS,
-        _check_drift_bucketing_version,
-        _committed_stats_batches,
-        _merge_stats_family,
+        STATS_SCHEMAS,
+        check_drift_bucketing_version,
+        merge_stats_family,
     )
 
     store = store_dir.rstrip("/")
     stats_dir = f"{store}/stats"
     if family in ("drift", "drift_trend"):
-        _check_drift_bucketing_version(stats_dir, writing=False)
-    committed = _committed_stats_batches(stats_dir)
-    ever_main = _ever_main_committed(f"{store}/_ledger")
+        check_drift_bucketing_version(stats_dir, writing=False)
+    ever_main = L.ever_committed(store)
     keep = [
-        b for b in committed if b.startswith("compact-") or b in ever_main
+        b
+        for b in L.committed_batches(stats_dir)
+        if L.is_compaction(b) or b in ever_main
     ]
-    root = os.path.join(stats_dir, family)
-    has_parts = os.path.isdir(root) and any(
-        e.startswith("batch_id=") for e in os.listdir(root)
+    return merge_stats_family(
+        family,
+        L.read_committed(
+            spark, f"{stats_dir}/{family}", keep, STATS_SCHEMAS[family]
+        ),
     )
-    if not keep or not has_parts:
-        return spark.createDataFrame([], _STATS_SCHEMAS[family])
-    df = spark.read.parquet(root).filter(
-        F.col("batch_id").cast("string").isin(keep)
-    )
-    return _merge_stats_family(family, df.drop("batch_id"))
 
 
 def read_curation_funnel(spark, store_dir: str) -> DataFrame:

@@ -28,12 +28,15 @@ watermark caps per-key retention. Checkpoint dirs are per-query.
 
 from __future__ import annotations
 
+import functools
 import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from streamprocessing_kafka_finlight_news_dashboard_spark.streaming import ledger as L
 
 # Explicit schema — never infer on a stream (SURVEY §1.3: the new
 # engine uses explicit StructType everywhere). ``ts`` arrives as
@@ -453,7 +456,6 @@ def write_stream_append_exactly_once(
     stream_df: DataFrame,
     table_dir: str,
     checkpoint_dir: str,
-    ledger_dir: str | None = None,
 ):
     """Exactly-once APPEND sink via a committed-batch ledger (T5's
     upgrade for sinks where replaying is NOT a no-op).
@@ -461,32 +463,20 @@ def write_stream_append_exactly_once(
     The upsert sink is idempotent because keep-last is deterministic;
     a plain append is not — a micro-batch replayed after a crash (or a
     checkpoint rebuild over the same input) would double its rows.
-    Standard bridge: foreachBatch consults a ledger of committed batch
-    ids keyed by the DETERMINISTIC (checkpoint-scoped) batchId Spark
-    passes in; a replayed id is skipped, and the ledger marker is
-    written AFTER the append via atomic rename, so a crash between
-    append and commit re-appends into a fresh subdirectory that
-    replaces the uncommitted one (per-batch output dir = the unit of
-    atomicity — the same idea lakehouse commit protocols implement
-    with manifest files).
+    Each micro-batch lands in its own partition of ``<table>``
+    (overwrite) and commits a marker in the sibling ``<table>._ledger``;
+    a batch id with a marker is skipped. Ids are NOT generation-
+    qualified, so a re-ingest under a fresh checkpoint is skipped too.
+    Format and crash matrix: :mod:`streaming.ledger`.
     """
-    import os
-
-    ledger = (ledger_dir or table_dir.rstrip("/") + "._ledger").rstrip("/")
+    table = table_dir.rstrip("/")
+    ledger = table + "._ledger"
 
     def append_batch(batch_df: DataFrame, batch_id: int) -> None:
-        os.makedirs(ledger, exist_ok=True)
-        marker = os.path.join(ledger, f"batch-{batch_id}")
-        if os.path.exists(marker):
+        if L.is_committed(ledger, batch_id):
             return  # replayed batch — already committed
-        out = os.path.join(table_dir.rstrip("/"), f"batch_id={batch_id}")
-        # overwrite: an uncommitted partial dir from a crashed attempt
-        # is replaced wholesale, never appended to twice
-        batch_df.write.mode("overwrite").parquet(out)
-        tmp = marker + "._tmp"
-        with open(tmp, "w") as fh:
-            fh.write("committed")
-        os.rename(tmp, marker)  # atomic on POSIX — the commit point
+        batch_df.write.mode("overwrite").parquet(L.partition_path(table, batch_id))
+        L.commit(ledger, batch_id)
 
     return (
         stream_df.writeStream.foreachBatch(append_batch)
@@ -743,10 +733,9 @@ def write_stream_semantic_verdicts(
     to SURVIVE the stream so re-ingest, audits, and shard writers all
     read one stable manifest). Parallel to the near-dup canonical
     store (:func:`write_stream_dedup_canonical`): per micro-batch the
-    gate's verdict columns land in a generation-qualified
-    ``verdicts/batch_id=<gen>-<N>`` partition written with overwrite,
-    a committed-batch ledger marker makes same-checkpoint replays
-    no-ops, and heal-on-start deletes uncommitted crash leftovers.
+    gate's verdict columns land in one ``verdicts`` partition of the
+    committed-batch ledger (format and crash matrix:
+    :mod:`streaming.ledger`).
 
     What's stored is verdict-sized, never vector-sized: (id,
     nearest_eval_id, max_eval_sim, contaminated) — four scalars per
@@ -769,18 +758,14 @@ def write_stream_semantic_verdicts(
     collapses them — the drop list is stable across re-ingests.
     """
     import hashlib
-    import os
-    import shutil
 
     import numpy as np
 
     gated = semantic_gate_stream(
         vec_stream, eval_vecs, threshold=threshold, id_col=id_col, vec_col=vec_col
     )
-    verdicts_path = store_dir.rstrip("/") + "/verdicts"
-    ledger = store_dir.rstrip("/") + "/_ledger"
-    meta = store_dir.rstrip("/") + "/_meta"
-    gen = hashlib.md5(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:8]
+    store = store_dir.rstrip("/")
+    fp_file = store + "/_meta/evalfp"
 
     # Eval-set fingerprint: the benchmark is MBs by contract, so one
     # extra bounded collect (sorted for order-independence) is cheap.
@@ -797,18 +782,9 @@ def write_stream_semantic_verdicts(
     h.update(np.array([r.evec for r in erows], dtype=np.float64).tobytes())
     h.update(repr(float(threshold)).encode())
     evalfp = h.hexdigest()
-    healed = []
 
     def heal() -> None:
-        # same single-writer assumption as the canonical dedup store
-        if os.path.isdir(verdicts_path):
-            for entry in os.listdir(verdicts_path):
-                if not entry.startswith("batch_id="):
-                    continue
-                part = entry.split("=", 1)[1]
-                if not os.path.exists(os.path.join(ledger, f"batch-{part}")):
-                    shutil.rmtree(os.path.join(verdicts_path, entry))
-        fp_file = os.path.join(meta, "evalfp")
+        L.heal(store, ("verdicts",))
         if os.path.exists(fp_file):
             with open(fp_file) as fh:
                 stored = fh.read().strip()
@@ -822,21 +798,10 @@ def write_stream_semantic_verdicts(
                     "store for a new eval set."
                 )
         else:
-            os.makedirs(meta, exist_ok=True)
-            tmp = fp_file + "._tmp"
-            with open(tmp, "w") as fh:
-                fh.write(evalfp)
-            os.rename(tmp, fp_file)
+            os.makedirs(os.path.dirname(fp_file), exist_ok=True)
+            L.atomic_write(fp_file, evalfp)
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        os.makedirs(ledger, exist_ok=True)
-        if not healed:
-            heal()
-            healed.append(True)
-        part_val = f"{gen}-{batch_id}"
-        marker = os.path.join(ledger, f"batch-{part_val}")
-        if os.path.exists(marker):
-            return
+    def write(batch_df: DataFrame, part: str) -> bool:
         # Write unconditionally: a take(1) emptiness probe would
         # re-trigger the mapInPandas BLAS scoring for part of the
         # micro-batch a second time on every non-empty batch (r10
@@ -850,19 +815,11 @@ def write_stream_semantic_verdicts(
         batch_df.select(
             id_col, "nearest_eval_id", "max_eval_sim", "contaminated"
         ).repartition(1).write.mode("overwrite").parquet(
-            f"{verdicts_path}/batch_id={part_val}"
+            L.partition_path(store + "/verdicts", part)
         )
-        tmp = marker + "._tmp"
-        with open(tmp, "w") as fh:
-            fh.write("committed")
-        os.rename(tmp, marker)
+        return True
 
-    return (
-        gated.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return L.start_writer(gated, store, checkpoint_dir, heal, write)
 
 
 def read_semantic_verdicts(
@@ -882,22 +839,14 @@ def read_semantic_verdicts(
     manifest (compact_semantic_verdict_store) — though the distinct()
     collapse would make a mid-cleanup double-read value-identical
     anyway, manifest exclusion keeps the scan off dying partitions."""
-    import os
-
-    committed = _committed_stats_batches(store_dir)
-    root = store_dir.rstrip("/") + "/verdicts"
-    has_parts = os.path.isdir(root) and any(
-        e.startswith("batch_id=") for e in os.listdir(root)
-    )
-    if not committed or not has_parts:
-        return spark.createDataFrame(
-            [],
+    return (
+        L.read_committed(
+            spark,
+            store_dir.rstrip("/") + "/verdicts",
+            L.committed_batches(store_dir),
             f"{id_col} long, nearest_eval_id long, "
             "max_eval_sim double, contaminated boolean",
         )
-    return (
-        spark.read.parquet(root)
-        .filter(F.col("batch_id").cast("string").isin(committed))
         .select(id_col, "nearest_eval_id", "max_eval_sim", "contaminated")
         .distinct()
     )
@@ -923,23 +872,18 @@ def merge_canonical_docs(
     2. drop batch docs colliding with the EXISTING store in any LSH
        band — stored bands are checked with one equi join, never by
        re-hashing stored text;
-    3. OVERWRITE the batch's ``batch_id=<part_val>`` partitions
-       (a replay of a crashed attempt replaces its partial files).
+    3. OVERWRITE the batch's ``part_val`` partitions (a replay of a
+       crashed attempt replaces its partial files).
 
     Degenerate band keys are capped on the STORE side (keys whose
     stored bucket exceeds ``max_bucket`` are excluded from the
     collision join — the batch twin's HAVING cap). The store read
-    excludes THIS attempt's own partition (crash safety: a replay
-    after a bands-write crash must not self-collide and drop its own
-    documents) and casts the partition column to string (legacy
-    numeric ``batch_id=N`` stores infer int, and ``int != '<gen>-<N>'``
-    coerces to NULL — silently emptying the stored bands)."""
-    import os
-
+    (:func:`streaming.ledger.read_others`) excludes THIS attempt's own
+    partition: a replay after a bands-write crash must not self-collide
+    and drop its own documents."""
     from streamprocessing_kafka_finlight_news_dashboard_spark.operators import dedup as DD
     from streamprocessing_kafka_finlight_news_dashboard_spark.operators.arrow_docs import minhash_signatures_arrow
 
-    spark = batch_df.sparkSession
     pairs = DD.minhash_lsh_candidates_portable(
         batch_df, num_hashes=num_hashes, bands=bands
     ).select("id_a", "id_b")
@@ -968,18 +912,9 @@ def merge_canonical_docs(
             )
         ).alias("band", "bkey"),
     )
-    # The heal step may leave bands_path as an EMPTY directory (every
-    # partition was an uncommitted orphan) — reading it would fail
-    # schema inference, so gate on actual partitions.
-    has_store = os.path.isdir(bands_path) and any(
-        e.startswith("batch_id=") for e in os.listdir(bands_path)
-    )
-    if has_store:
-        stored = (
-            spark.read.parquet(bands_path)
-            .filter(F.col("batch_id").cast("string") != F.lit(part_val))
-            .select("band", F.col("bkey").alias("sbkey"))
-        )
+    stored = L.read_others(batch_df.sparkSession, bands_path, part_val)
+    if stored is not None:
+        stored = stored.select("band", F.col("bkey").alias("sbkey"))
         store_keys = (
             stored.groupBy("band", "sbkey")
             .count()
@@ -997,10 +932,10 @@ def merge_canonical_docs(
         )
         canon = canon.join(dup_ids, canon.doc_id == dup_ids.id, "left_anti")
         new_bands = new_bands.join(dup_ids, "id", "left_anti")
-    canon.write.mode("overwrite").parquet(f"{docs_path}/batch_id={part_val}")
+    canon.write.mode("overwrite").parquet(L.partition_path(docs_path, part_val))
     new_bands.select(F.col("id").alias("doc_id"), "band", "bkey").write.mode(
         "overwrite"
-    ).parquet(f"{bands_path}/batch_id={part_val}")
+    ).parquet(L.partition_path(bands_path, part_val))
 
 
 def write_stream_dedup_canonical(
@@ -1030,21 +965,13 @@ def write_stream_dedup_canonical(
     Keep-first semantics across batches (a near-dup of an already-
     stored doc is dropped; the stored one stays canonical) — the
     streaming analog of the batch pipeline's min-id-per-cluster rule
-    whenever ingest order follows doc_id. A committed-batch marker
-    makes replays no-ops (same ledger idea as
-    write_stream_append_exactly_once); docs and bands land in
-    per-batch ``batch_id=<gen>-<N>`` partition directories written
-    with overwrite, so a replay of a batch that crashed mid-write
-    REPLACES its partial output instead of re-appending it (a flat
-    append-mode store permanently duplicated docs when the crash fell
-    between the docs and bands writes). ``gen`` derives from the
-    checkpoint path: micro-batch ids restart at 0 under a fresh
-    checkpoint, so without the qualifier a prior generation's
-    ``batch-0`` marker would silently swallow the new generation's
-    first batch, and the crashed-attempt band exclusion could hide a
-    COMMITTED older partition. Uncommitted (gen, batch) partitions —
-    crash leftovers of any generation — are healed (deleted) at the
-    first batch of each run; same-generation replays rebuild theirs.
+    whenever ingest order follows doc_id. Docs and bands are two
+    families of one committed-batch ledger (format, crash matrix and
+    single-writer assumption: :mod:`streaming.ledger`), so a replay of
+    a batch that crashed between the two writes REPLACES its partial
+    output instead of re-appending it. This store's consumers scan
+    ``docs/`` raw; that is safe because heal runs before the first
+    batch and the writer is the only one.
 
     Degenerate band keys (many short/similar docs hashing to one
     bucket) are capped on the STORE side: keys whose stored bucket
@@ -1052,98 +979,37 @@ def write_stream_dedup_canonical(
     same mega-bucket cap the batch twin applies (HAVING count <=
     1000), keeping the join linear and the drop semantics aligned.
     """
-    import os
+    store = store_dir.rstrip("/")
+    docs_path, bands_path = store + "/docs", store + "/bands"
 
-    from streamprocessing_kafka_finlight_news_dashboard_spark.operators import dedup as DD
-
-    import hashlib
-    import shutil
-
-    docs_path = store_dir.rstrip("/") + "/docs"
-    bands_path = store_dir.rstrip("/") + "/bands"
-    ledger = store_dir.rstrip("/") + "/_ledger"
-    # GENERATION id: stable across restarts of the same checkpoint
-    # (so replays still no-op on their marker) but distinct per
-    # checkpoint — micro-batch ids restart at 0 under a fresh
-    # checkpoint, and an unqualified `batch-0` marker from a previous
-    # generation would silently swallow the new generation's first
-    # batch. Partition values carry the generation too, so the
-    # crashed-attempt exclusion below never hides a COMMITTED
-    # partition from an earlier generation.
-    gen = hashlib.md5(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:8]
-    healed = []
-
-    def heal() -> None:
-        """Drop store partitions whose (gen, batch) never committed —
-        leftovers of crashed attempts from ANY generation. A same-
-        generation replay recreates its partition; a dead generation's
-        orphan would otherwise sit in the collision read forever.
-
-        SINGLE-WRITER ASSUMPTION: exactly one streaming query writes a
-        given store at a time. Healing deletes ANY uncommitted
-        partition, so a second concurrent query (different checkpoint
-        → different generation) sharing this store could have its
-        in-flight partition deleted before its marker commits, leaving
-        a committed marker with no data. Run writers sequentially or
-        give each its own store."""
-        # finish any interrupted compaction FIRST: this store's readers
-        # scan docs/ raw (no ledger filter), so a compact partition
-        # must never coexist with the batches it replaced once a
-        # writer (or compactor) has run heal
-        _heal_compaction(store_dir, ("docs", "bands"))
-        for root in (docs_path, bands_path):
-            if not os.path.isdir(root):
-                continue
-            for entry in os.listdir(root):
-                if not entry.startswith("batch_id="):
-                    continue
-                part = entry.split("=", 1)[1]
-                if not os.path.exists(os.path.join(ledger, f"batch-{part}")):
-                    shutil.rmtree(os.path.join(root, entry))
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        os.makedirs(ledger, exist_ok=True)
-        if not healed:
-            heal()
-            healed.append(True)
-        part_val = f"{gen}-{batch_id}"
-        marker = os.path.join(ledger, f"batch-{part_val}")
-        if os.path.exists(marker):
-            return
+    def write(batch_df: DataFrame, part: str) -> bool:
         # Persist for the whole merge: the emptiness probe, the LSH
         # candidate pass, the signature pass and the two writes all
         # consume batch_df — without the persist each re-triggers the
         # micro-batch source read (round-11 verdict nit).
         batch_df = batch_df.persist()
         try:
-            _merge_canonical_batch(batch_df, part_val)
+            if not len(batch_df.take(1)):
+                return False
+            merge_canonical_docs(
+                batch_df,
+                docs_path,
+                bands_path,
+                part,
+                num_hashes=num_hashes,
+                bands=bands,
+                max_bucket=max_bucket,
+            )
+            return True
         finally:
             batch_df.unpersist()
 
-    def _merge_canonical_batch(batch_df: DataFrame, part_val: str) -> None:
-        marker = os.path.join(ledger, f"batch-{part_val}")
-        if not len(batch_df.take(1)):
-            return
-        merge_canonical_docs(
-            batch_df,
-            docs_path,
-            bands_path,
-            part_val,
-            num_hashes=num_hashes,
-            bands=bands,
-            max_bucket=max_bucket,
-        )
-        tmp = marker + "._tmp"
-        with open(tmp, "w") as fh:
-            fh.write("committed")
-        os.rename(tmp, marker)
-
-    return (
-        docs_stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return L.start_writer(
+        docs_stream,
+        store,
+        checkpoint_dir,
+        lambda: L.heal(store, ("docs", "bands")),
+        write,
     )
 
 
@@ -1203,21 +1069,14 @@ def write_stream_text_stats(
     bm25_scores_from_stats) returns bit-identical values to the batch
     operators — pinned by the drain-equivalence tests.
 
-    Crash/replay discipline is the canonical dedup store's
-    (write_stream_dedup_canonical): generation-qualified per-batch
-    partition dirs written with overwrite, a committed-batch ledger
-    marker making same-checkpoint replays no-ops, and heal-on-start
-    deleting uncommitted crash leftovers. COUNTING CAVEATS, stated:
+    All families share one committed-batch ledger (format and crash
+    matrix: :mod:`streaming.ledger`). COUNTING CAVEATS, stated:
     (1) df/N merging assumes batches carry disjoint documents — run
     this store BEHIND the exact-dedup gate (curation_gate_stream), as
     re-sent docs would double-count; (2) re-ingesting the same data
     under a FRESH checkpoint is re-ingest, not replay, and
     double-counts by design (the ledger is keyed by generation —
     same trade the append-exactly-once sink documents)."""
-    import hashlib
-    import os
-    import shutil
-
     from streamprocessing_kafka_finlight_news_dashboard_spark.operators import text as X
 
     sub_dirs = []
@@ -1256,9 +1115,6 @@ def write_stream_text_stats(
             "need dsir_target, query_terms, track_mixture, track_domains "
             "and/or drift_edges"
         )
-    ledger = store_dir.rstrip("/") + "/_ledger"
-    gen = hashlib.md5(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:8]
-    healed = []
 
     def heal() -> None:
         if "drift" in sub_dirs:
@@ -1266,17 +1122,13 @@ def write_stream_text_stats(
             # partial lands (r14 advice): a store carrying partials
             # binned under a different _bucket_col generation must be
             # refused, never silently merged
-            _check_drift_bucketing_version(store_dir, writing=True)
-        for sub in sub_dirs:
-            root = os.path.join(store_dir, sub)
-            if not os.path.isdir(root):
-                continue
-            for entry in os.listdir(root):
-                if not entry.startswith("batch_id="):
-                    continue
-                part = entry.split("=", 1)[1]
-                if not os.path.exists(os.path.join(ledger, f"batch-{part}")):
-                    shutil.rmtree(os.path.join(root, entry))
+            check_drift_bucketing_version(store_dir, writing=True)
+        L.heal(store_dir, STATS_SCHEMAS)
+        # After heal every partition is committed.
+        covered = {
+            sub: set(L.partitions(os.path.join(store_dir, sub)))
+            for sub in STATS_SCHEMAS
+        }
         # A family enabled AFTER the store already committed batches
         # would silently miss those documents forever (the ledger
         # marker early-return skips replays, and Spark never re-feeds
@@ -1291,24 +1143,9 @@ def write_stream_text_stats(
         # marker, and compaction writes every family present, so a gap
         # can only mean the family was enabled after that batch
         # committed (same generation or a carried-over store).
-        committed_ids = [
-            e[len("batch-"):]
-            for e in (os.listdir(ledger) if os.path.isdir(ledger) else [])
-            if e.startswith("batch-")
-        ]
-        covered: dict[str, set] = {}
-        for sub in _STATS_SCHEMAS:
-            root = os.path.join(store_dir, sub)
-            covered[sub] = (
-                {e.split("=", 1)[1] for e in os.listdir(root)}
-                if os.path.isdir(root)
-                else set()
-            )
         any_family = set().union(*covered.values())
         for sub in sub_dirs:
-            missing = sorted(
-                p for p in committed_ids if p in any_family and p not in covered[sub]
-            )
+            missing = sorted(any_family - covered[sub])
             if missing:
                 raise ValueError(
                     f"write_stream_text_stats: family '{sub}' has no "
@@ -1328,22 +1165,8 @@ def write_stream_text_stats(
         # ingested' contract. Refuse whenever the store holds committed
         # partials for a family this writer no longer tracks (same-gen
         # disable AND fresh-checkpoint re-ingest both covered).
-        all_committed = {
-            e[len("batch-"):]
-            for e in (os.listdir(ledger) if os.path.isdir(ledger) else [])
-            if e.startswith("batch-")
-        }
-        for sub in set(_STATS_SCHEMAS) - set(sub_dirs):
-            root = os.path.join(store_dir, sub)
-            if not os.path.isdir(root):
-                continue
-            frozen = sorted(
-                p
-                for e in os.listdir(root)
-                if e.startswith("batch_id=")
-                for p in [e.split("=", 1)[1]]
-                if p in all_committed
-            )
+        for sub in set(STATS_SCHEMAS) - set(sub_dirs):
+            frozen = sorted(covered[sub])
             if frozen:
                 raise ValueError(
                     f"write_stream_text_stats: family '{sub}' holds "
@@ -1355,15 +1178,7 @@ def write_stream_text_stats(
                     "a fresh store."
                 )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        os.makedirs(ledger, exist_ok=True)
-        if not healed:
-            heal()
-            healed.append(True)
-        part_val = f"{gen}-{batch_id}"
-        marker = os.path.join(ledger, f"batch-{part_val}")
-        if os.path.exists(marker):
-            return
+    def write(batch_df: DataFrame, part: str) -> bool:
         # Persist for the merge duration: the emptiness probe plus up
         # to FOUR family partials (dsir, bm25_df, bm25_corpus,
         # mixture/domains) each run their own action — without this
@@ -1372,7 +1187,7 @@ def write_stream_text_stats(
         batch = batch_df.persist()
         try:
             if not len(batch.take(1)):
-                return
+                return False
             partials = {}
             if dsir_target is not None:
                 partials["dsir"] = X.dsir_bucket_counts(
@@ -1409,33 +1224,24 @@ def write_stream_text_stats(
                     )
             for sub, frame in partials.items():
                 frame.coalesce(1).write.mode("overwrite").parquet(
-                    os.path.join(store_dir, sub, f"batch_id={part_val}")
+                    L.partition_path(os.path.join(store_dir, sub), part)
                 )
-            tmp = marker + "._tmp"
-            with open(tmp, "w") as fh:
-                fh.write("committed")
-            os.rename(tmp, marker)
+            return True
         finally:
             batch.unpersist()
 
-    return (
-        docs_stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return L.start_writer(docs_stream, store_dir, checkpoint_dir, heal, write)
 
 
 #: stored-partial schemas per stats family — also what the readers
 #: return EMPTY when a store has no committed partitions yet (a drain
-#: of all-empty batches never creates the family dir, and heal() can
+#: of all-empty batches never creates the family dir, and heal can
 #: delete every partition of one: reading the path would then fail
-#: schema inference — the same missing-store case the canonical
-#: store's has_store gate guards). MUST mirror the producers'
+#: schema inference). MUST mirror the producers'
 #: output columns (operators.text.dsir_bucket_counts /
 #: bm25_corpus_stats) — pinned by the empty-store reader test, which
 #: compares these column sets against the producers'.
-_STATS_SCHEMAS = {
+STATS_SCHEMAS = {
     "dsir": "bucket long, q_cnt long, p_cnt long",
     "bm25_df": "tok string, dft long",
     "bm25_corpus": "n_docs long, sum_dl long",
@@ -1450,79 +1256,11 @@ _STATS_SCHEMAS = {
 }
 
 
-def _committed_stats_batches(store_dir: str) -> list[str]:
-    """Ledger walk shared by the readers and the compactor: committed
-    batch ids, with batches REPLACED by a committed compaction marker
-    excluded logically (the compaction finisher deletes them physically,
-    but a crash between the compact marker landing and the old markers
-    being removed must never double-count — the manifest inside the
-    compact marker is the source of truth for that window)."""
-    import json
-    import os
-
-    ledger = store_dir.rstrip("/") + "/_ledger"
-    entries = os.listdir(ledger) if os.path.isdir(ledger) else []
-    committed = {e[len("batch-"):] for e in entries if e.startswith("batch-")}
-    for part in list(committed):
-        if not part.startswith("compact-"):
-            continue
-        try:
-            with open(os.path.join(ledger, f"batch-{part}")) as fh:
-                manifest = json.load(fh)
-        except (OSError, ValueError) as exc:  # pragma: no cover - disk corruption
-            # LOUD FAIL (round-11 advice): silently skipping the
-            # exclusion would count BOTH the compact partition and the
-            # batches it replaced as committed — a confidently-wrong
-            # double-count. The tmp+rename commit makes an unreadable
-            # manifest disk-corruption-only, which is exactly when the
-            # store must refuse to answer rather than answer wrong.
-            raise RuntimeError(
-                f"corrupt compaction manifest {ledger}/batch-{part}: "
-                f"refusing to merge (replaced batches would double-count)"
-            ) from exc
-        committed -= set(manifest.get("replaces", []))
-    return sorted(committed)
-
-
-def _committed_stats_partials(spark, store_dir: str, sub: str) -> DataFrame:
-    """Read one stats family's partial frames, restricted to COMMITTED
-    batches (ledger-marked) — an unhealed crash leftover must never
-    leak into the merged statistics. The filter is on the partition
-    column, so exclusion is metadata-only; cast to string for the same
-    legacy-type-inference reason the canonical store documents. A
-    store with no committed partitions (missing or heal-emptied family
-    dir) reads as an EMPTY typed frame, not an AnalysisException.
-    COMPOSED-STORE CAVEAT: this consults only the stats store's OWN
-    ledger; the composed curation store commits its stats marker just
-    before its main marker, so a crash between the two leaves a stats
-    batch here whose main families never committed (over-count until
-    the next writer start heals it) — use
-    ``streaming.curation.read_curation_stats`` there, which intersects
-    with the main ledger.
-    Compaction-replaced batches are excluded via the ledger manifest
-    (see _committed_stats_batches) so a crash mid-compaction can never
-    double-count. SINGLE-WRITER CAVEAT (same as the canonical store's
-    heal): a read racing a RESTARTING writer's heal() can still see a
-    partition listed and then deleted before the scan runs — reads are
-    safe once the writer's first batch has started, not mid-heal."""
-    import os
-
-    committed = _committed_stats_batches(store_dir)
-    root = os.path.join(store_dir, sub)
-    has_parts = os.path.isdir(root) and any(
-        e.startswith("batch_id=") for e in os.listdir(root)
-    )
-    if not committed or not has_parts:
-        return spark.createDataFrame([], _STATS_SCHEMAS[sub])
-    df = spark.read.parquet(root)
-    return df.filter(F.col("batch_id").cast("string").isin(committed))
-
-
-#: merge aggregations per stats family — the SAME exact-integer sums
-#: the readers apply, expressed once so compaction and reads can never
-#: diverge. Each maps a partial-schema frame back to partial schema
-#: (the schemas are closed under merging).
-def _merge_stats_family(sub: str, df: DataFrame) -> DataFrame:
+def merge_stats_family(sub: str, df: DataFrame) -> DataFrame:
+    """The exact-integer merge of one stats family's partials — what
+    every reader returns and what compaction writes, expressed once so
+    the two can never diverge. Maps a partial-schema frame back to
+    partial schema (the schemas are closed under merging)."""
     if sub == "dsir":
         return df.groupBy("bucket").agg(
             F.sum("q_cnt").alias("q_cnt"), F.sum("p_cnt").alias("p_cnt")
@@ -1554,56 +1292,45 @@ def _merge_stats_family(sub: str, df: DataFrame) -> DataFrame:
     raise ValueError(f"unknown stats family {sub!r}")
 
 
+def _read_stats(spark, store_dir: str, sub: str) -> DataFrame:
+    """One stats family merged over the store's COMMITTED batches — an
+    unhealed crash leftover or a compaction-replaced batch never leaks
+    in. COMPOSED-STORE CAVEAT: this consults only the stats store's OWN
+    ledger; the composed curation store commits its stats marker just
+    before its main marker, so a crash between the two leaves a stats
+    batch here whose main families never committed (over-count until
+    the next writer start heals it) — use
+    ``streaming.curation.read_curation_stats`` there, which intersects
+    with the main ledger."""
+    return merge_stats_family(
+        sub,
+        L.read_committed(
+            spark,
+            os.path.join(store_dir, sub),
+            L.committed_batches(store_dir),
+            STATS_SCHEMAS[sub],
+        ),
+    )
+
+
 def compact_stats_store(
     spark, store_dir: str, _crash_after_marker: bool = False
 ) -> int:
     """Compact a text-stats store's committed per-batch partials into
     ONE ledgered partition per family — after 10⁴ micro-batches the
     readers would otherwise merge 10⁴ parquet partitions per family on
-    every call. Returns the number of batch partitions replaced (0 =
-    nothing to do).
-
-    Reuses the store's gen/ledger discipline, extended with a
-    REPLACES MANIFEST for marker-atomic compaction (single writer, no
-    concurrent ingest — same assumption as the writer's heal):
-
-    1. finish any interrupted prior compaction (see below), then drop
-       uncommitted ``compact-*`` partition leftovers;
-    2. aggregate each family's committed partials with the EXACT
-       integer merges the readers use (partial schemas are closed
-       under merging) and write them to
-       ``batch_id=compact-<md5 of the replaced id set>`` — overwrite
-       mode, so a crash-and-retry replaces its own partial files;
-    3. commit a ``batch-compact-…`` ledger marker whose body is a JSON
-       manifest listing every replaced batch id — from this instant
-       readers logically exclude the replaced batches
-       (_committed_stats_batches), so the physical cleanup below can
-       crash anywhere without double-counting;
-    4. finish: per replaced id, remove its MARKER first, then its
-       partition dirs. Marker-first means a crash can only leave
-       marker-less dirs, which every heal (the writer's and step 1)
-       already deletes; the reverse order would leave a committed
-       marker with no partials and spuriously trip the writer's
-       late-enabled-family refusal.
-
-    Crash matrix: before step 3's rename → uncommitted compact dirs,
-    dropped by step 1 (store unchanged); after step 3 → readers are
-    already exact via the manifest, and the next compact call (or this
-    one's step 4) completes the physical cleanup. Compacted output is
-    itself a committed batch, so iterative compaction chains naturally
-    (the next compaction folds the previous compact partition in).
-    Writer interop: compact markers are not generation-qualified, so
-    the writer's per-generation late-enabled check skips them, while
-    its disabled-family check still (correctly) refuses a store whose
-    compacted partials cover a family the writer no longer tracks."""
-    families = {
-        sub: (lambda s: lambda df: _merge_stats_family(s, df))(sub)
-        for sub in _STATS_SCHEMAS
-    }
-    return _compact_ledgered_store(
+    every call. Each family merges with :func:`merge_stats_family`,
+    the readers' own exact sums, and is coalesced to one file. Returns
+    the number of batch partitions replaced (0 = nothing to do).
+    Protocol and crash matrix: :func:`streaming.ledger.compact`. The
+    writer's late-enabled-family check is coverage-based, so it still
+    fires on a compacted store, and its disabled-family check still
+    refuses a store whose compacted partials cover a family the writer
+    no longer tracks."""
+    return L.compact(
         spark,
         store_dir,
-        families,
+        {sub: functools.partial(merge_stats_family, sub) for sub in STATS_SCHEMAS},
         coalesce_one=True,
         _crash_after_marker=_crash_after_marker,
     )
@@ -1613,19 +1340,17 @@ def compact_semantic_verdict_store(
     spark, store_dir: str, _crash_after_marker: bool = False
 ) -> int:
     """Compact a semantic-verdict store's committed per-batch verdict
-    partitions into one ledgered partition — same replaces-manifest
-    protocol as :func:`compact_stats_store` (see its docstring for the
-    crash matrix). The merge is ``distinct()`` over the verdict
-    columns: the writer pins the eval-set fingerprint, so a vector
-    re-ingested across generations produced bit-identical rows and
-    distinct IS the reader's merge semantics. Verdict partitions are
-    document-sized (unlike the model-sized stats partials), so the
-    compacted partition is written at natural parallelism — no
-    coalesce(1)."""
-    return _compact_ledgered_store(
+    partitions into one ledgered partition (protocol:
+    :func:`streaming.ledger.compact`). The merge is ``distinct()``:
+    the writer pins the eval-set fingerprint, so a vector re-ingested
+    across generations produced bit-identical rows and distinct IS the
+    reader's merge semantics. Verdict partitions are document-sized
+    (unlike the model-sized stats partials), so the compacted
+    partition is written at natural parallelism — no coalesce(1)."""
+    return L.compact(
         spark,
         store_dir,
-        {"verdicts": lambda df: df.drop("batch_id").distinct()},
+        {"verdicts": lambda df: df.distinct()},
         coalesce_one=False,
         _crash_after_marker=_crash_after_marker,
     )
@@ -1635,12 +1360,12 @@ def compact_canonical_store(
     spark, store_dir: str, _crash_after_marker: bool = False
 ) -> int:
     """Compact a canonical-dedup store's committed per-batch docs and
-    bands partitions into one ledgered partition each — same
-    replaces-manifest protocol as :func:`compact_stats_store`. The
-    merge is a plain pass-through union: the writer's collision join
-    guarantees batches carry DISJOINT canonical docs (and their
-    bands), so concatenation is exact. Both families are document-
-    sized, so compacted partitions write at natural parallelism.
+    bands partitions into one ledgered partition each (protocol:
+    :func:`streaming.ledger.compact`). The merge is a plain
+    pass-through union: the writer's collision join guarantees batches
+    carry DISJOINT canonical docs (and their bands), so concatenation
+    is exact. Both families are document-sized, so compacted
+    partitions write at natural parallelism.
 
     READ-SAFETY CAVEAT, stronger than the stats/verdict stores: this
     store's consumers scan ``docs/`` RAW (no ledger filter), so during
@@ -1651,162 +1376,29 @@ def compact_canonical_store(
     writers); a crash inside that window is healed by the next
     compact call OR the next writer start (the writer's heal finishes
     interrupted compactions before anything reads the store)."""
-    return _compact_ledgered_store(
+    return L.compact(
         spark,
         store_dir,
-        {
-            "docs": lambda df: df.drop("batch_id"),
-            "bands": lambda df: df.drop("batch_id"),
-        },
+        {"docs": lambda df: df, "bands": lambda df: df},
         coalesce_one=False,
         _crash_after_marker=_crash_after_marker,
     )
-
-
-def _finish_compaction(store_dir: str, part: str, families) -> None:
-    """Complete one committed compaction's physical cleanup: remove
-    each replaced batch's MARKER first, then its partition dirs
-    (marker-first so a crash can only leave marker-less dirs, which
-    every heal deletes — the reverse would leave committed markers
-    with no partials). Idempotent."""
-    import json
-    import os
-    import shutil
-
-    ledger = store_dir.rstrip("/") + "/_ledger"
-    marker = os.path.join(ledger, f"batch-{part}")
-    try:
-        with open(marker) as fh:
-            manifest = json.load(fh)
-    except (OSError, ValueError):  # pragma: no cover - corrupt marker
-        return
-    for old in manifest.get("replaces", []):
-        old_marker = os.path.join(ledger, f"batch-{old}")
-        if os.path.exists(old_marker):
-            os.remove(old_marker)
-        for sub in families:
-            d = os.path.join(store_dir, sub, f"batch_id={old}")
-            if os.path.isdir(d):
-                shutil.rmtree(d)
-
-
-def _heal_compaction(store_dir: str, families) -> None:
-    """Compaction heal, callable by both the compactors and the store
-    writers' own heal steps: finish any INTERRUPTED committed
-    compaction (so raw-scanning readers like the canonical store's
-    never see a compact partition coexisting with the batches it
-    replaced), then drop uncommitted ``compact-*`` partition
-    leftovers. Idempotent; single-writer assumption as everywhere."""
-    import os
-    import shutil
-
-    ledger = store_dir.rstrip("/") + "/_ledger"
-    if not os.path.isdir(ledger):
-        return
-    for e in os.listdir(ledger):
-        if e.startswith("batch-compact-"):
-            _finish_compaction(store_dir, e[len("batch-"):], families)
-    for sub in families:
-        root = os.path.join(store_dir, sub)
-        if not os.path.isdir(root):
-            continue
-        for e in os.listdir(root):
-            if e.startswith("batch_id=compact-") and not os.path.exists(
-                os.path.join(ledger, f"batch-{e.split('=', 1)[1]}")
-            ):
-                shutil.rmtree(os.path.join(root, e))
-
-
-def _compact_ledgered_store(
-    spark,
-    store_dir: str,
-    families: dict,
-    coalesce_one: bool,
-    _crash_after_marker: bool = False,
-) -> int:
-    """Shared compaction core for the ledgered stores (stats families,
-    semantic verdicts, canonical dedup): merge committed per-batch
-    partitions of each family into ONE ``batch_id=compact-…``
-    partition, committed marker-atomically with a replaces manifest.
-    ``families`` maps each partitioned sub-dir to its merge function
-    (exact-sum aggregation for stats partials, distinct for pinned
-    verdict rows, plain pass-through for the disjoint-by-construction
-    canonical store)."""
-    import hashlib
-    import json
-    import os
-
-    ledger = store_dir.rstrip("/") + "/_ledger"
-    if not os.path.isdir(ledger):
-        return 0
-
-    # step 1: finish interrupted compactions, drop uncommitted leftovers
-    _heal_compaction(store_dir, families)
-
-    committed = _committed_stats_batches(store_dir)
-    if len(committed) <= 1:
-        return 0
-    token = "compact-" + hashlib.md5("|".join(committed).encode()).hexdigest()[:12]
-
-    # step 2: merged partitions per present family
-    wrote_any = False
-    for sub, merge_fn in families.items():
-        root = os.path.join(store_dir, sub)
-        if not os.path.isdir(root) or not any(
-            e.startswith("batch_id=") for e in os.listdir(root)
-        ):
-            continue
-        merged = merge_fn(
-            spark.read.parquet(root).filter(
-                F.col("batch_id").cast("string").isin(committed)
-            )
-        )
-        if coalesce_one:
-            merged = merged.coalesce(1)
-        merged.write.mode("overwrite").parquet(
-            os.path.join(root, f"batch_id={token}")
-        )
-        wrote_any = True
-    if not wrote_any:
-        return 0
-
-    # step 3: marker-atomic commit with the replaces manifest
-    marker = os.path.join(ledger, f"batch-{token}")
-    tmp = marker + "._tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"replaces": committed}, fh)
-    os.rename(tmp, marker)
-
-    # step 4: physical cleanup (safe to crash anywhere — see docstring)
-    if _crash_after_marker:  # test-only crash injection for the heal pytest
-        return len(committed)
-    _finish_compaction(store_dir, token, families)
-    return len(committed)
 
 
 def read_dsir_counts(spark, store_dir: str) -> DataFrame:
     """Merge the store's DSIR partials into (bucket, q_cnt, p_cnt) —
     exact integer sums, identical to a one-pass batch count over
     everything ingested."""
-    return (
-        _committed_stats_partials(spark, store_dir, "dsir")
-        .groupBy("bucket")
-        .agg(F.sum("q_cnt").alias("q_cnt"), F.sum("p_cnt").alias("p_cnt"))
-    )
+    return _read_stats(spark, store_dir, "dsir")
 
 
 def read_bm25_stats(spark, store_dir: str) -> tuple[DataFrame, DataFrame]:
     """Merge the store's BM25 partials into ((tok, dft), (n_docs,
     sum_dl)) — the two frames bm25_scores_from_stats consumes."""
-    dft = (
-        _committed_stats_partials(spark, store_dir, "bm25_df")
-        .groupBy("tok")
-        .agg(F.sum("dft").alias("dft"))
+    return (
+        _read_stats(spark, store_dir, "bm25_df"),
+        _read_stats(spark, store_dir, "bm25_corpus"),
     )
-    corpus = _committed_stats_partials(spark, store_dir, "bm25_corpus").agg(
-        F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl")
-    )
-    return dft, corpus
 
 
 def read_mixture_stats(spark, store_dir: str) -> DataFrame:
@@ -1815,14 +1407,7 @@ def read_mixture_stats(spark, store_dir: str) -> DataFrame:
     :func:`operators.text.mixture_stats_partial` pass over everything
     ingested; feed the result to ``temperature_rates`` (which fails
     loudly if this is empty) for ingest-time mixture rates."""
-    return (
-        _committed_stats_partials(spark, store_dir, "mixture")
-        .groupBy("lang")
-        .agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("n_tokens").alias("n_tokens"),
-        )
-    )
+    return _read_stats(spark, store_dir, "mixture")
 
 
 def read_domain_stats(spark, store_dir: str) -> DataFrame:
@@ -1830,14 +1415,10 @@ def read_domain_stats(spark, store_dir: str) -> DataFrame:
     integer sums, identical to one batch count over everything
     ingested; feed :func:`operators.url.domain_keep_rates` for
     epoch-frozen URL-plane quota rates."""
-    return (
-        _committed_stats_partials(spark, store_dir, "domains")
-        .groupBy("domain")
-        .agg(F.sum("n_docs").alias("n_docs"))
-    )
+    return _read_stats(spark, store_dir, "domains")
 
 
-def _check_drift_bucketing_version(store_dir: str, *, writing: bool) -> None:
+def check_drift_bucketing_version(store_dir: str, *, writing: bool) -> None:
     """Guard against mixed-generation drift partials (r14 advice).
 
     The drift/drift_trend families persist histograms binned by
@@ -1853,8 +1434,6 @@ def _check_drift_bucketing_version(store_dir: str, *, writing: bool) -> None:
     unknowable). Migration = re-ingest into a fresh store; the
     partials are cheap (≤ |features|×10 rows per batch) by design.
     """
-    import os
-
     from streamprocessing_kafka_finlight_news_dashboard_spark.operators.text import (
         DRIFT_BUCKETING_VERSION,
     )
@@ -1864,16 +1443,11 @@ def _check_drift_bucketing_version(store_dir: str, *, writing: bool) -> None:
     if os.path.exists(marker):
         with open(marker) as fh:
             stamped = int(fh.read().strip())
-    committed = set(_committed_stats_batches(store_dir))
-    has_partials = False
-    for sub in ("drift", "drift_trend"):
-        root = os.path.join(store_dir, sub)
-        if os.path.isdir(root) and any(
-            e.startswith("batch_id=") and e.split("=", 1)[1] in committed
-            for e in os.listdir(root)
-        ):
-            has_partials = True
-            break
+    committed = set(L.committed_batches(store_dir))
+    has_partials = any(
+        committed.intersection(L.partitions(os.path.join(store_dir, sub)))
+        for sub in ("drift", "drift_trend")
+    )
     if stamped is not None and stamped != DRIFT_BUCKETING_VERSION:
         raise RuntimeError(
             f"drift store {store_dir} was written under bucketing scheme "
@@ -1891,10 +1465,7 @@ def _check_drift_bucketing_version(store_dir: str, *, writing: bool) -> None:
         )
     if writing and stamped is None:
         os.makedirs(store_dir, exist_ok=True)
-        tmp = marker + "._tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(DRIFT_BUCKETING_VERSION))
-        os.rename(tmp, marker)
+        L.atomic_write(marker, str(DRIFT_BUCKETING_VERSION))
 
 
 def read_drift_counts(spark, store_dir: str) -> DataFrame:
@@ -1903,12 +1474,8 @@ def read_drift_counts(spark, store_dir: str) -> DataFrame:
     epoch's frozen edges; feed :func:`operators.text.psi_from_counts`
     against the frozen reference counts for the live PSI report
     (drain-parity with the one-batch :func:`feature_drift_psi`)."""
-    _check_drift_bucketing_version(store_dir, writing=False)
-    return (
-        _committed_stats_partials(spark, store_dir, "drift")
-        .groupBy("feature", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    check_drift_bucketing_version(store_dir, writing=False)
+    return _read_stats(spark, store_dir, "drift")
 
 
 def read_drift_trend(spark, store_dir: str) -> DataFrame:
@@ -1921,12 +1488,8 @@ def read_drift_trend(spark, store_dir: str) -> DataFrame:
     scored vs the epoch reference exactly as the batch
     ``events_drift_trend_psi`` entry scores each week vs week 1 —
     drain-parity pytest-pinned on time-bucketed data)."""
-    _check_drift_bucketing_version(store_dir, writing=False)
-    return (
-        _committed_stats_partials(spark, store_dir, "drift_trend")
-        .groupBy("period", "feature", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    check_drift_bucketing_version(store_dir, writing=False)
+    return _read_stats(spark, store_dir, "drift_trend")
 
 
 def url_gate_stream(

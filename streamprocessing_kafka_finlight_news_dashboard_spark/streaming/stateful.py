@@ -166,18 +166,11 @@ def streaming_position_tracker(
 def enrich_news_stream(news_stream: DataFrame) -> DataFrame:
     """Sentiment-on-stream: the enrichment job the reference stubbed
     out entirely (ingestion/spark-ingestion.py:1-10 is an empty
-    docstring). text concat + pandas-UDF sentiment, identical
-    semantics to the batch path (pipeline/news.py) — one code path
-    for both planes."""
-    from pyspark.sql import functions as F
-
+    docstring): :func:`functions.sentiment.with_sentiment` over the
+    envelope's ``summary`` — the step the batch ``add_sentiment`` runs
+    over ``description``, so both planes score identically."""
     from streamprocessing_kafka_finlight_news_dashboard_spark.functions.sentiment import (
-        sentiment_udf,
+        with_sentiment,
     )
 
-    text = F.trim(
-        F.concat_ws(" ", F.coalesce("title", F.lit("")), F.coalesce("summary", F.lit("")))
-    )
-    return news_stream.withColumn("text", text).withColumn(
-        "sentiment", sentiment_udf(F.col("text"))
-    )
+    return with_sentiment(news_stream, "summary")

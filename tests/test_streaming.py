@@ -1494,11 +1494,14 @@ def test_stats_store_compaction_read_equivalence(spark, tmp_path):
 
 
 def test_stats_store_compaction_crash_heal(spark, tmp_path):
-    """Both compaction crash windows heal: (a) compact partitions
+    """All three compaction crash windows heal: (a) compact partitions
     written but no marker — dropped, store unchanged; (b) compact
     marker committed but old markers/partitions not yet removed —
     readers are ALREADY exact via the replaces manifest (no double
-    count), and the next compact call completes the physical cleanup.
+    count), and the next compact call completes the physical cleanup;
+    (c) manifest written to its ``._tmp`` name but never renamed —
+    not a marker, so readers are unchanged and heal drops it without
+    touching the batches it lists.
     The writer's late-enabled-family guard still fires on a compacted
     store (the coverage-based check survives the per-batch markers
     being collapsed)."""
@@ -1574,6 +1577,31 @@ def test_stats_store_compaction_crash_heal(spark, tmp_path):
         for r in P.read_mixture_stats(spark, store).collect()
     }
     assert healed == pre_crash
+
+    # (c) crash between writing the manifest to its ._tmp name and the
+    # rename: the ._tmp file is no marker, so readers are unchanged, and
+    # the next heal removes it with its half-written compact partition
+    # while every batch it would have replaced survives
+    import json
+
+    docs.limit(20).coalesce(1).write.mode("append").parquet(drops)
+    drain(track_mixture=True)
+    committed = sorted(e[len("batch-"):] for e in os.listdir(ledger))
+    assert len(committed) >= 2
+    pre_tmp = _stats_snapshot(spark, store)
+    tok = "compact-" + "0" * 12
+    tmp_marker = os.path.join(ledger, f"batch-{tok}._tmp")
+    with open(tmp_marker, "w") as fh:
+        json.dump({"replaces": committed}, fh)
+    half = os.path.join(store, "mixture", f"batch_id={tok}")
+    shutil.copytree(os.path.join(store, "mixture", f"batch_id={committed[0]}"), half)
+    assert _stats_snapshot(spark, store) == pre_tmp
+    docs.limit(5).coalesce(1).write.mode("append").parquet(drops)
+    drain(track_mixture=True)  # writer restart: heal runs in batch 1
+    assert not os.path.exists(tmp_marker) and not os.path.exists(half)
+    for part in committed:
+        assert os.path.exists(os.path.join(ledger, f"batch-{part}")), part
+        assert os.path.isdir(os.path.join(store, "mixture", f"batch_id={part}")), part
 
     # writer restart on the compacted store: same family works...
     drain(track_mixture=True)

@@ -1,16 +1,16 @@
-"""Driver-parity sweep: run EVERY oracle-bearing catalog query against
-DuckDB at a given scale factor with the driver-style compare (row
-count + sorted-column schema + canonicalized value hash), plus a
-rows-only smoke for the non-SQL entries.
+"""Oracle check of catalog queries against DuckDB at a given scale factor
+with the driver-style compare (row count + sorted-column schema +
+canonicalized value hash), plus a rows-only smoke for the non-SQL
+entries. With no NAMEs it sweeps the whole catalog:
 
-This is the same gate the external driver applies per round, runnable
-locally at any SF before shipping:
+    python tools/check_all.py [NAME...] [--sf /root/testdata/sf0.01]
 
-    python tools/check_all.py [/root/testdata/sf0.01]
+Exits non-zero on any mismatch, error or zero-row rows-only entry.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
@@ -22,30 +22,39 @@ from tests.oracle_compare import compare, duckdb_conn
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("names", nargs="*", help="catalog queries (default: all)")
+    ap.add_argument("--sf", default="/root/testdata/sf0.01", help="scale-factor dir")
+    args = ap.parse_args()
+    unknown = [n for n in args.names if n not in plans.CATALOG]
+    if unknown:
+        ap.error(f"unknown catalog queries: {unknown}")
+    names = args.names or list(plans.CATALOG)
     spark = get_spark(app_name="check-all")
-    con = duckdb_conn(sf_dir)
+    con = duckdb_conn(args.sf)
     bad: list[str] = []
     n_oracle = n_rows_only = 0
     t0 = time.perf_counter()
-    for name, q in plans.CATALOG.items():
+    for name in names:
+        q = plans.CATALOG[name]
+        tq = time.perf_counter()
         try:
             if q.oracle is None:
-                n = q.builder(spark, sf_dir).count()
+                n = q.builder(spark, args.sf).count()
                 status = f"rows-only ({n} rows)" + (" DEGENERATE" if n == 0 else "")
                 if n == 0:
                     bad.append(name)
                 n_rows_only += 1
             else:
-                issues = compare(q.builder(spark, sf_dir), con.execute(q.oracle).df())
+                issues = compare(q.builder(spark, args.sf), con.execute(q.oracle).df())
                 status = "OK" if not issues else f"MISMATCH {issues}"
                 if issues:
                     bad.append(name)
                 n_oracle += 1
         except Exception as e:  # noqa: BLE001 — report, keep sweeping
-            status = f"ERROR {type(e).__name__}: {str(e)[:160]}"
+            status = f"ERROR {type(e).__name__}: {str(e)[:300]}"
             bad.append(name)
-        print(f"{name}: {status}", flush=True)
+        print(f"{name}: {status} [{time.perf_counter() - tq:.1f}s]", flush=True)
     print(
         f"\n{n_oracle} oracle-checked + {n_rows_only} rows-only in "
         f"{time.perf_counter() - t0:.0f}s | FAILURES: {bad or 'none'}"

@@ -26,16 +26,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from streamprocessing_kafka_finlight_news_dashboard_spark import get_spark
 from streamprocessing_kafka_finlight_news_dashboard_spark.streaming import curation as C
+from streamprocessing_kafka_finlight_news_dashboard_spark.streaming import ledger as L
 from streamprocessing_kafka_finlight_news_dashboard_spark.streaming import pipeline as P
 
 _CURATION = {"urlcanon", "spans", "fps", "docs", "bands"}
-_STATS = set(P._STATS_SCHEMAS)
+_STATS = set(P.STATS_SCHEMAS)
 
 
 def _n_partitions(store: str) -> int:
     n = 0
     for root, dirs, _ in os.walk(store):
-        n += sum(1 for d in dirs if d.startswith("batch_id="))
+        n += sum(1 for d in dirs if L.is_partition(d))
     return n
 
 
@@ -68,7 +69,7 @@ def find_stores(deploy: str):
             continue
         for e in sorted(os.listdir(d)):
             p = os.path.join(d, e)
-            if os.path.isdir(p) and not e.startswith("batch_id="):
+            if os.path.isdir(p) and not L.is_partition(e):
                 stack.append(p)
 
 
