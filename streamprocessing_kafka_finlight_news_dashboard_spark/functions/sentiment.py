@@ -82,11 +82,22 @@ def _fallback_compound(text: str) -> float:
     return total / math.sqrt(total * total + NORM_ALPHA)
 
 
+_analyzer = None
+
+
+def _vader_analyzer():
+    """The process's one VADER analyzer, built on first use."""
+    global _analyzer
+    if _analyzer is None:
+        _analyzer = SentimentIntensityAnalyzer()
+    return _analyzer
+
+
 @F.pandas_udf(T.DoubleType())
 def sentiment_udf(texts: pd.Series) -> pd.Series:
     """Compound sentiment in [-1, 1] per text batch."""
     if _HAVE_VADER:
-        analyzer = SentimentIntensityAnalyzer()
+        analyzer = _vader_analyzer()
         return texts.fillna("").map(lambda t: analyzer.polarity_scores(t)["compound"])
     return texts.fillna("").map(_fallback_compound)
 

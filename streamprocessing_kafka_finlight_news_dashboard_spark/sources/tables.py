@@ -12,6 +12,8 @@ ReadSchema).
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
 import tempfile
 import zipfile
@@ -21,7 +23,34 @@ from pyspark.sql import functions as F
 
 _PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _PKG_NAME = os.path.basename(_PKG_ROOT)
-_shipped: set[int] = set()
+_shipped: set[str] = set()
+_zip_path: str | None = None
+
+
+def _package_zip() -> str:
+    """This process's zip of the package sources: a fresh, uniquely named
+    file (never one left in the temp dir by an earlier process with the
+    same PID), built once and removed at interpreter exit."""
+    global _zip_path
+    if _zip_path is None:
+        fd, path = tempfile.mkstemp(prefix=f"{_PKG_NAME}_pyfiles_", suffix=".zip")
+        atexit.register(_remove_file, path)
+        with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as zf:
+            for dirpath, _dirs, files in os.walk(_PKG_ROOT):
+                for fn in files:
+                    if fn.endswith(".py"):
+                        full = os.path.join(dirpath, fn)
+                        rel = os.path.join(
+                            _PKG_NAME, os.path.relpath(full, _PKG_ROOT)
+                        )
+                        zf.write(full, rel)
+        _zip_path = path
+    return _zip_path
+
+
+def _remove_file(path: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(path)
 
 
 def ensure_workers_can_import(spark: SparkSession) -> None:
@@ -33,25 +62,14 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     ``sys.path`` insertion only affects the driver process (the
     driver-contract case), worker imports fail with
     ModuleNotFoundError at task time. One zip per process, added once
-    per SparkContext — a no-op cost on every later call."""
+    per application (keyed on its id: CPython may reuse a stopped
+    context's ``id()``) — a no-op cost on every later call."""
     sc = spark.sparkContext
-    if id(sc) in _shipped:
+    if sc.applicationId in _shipped:
         return
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"{_PKG_NAME}_pyfiles_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for dirpath, _dirs, files in os.walk(_PKG_ROOT):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(dirpath, fn)
-                        rel = os.path.join(
-                            _PKG_NAME, os.path.relpath(full, _PKG_ROOT)
-                        )
-                        zf.write(full, rel)
-    sc.addPyFile(zip_path)
-    _shipped.add(id(sc))
+    sc.addPyFile(_package_zip())
+    _shipped.add(sc.applicationId)
+
 
 def require_utc_session(spark: SparkSession, where: str) -> None:
     """Fail fast if the session timezone is not UTC-equivalent.

@@ -140,6 +140,53 @@ def test_twins_agree_on_nasty_strings(spark):
     assert A.bigram_counter(float("nan")) == Counter()
 
 
+
+@pytest.mark.parametrize("eval_type", ["pandas_udf", "mapInPandas", "applyInPandas"])
+def test_worker_zip_directories_survive_task_setup(spark, eval_type):
+    """``pyspark.worker`` calls ``importlib.invalidate_caches()`` before
+    every task. Once the package is imported in a worker, no zip or jar
+    directory on its path may be re-read by that call, also through an
+    importer created later (without the seal in the package root,
+    pyspark.zip, the py4j zip and the spark-core jar are re-read per
+    task). One tiny job per Python eval type the package uses."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    def probe():
+        import importlib.machinery
+        import os
+        import zipimport
+
+        import pyspark
+
+        import streamprocessing_kafka_finlight_news_dashboard_spark  # noqa: F401
+
+        # a zip importer made after the package import, via sys.path_hooks
+        later = os.path.join(pyspark.__path__[0], "_later")
+        importlib.machinery.PathFinder.find_spec("_probe", [later])
+        before = dict(zipimport._zip_directory_cache)
+        importlib.invalidate_caches()
+        after = zipimport._zip_directory_cache
+        replaced = sorted(p for p, d in before.items() if after.get(p) is not d)
+        return f"{len(before)}|{','.join(replaced)}"
+
+    df = spark.range(1, numPartitions=1)
+    if eval_type == "pandas_udf":
+        udf = F.pandas_udf(lambda s: pd.Series([probe()] * len(s)), "string")
+        out = df.select(udf("id").alias("r"))
+    elif eval_type == "mapInPandas":
+        out = df.mapInPandas(
+            lambda it: (pd.DataFrame({"r": [probe()]}) for _ in it), "r string"
+        )
+    else:
+        out = df.groupBy("id").applyInPandas(
+            lambda _pdf: pd.DataFrame({"r": [probe()]}), "r string"
+        )
+    (r,) = [row.r for row in out.collect()]
+    n_archives, replaced = r.split("|")
+    assert int(n_archives) > 0  # the worker imported from zip archives
+    assert replaced == "", replaced
+
 def test_operators_invariant_to_input_partitioning(docs, spark):
     """Distributed-correctness property: operator results must not
     depend on how the input happens to be partitioned (a partition-

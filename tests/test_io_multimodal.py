@@ -21,6 +21,50 @@ def tmpdir():
     shutil.rmtree(d, ignore_errors=True)
 
 
+
+def test_workers_get_current_package_sources(tmp_path, monkeypatch):
+    """The zip shipped to workers holds this checkout's sources even when
+    an earlier process with the same PID left a different zip at the old
+    fixed name ``<tmpdir>/<pkg>_pyfiles_<pid>.zip``; and a new application
+    is shipped the package even if its context reuses a stopped one's
+    address."""
+    import os
+    import types
+    import zipfile
+
+    from streamprocessing_kafka_finlight_news_dashboard_spark.sources import tables
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(tables, "_shipped", set())
+    monkeypatch.setattr(tables, "_zip_path", None, raising=False)
+    pkg, root = tables._PKG_NAME, tables._PKG_ROOT
+    stale = tmp_path / f"{pkg}_pyfiles_{os.getpid()}.zip"
+    with zipfile.ZipFile(stale, "w") as zf:
+        zf.writestr(f"{pkg}/__init__.py", "STALE = True\n")
+
+    shipped = []
+    sc = types.SimpleNamespace(applicationId="app-1", addPyFile=shipped.append)
+    spark = types.SimpleNamespace(sparkContext=sc)
+    tables.ensure_workers_can_import(spark)
+    tables.ensure_workers_can_import(spark)
+    assert len(shipped) == 1
+
+    want = {
+        os.path.join(pkg, os.path.relpath(os.path.join(d, f), root))
+        for d, _dirs, files in os.walk(root)
+        for f in files
+        if f.endswith(".py")
+    }
+    with zipfile.ZipFile(shipped[0]) as zf:
+        assert set(zf.namelist()) == want
+        init = zf.read(f"{pkg}/__init__.py")
+    with open(os.path.join(root, "__init__.py"), "rb") as f:
+        assert init == f.read()
+
+    sc.applicationId = "app-2"  # same context object, new application
+    tables.ensure_workers_can_import(spark)
+    assert len(shipped) == 2
+
 def test_parquet_roundtrip(spark, tmpdir):
     src = load_table(spark, SF_SMOKE, "orders")
     IO.write_parquet(src, f"{tmpdir}/orders")

@@ -79,3 +79,29 @@ def test_fixture_pools_separate():
     neg = [score(t) for t in fixtures._NEG]
     assert min(pos) > 0.25
     assert max(neg) < -0.25
+
+
+def test_vader_analyzer_built_once_per_process(monkeypatch):
+    """With vaderSentiment available, the UDF scores every Arrow batch
+    with the process's one analyzer instead of building one per batch."""
+    import pandas as pd
+
+    from streamprocessing_kafka_finlight_news_dashboard_spark.functions import sentiment as S
+
+    built = []
+
+    class CountingAnalyzer:
+        def __init__(self):
+            built.append(self)
+
+        def polarity_scores(self, text):
+            return {"compound": 0.5 if text else 0.0}
+
+    monkeypatch.setattr(S, "_HAVE_VADER", True)
+    monkeypatch.setattr(S, "SentimentIntensityAnalyzer", CountingAnalyzer)
+    monkeypatch.setattr(S, "_analyzer", None, raising=False)
+    first = S.sentiment_udf.func(pd.Series(["good", None]))
+    second = S.sentiment_udf.func(pd.Series(["bad"]))
+    assert first.tolist() == [0.5, 0.0]
+    assert second.tolist() == [0.5]
+    assert len(built) == 1
