@@ -34,7 +34,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators.text import fingerprint, tokens
-from streamprocessing_kafka_finlight_news_dashboard_spark.session import shuffle_partitions
+from streamprocessing_kafka_finlight_news_dashboard_spark.session import materialize, shuffle_partitions
 
 
 # ---------------------------------------------------------------------------
@@ -148,9 +148,7 @@ def jaccard_similar_pairs(
     # un-materialized, the tokenize+shingle pass runs twice (aliased
     # branches defeat ReusedExchange; r16, guide §2.4 — same fix as
     # minhash_jaccard_estimates)
-    s = shingle_arrays(df, text_col, id_col, n, keep_cols=block_cols).localCheckpoint(
-        eager=False
-    )
+    s = shingle_arrays(df, text_col, id_col, n, keep_cols=block_cols).transform(materialize)
     a = s.select(
         F.col("id").alias("id_a"),
         *[F.col(c).alias(f"{c}_a") for c in block_cols],
@@ -330,8 +328,8 @@ def ngram_leakage_audit(
         def grams(df: DataFrame) -> DataFrame:
             return shingle_rows(df, text_col, id_col, n)
 
-    tg = grams(test).localCheckpoint(eager=False)
-    pg = grams(train).localCheckpoint(eager=False)
+    tg = grams(test).transform(materialize)
+    pg = grams(train).transform(materialize)
     capped = (
         pg.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("_df"))
@@ -672,7 +670,7 @@ def simhash_hamming_pairs(
     sh = (
         simhash_table_arrow(df, text_col, id_col, n)
         .select(F.col(id_col).alias("id"), "simhash60")
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
     banded = sh.select(
         "id",
@@ -804,7 +802,7 @@ def connected_components(
     g = (
         edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
     # Scale-adaptive solver choice, same spirit as broadcast-join
     # selection: the distributed loop pays 2-3 jobs of fixed
@@ -828,7 +826,7 @@ def connected_components(
         g.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
     for _ in range(max_iter):
         # Each label-graph node that can shrink: min over its
@@ -844,7 +842,7 @@ def connected_components(
         relab = (
             relab.join(j, relab.rlabel == j.jid, "left")
             .select("rid", F.coalesce("jlabel", "rlabel").alias("rlabel"))
-            .localCheckpoint(eager=True)
+            .transform(materialize, eager=True)
         )
         if relab.limit(1).count() == 0:
             break
@@ -853,7 +851,7 @@ def connected_components(
         mapping = (
             mapping.join(r_map, mapping.label == r_map.m_id, "left")
             .select("id", F.coalesce("m_new", "label").alias("label"))
-            .localCheckpoint(eager=True)
+            .transform(materialize, eager=True)
         )
         # Contract the edge set into the new label space; self-loops
         # and duplicate edges drop, so the graph shrinks every round.
@@ -868,7 +866,7 @@ def connected_components(
             )
             .filter(F.col("src") != F.col("dst"))
             .distinct()
-            .localCheckpoint(eager=True)
+            .transform(materialize, eager=True)
         )
     isolated = (
         nodes.select(F.col(id_col).alias("id"))
@@ -1189,7 +1187,7 @@ def source_overlap(
     g = (
         rows.select(F.col(group_col).alias("grp"), F.md5(F.col("shingle")).alias("key"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     sizes = g.groupBy("grp").agg(F.count(F.lit(1)).alias("n_grams"))
     a, b = g.alias("a"), g.alias("b")
@@ -1356,7 +1354,7 @@ def decontaminate_bloom(
         .distinct()
         # one broadcast per hash consumes this relation — without the
         # checkpoint each would re-run the whole eval shingle pipeline
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     marked = tg
     hit_cols = []
@@ -1411,12 +1409,10 @@ def minhash_jaccard_estimates(
     """
     from streamprocessing_kafka_finlight_news_dashboard_spark.operators.arrow_docs import minhash_signatures_arrow
 
-    sig = minhash_signatures_arrow(df, text_col, id_col, num_hashes, n).localCheckpoint(
-        eager=False
-    )
+    sig = minhash_signatures_arrow(df, text_col, id_col, num_hashes, n).transform(materialize)
     pairs = minhash_lsh_candidates_portable(
         df, text_col, id_col, num_hashes, sig=sig
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     sa = sig.select(
         F.col("id").alias("id_a"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(num_hashes)]
     )
@@ -1443,9 +1439,7 @@ def minhash_jaccard_estimates(
     # semi-join + text scan + shingle build execute twice (r16, guide
     # §2.4; the plan showed two full-text parquet scans). The
     # materialized frame is pair-member-sized, not corpus-sized.
-    arrays = shingle_arrays(docs_in_pairs, text_col, id_col, n).localCheckpoint(
-        eager=False
-    )
+    arrays = shingle_arrays(docs_in_pairs, text_col, id_col, n).transform(materialize)
     aa = arrays.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
     ab = arrays.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
@@ -1512,7 +1506,7 @@ def _winnow_fp_rows(
         F.lead("h", w - 1).over(ws).isNotNull().alias("_wfull"),
         F.count(F.lit(1)).over(W.partitionBy("id")).alias("_n_spans"),
         "h",
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     regular = marked.filter(F.col("_wfull")).select(
         "id", F.col("wmin").alias("fp")
     )
@@ -1569,9 +1563,7 @@ def winnow_overlap_pairs(
     # fps feeds three consumers (sizes + both self-join sides via rare)
     # and rare feeds two — checkpoint both so the fingerprint pass and
     # the fp-ubiquity window each run once (aliased-branch discipline).
-    fps = _winnow_fp_rows(df, text_col, id_col, window, w).localCheckpoint(
-        eager=False
-    )
+    fps = _winnow_fp_rows(df, text_col, id_col, window, w).transform(materialize)
     # n_fp is the PRE-cap fingerprint count: containment is defined
     # against the document's full fingerprint set, the cap only prunes
     # which fingerprints may generate candidate pairs.
@@ -1579,7 +1571,7 @@ def winnow_overlap_pairs(
     rare = (
         fps.withColumn("_nd", F.count(F.lit(1)).over(W.partitionBy("fp")))
         .filter(F.col("_nd") <= ubiquity_cap)
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     a = rare.select(F.col("id").alias("id_a"), "fp")
     b = rare.select(F.col("id").alias("id_b"), "fp")
@@ -1637,7 +1629,7 @@ def winnow_containment_estimates(
     on the uniform 128-bit key."""
     pairs = winnow_overlap_pairs(
         df, text_col, id_col, window, w, ubiquity_cap
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     pair_ids = (
         pairs.select(F.col("id_a").alias("pid"))
         .union(pairs.select(F.col("id_b").alias("pid")))
@@ -1650,7 +1642,7 @@ def winnow_containment_estimates(
         _window_occurrences(docs_in_pairs, text_col, id_col, window)
         .select("id", "key")
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     sizes = spans.groupBy("id").agg(F.count(F.lit(1)).alias("n_spans"))
     sa = spans.select(F.col("id").alias("id_a"), "key")

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-from streamprocessing_kafka_finlight_news_dashboard_spark.session import shuffle_partitions
+from streamprocessing_kafka_finlight_news_dashboard_spark.session import materialize, shuffle_partitions
 
 
 def _dvec(col: Column) -> Column:
@@ -157,7 +157,7 @@ def dim_truncation_recall(
     truth instead of a THIRD+1 full corpus scoring pass (the standard
     dims=(64,32,16) report drops from 4 corpus passes to 3)."""
     full = cosine_topk(embeddings, query_ids, k=k, id_col=id_col, vec_col=vec_col)
-    truth = full.select("query_id", "neighbor_id").localCheckpoint(eager=False)
+    truth = full.select("query_id", "neighbor_id").transform(materialize)
     denom = len(query_ids) * k
     report = None
     for d in dims:
@@ -374,7 +374,7 @@ def near_dup_pairs(
     # because the self-join's differing aliases defeat ReusedExchange.
     b = sign_lsh_bands(
         embeddings, n_bands=n_bands, band_bits=band_bits, id_col=id_col, vec_col=vec_col
-    ).localCheckpoint(eager=True)
+    ).transform(materialize, eager=True)
     left = b.select(F.col("vid").alias("id_a"), "band", "bkey")
     right = b.select(F.col("vid").alias("id_b"), "band", "bkey")
     cand = (
@@ -515,7 +515,7 @@ def kmeans_centroids(
             rows, "cell int, centroid array<double>, cell_size bigint"
         )
 
-    vecs = base.localCheckpoint(eager=True)
+    vecs = materialize(base, eager=True)
     seeds = vecs.orderBy("id").limit(k).collect()
     cents = np.array([r["vec"] for r in seeds], dtype=np.float64)
     counts = np.zeros(len(cents), dtype=np.int64)
@@ -886,7 +886,7 @@ def _centroid_scores_arrow(
         # the first action materializes, later branches reuse.
         # Callers with their OWN materialization (semdedup) or a
         # single consumer leave branching off and pay nothing.
-        out = out.localCheckpoint(eager=False)
+        out = materialize(out)
     return out
 
 
@@ -1317,7 +1317,7 @@ def semdedup(
                 F.col("clabel").alias("cell"),
                 "centroid_sim",
             )
-            .localCheckpoint(eager=True)
+            .transform(materialize, eager=True)
         )
         # Candidate generation NARROW (id, cell) and scoring on an
         # id-keyed re-attach, NOT inline in the cell join: the cell key
@@ -1521,7 +1521,7 @@ def knn_scored_edges(
             F.col("cs_norm").alias("vnorm"),
             F.col("clabel").alias("cell"),
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     vecs = corpus.select("vid", "vec", "vnorm")
     corpus_n = corpus.select(F.col("vid").alias("neighbor_id"), "cell")
@@ -2133,6 +2133,12 @@ def pagerank_on_edges(
     construction). Nothing data-sized ever reaches the driver; the
     only driver scalar is N (one count).
 
+    Storage: every iteration's ``rd`` (the r⋈deg join, N rows) and
+    ``r`` (N rows) checkpoints stay live until the caller's
+    ``session.released()`` scope ends, so the peak within a query is
+    about 2 × iterations × N rank rows plus the edge list; outside a
+    scope they live until the session drops them.
+
     ``nodes`` must be one distinct-id column named ``id``; ``edges``
     must be (src, dst) with both endpoints present in ``nodes``.
 
@@ -2149,8 +2155,8 @@ def pagerank_on_edges(
     wcol = weight_col is not None
     e = edges.select(
         "src", "dst", *([F.col(weight_col).alias("w")] if wcol else [])
-    ).localCheckpoint(eager=False)
-    nd = nodes.select("id").localCheckpoint(eager=False)
+    ).transform(materialize)
+    nd = nodes.select("id").transform(materialize)
     n = int(nd.count())
     if n == 0:
         return nd.select("id", F.lit(0).cast("long").alias("rank_e12"))
@@ -2160,7 +2166,7 @@ def pagerank_on_edges(
         .agg(
             F.sum("w").alias("wsum") if wcol else F.count(F.lit(1)).alias("outdeg")
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     r = nd.select("id", F.lit(scale // n).cast("long").alias("r"))
     for _ in range(iterations):
@@ -2172,9 +2178,7 @@ def pagerank_on_edges(
         # r and deg per iteration. filter(src IS NULL) ≡ the anti join,
         # filter(src IS NOT NULL) ≡ the inner join: identical rows,
         # identical integer trajectory.
-        rd = r.join(deg, r["id"] == deg["src"], "left").localCheckpoint(
-            eager=False
-        )
+        rd = r.join(deg, r["id"] == deg["src"], "left").transform(materialize)
         if wcol:
             # weighted split: each edge carries (R(u)·w_uv) // W(u) —
             # the per-edge product stays < scale·max_w ≤ 1e18 < 2^63;
@@ -2215,7 +2219,7 @@ def pagerank_on_edges(
                     f" + dmass div {n})) div 100 AS BIGINT)"
                 ).alias("r"),
             )
-            .localCheckpoint(eager=False)
+            .transform(materialize)
         )
     return r.select("id", F.col("r").alias("rank_e12"))
 
@@ -2322,7 +2326,7 @@ def knn_label_consensus(
             "neighbor_id",
         )
         .select("src_id", "nlabel", "cos_sim")
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     votes = nlab.groupBy("src_id", "nlabel").agg(F.count(F.lit(1)).alias("votes"))
     w = W.partitionBy("src_id").orderBy(F.desc("votes"), F.asc("nlabel"))
@@ -2536,7 +2540,7 @@ def margin_bitext_mine(
         scored = _score_pairs(cand, vecs, "src_id", "tgt_id").withColumnRenamed(
             "cos_sim", "sim"
         )
-    scored = scored.localCheckpoint(eager=False)
+    scored = materialize(scored)
 
     def _topk_mean(part_col: str, other_col: str, out: str) -> DataFrame:
         w = W.partitionBy(part_col).orderBy(F.desc("sim"), F.asc(other_col))
@@ -2565,7 +2569,7 @@ def margin_bitext_mine(
                 "margin"
             ),
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     wx = W.partitionBy("src_id").orderBy(F.desc("margin"), F.asc("tgt_id"))
     wy = W.partitionBy("tgt_id").orderBy(F.desc("margin"), F.asc("src_id"))
@@ -2647,7 +2651,7 @@ def mmr_rerank(
     ca = (
         rel.join(vecs, F.col("a_id") == F.col("cid"))
         .select("query_id", "a_id", "rel_a", "cvec", "cnorm")
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     b = ca.select(
         F.col("query_id").alias("qb"),
@@ -2740,7 +2744,7 @@ def triangle_stats(
             F.greatest(src_col, dst_col).alias("b"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     e1, e2, e3 = und.alias("e1"), und.alias("e2"), und.alias("e3")
     tri = (
@@ -2754,7 +2758,7 @@ def triangle_stats(
             F.col("e1.b").alias("nb"),
             F.col("e2.b").alias("nc"),
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     pernode_tri = (
         tri.select(F.col("na").alias("id"))

@@ -23,7 +23,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators.arrow_docs import char_bigram_counts_arrow
-from streamprocessing_kafka_finlight_news_dashboard_spark.session import shuffle_partitions
+from streamprocessing_kafka_finlight_news_dashboard_spark.session import materialize, persisted, shuffle_partitions
 
 # Whitespace tokenization — matches the reference's implicit
 # split-on-space text handling and is portable to the DuckDB oracle
@@ -164,7 +164,7 @@ def bigram_lm_scores(
         tok.withColumn("w2", F.lead("w1").over(w))
         .filter(F.col("w2").isNotNull())
         .select("id", "w1", "w2")
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     uni = grain.groupBy("w1").agg(F.count("*").alias("c1"))
     big = grain.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
@@ -742,7 +742,7 @@ def _nb_langid_model(
     base = df.filter(F.col(text_col).isNotNull() & F.col(label_col).isNotNull())
     dbg = char_bigram_counts_arrow(
         base, text_col=text_col, id_cols=(id_col, label_col)
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
 
     def _scaled(col: Column) -> Column:
         return F.round(F.round(F.log(col), 9) * _NB_LP_SCALE, 0).cast("long")
@@ -758,13 +758,13 @@ def _nb_langid_model(
     prof = (
         dbg.groupBy(label_col, "bg")
         .agg(F.sum("cnt").alias("k"))
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     vocab_n = prof.agg(F.countDistinct("bg").cast("long").alias("v"))
     lang_stats = (
         dbg.groupBy(label_col)
         .agg(F.countDistinct(id_col).alias("nd"), F.sum("cnt").alias("tot"))
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     total_docs = lang_stats.agg(F.sum("nd").alias("total_nd"))
     lp_rows = prof.select(
@@ -976,9 +976,7 @@ def tfidf_top_terms(
     # and the scoring join) — without the checkpoint the Arrow
     # tokenize-and-count pass executes twice (aliased branches defeat
     # ReusedExchange; same failure mode as the r10 consensus fix).
-    tf = token_counts_arrow(df, text_col=text_col, id_col=id_col).localCheckpoint(
-        eager=False
-    )
+    tf = token_counts_arrow(df, text_col=text_col, id_col=id_col).transform(materialize)
     docfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     # N as a broadcast 1-row aggregate, not a driver-side count() —
     # keeps the whole operator lazy.
@@ -1241,7 +1239,7 @@ def dsir_logweights(
         )
         .withColumn("bucket", portable_hash_value(F.col("tok")) % n_buckets)
         .drop("tok")
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     counts = tok.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("q_cnt"), F.sum("_tgt").alias("p_cnt")
@@ -1322,7 +1320,7 @@ def lr_train_weights(
     base = df.select(
         label.cast("int").alias("_y"),
         *[f.alias(f"_f{j}") for j, f in enumerate(feats)],
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     n = base.count()
     if n == 0:
         # loud fail like the sibling scorers (temperature_rates /
@@ -1531,12 +1529,12 @@ def feature_drift_psi(
     # consumption of `full`; the plan dump showed 8 corpus text scans
     # for a 2-pass algorithm). The materialized frames are narrow:
     # (side, feature, value) with no text, and |features| rows.
-    stacked = b.unionByName(c).localCheckpoint(eager=False)
+    stacked = b.unionByName(c).transform(materialize)
     edges = (
         stacked.filter(F.col("side") == "base")
         .groupBy("feature")
         .agg(F.min("value").alias("f_min"), F.max("value").alias("f_max"))
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     binned = stacked.join(F.broadcast(edges), "feature").select(
         "side", "feature", _bucket_col(n_buckets).alias("bucket")
@@ -1658,7 +1656,7 @@ def psi_report_from_full(
     # subtree is the whole corpus binning/count chain in the one-batch
     # forms, so un-materialized the entire upstream executed twice
     # (r16, guide §2.4). The frame itself is ≤ |keys|·n_buckets rows.
-    full = full.localCheckpoint(eager=False)
+    full = materialize(full)
     tot = full.groupBy(*keys).agg(
         F.sum("cb").alias("nb"), F.sum("cc").alias("nc")
     )
@@ -1705,7 +1703,7 @@ def drift_reference(
     edges = (
         b.groupBy("feature")
         .agg(F.min("value").alias("f_min"), F.max("value").alias("f_max"))
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     base_counts = feature_bucket_counts(base, edges, features, n_buckets)
     return edges, base_counts
@@ -2178,7 +2176,7 @@ def bm25_scores(
             F.size(t).cast("long").alias("dl"),
             F.filter(t, term_filter).alias("qtoks"),
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     dl = narrow.select("id", "dl")
     stats = narrow.agg(
@@ -2345,7 +2343,7 @@ def pmi_pairs(
             F.col(id_col).alias("id"),
             F.posexplode(tokens(F.col(text_col))).alias("pos", "tok"),
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     w = W.partitionBy("id").orderBy("pos")
     with_leads = tok.select(
@@ -2521,7 +2519,7 @@ def categorical_drift_chi2(
     # the two actions. persist (not localCheckpoint) keeps the
     # row-bounding HashAggregate visible to the plan-quality guard's
     # global-window walk; the cached frame is |categories| rows.
-    cells = cells.persist()
+    cells = persisted(cells)
     n_cats = cells.count()  # model-sized driver round-trip (|categories|)
     df_val = n_cats - 1
     w_all = W.partitionBy()

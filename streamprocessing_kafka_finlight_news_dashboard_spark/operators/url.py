@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from streamprocessing_kafka_finlight_news_dashboard_spark.session import materialize
+
 #: query-param keys a canonicalizer strips: click/campaign trackers
 #: that fragment crawl dedup without changing page content (the
 #: utm_* family by prefix, plus the common click ids).
@@ -367,7 +369,7 @@ def url_curation_gate(
     instead of paying a join back on doc_id."""
     marked = (
         url_marked(df, url_col, id_col)
-        .localCheckpoint(eager=False)  # rates + gate both consume it
+        .transform(materialize)  # rates + gate both consume it
     )
     rates = (
         marked.filter(~F.col("__dup") & F.col("__domain").isNotNull())
@@ -437,7 +439,7 @@ def url_curation_decisions(
     )
     # two consumers (domain counts + final projection) — checkpoint so
     # the canonicalization subtree runs once
-    base = base.localCheckpoint(eager=False)
+    base = materialize(base)
     rates = (
         base.filter(~F.col("is_url_dup") & F.col("domain").isNotNull())
         .groupBy("domain")

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from streamprocessing_kafka_finlight_news_dashboard_spark.session import persisted
+
 INITIAL_CAPITAL = 100_000.0
 POSITION_SIZE = 0.8
 MAX_POSITIONS = 10
@@ -169,6 +171,10 @@ def run_backtest(
     distributed part; the serial simulation runs in one applyInPandas
     group. The scalable per-entity variant (independent portfolios,
     parallel across entities) is ``plans.domain.portfolio_backtest_trades``.
+
+    The simulation runs once per call and is cached for both frames; a
+    caller that wraps the call and every action on its outputs in
+    ``session.released()`` frees that cache when the scope ends.
     """
     panel = (
         prices.select("ticker", "date", "close")
@@ -187,7 +193,9 @@ def run_backtest(
     def sim(pdf: pd.DataFrame) -> pd.DataFrame:
         return _simulate(pdf, hold_days, stop_loss_pct, take_profit_pct)
 
-    result = panel.groupBy("_g").applyInPandas(sim, _SIM_SCHEMA).cache()
+    # one simulation feeds both trades and equity; persisted, not
+    # checkpointed, so the grouped apply stays visible to the plan guard
+    result = persisted(panel.groupBy("_g").applyInPandas(sim, _SIM_SCHEMA))
     trades = result.filter(F.col("row_type") == "trade").select(
         "ticker", "entry_date", "exit_date", "entry_price", "exit_price", "shares",
         "pnl", "pnl_pct", "exit_reason", "sentiment", "news_count",
@@ -227,7 +235,7 @@ def backtest_metrics(trades: DataFrame, equity: DataFrame) -> DataFrame:
     (A9), gaps-and-islands streaks (A14/W5), window-based drawdown
     analysis (W3/W4/W7), population-std Sharpe/Sortino/Calmar.
     Returns a single-row DataFrame."""
-    eq = equity_analytics(equity).cache()
+    eq = persisted(equity_analytics(equity))
 
     # --- trade-level aggregates (one pass) ---
     win = F.col("pnl") > 0

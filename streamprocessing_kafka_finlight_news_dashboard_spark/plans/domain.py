@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from streamprocessing_kafka_finlight_news_dashboard_spark.plans.catalog import query
 from streamprocessing_kafka_finlight_news_dashboard_spark.plans.timeseries import daily_user_values
+from streamprocessing_kafka_finlight_news_dashboard_spark.session import materialize
 from streamprocessing_kafka_finlight_news_dashboard_spark.sources.tables import load_table
 
 _THR_HI = 30.0
@@ -642,7 +643,7 @@ def domain_stage_frames(spark: SparkSession, sf_dir: str) -> dict:
     the grid feeds two consumers (the sweep aggregate and the best-config
     join back) — without it the event-grain range join would execute
     twice (aliased-branch double-execution)."""
-    per_day = _sweep_per_day(spark, sf_dir).localCheckpoint(eager=False)
+    per_day = _sweep_per_day(spark, sf_dir).transform(materialize)
     grid = _sweep_grid(per_day)
     sweep = _sweep_correlations(grid)
     best = _sweep_best(sweep)
@@ -652,7 +653,7 @@ def domain_stage_frames(spark: SparkSession, sf_dir: str) -> dict:
     # so the simulation runs once, not once per consumer
     trades = _simulate_trades(
         signals.select("user_id", "day", "close_value", "signal")
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     metrics = _trade_metrics(trades)
     return {
         "features_per_day": per_day,

@@ -9,6 +9,7 @@ from pyspark.sql import Window
 
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import similarity as S
 from streamprocessing_kafka_finlight_news_dashboard_spark.plans.catalog import query
+from streamprocessing_kafka_finlight_news_dashboard_spark.session import materialize
 from streamprocessing_kafka_finlight_news_dashboard_spark.sources.tables import load_table
 
 _QUERY_IDS = list(range(10))
@@ -733,7 +734,7 @@ def emb_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of each re-executing the join+fold subtree. Checkpoint
     # the UNDIRECTED half (each pair scored and stored once — half the
     # materialized rows) and mirror to directed after, per window.
-    und = S.knn_scored_edges(e, directed=False).localCheckpoint(eager=True)
+    und = S.knn_scored_edges(e, directed=False).transform(materialize, eager=True)
     scored = S.mirror_undirected(und)
     w = Window.partitionBy("src_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id")
@@ -1003,9 +1004,7 @@ def emb_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint it so neither re-executes the join+fold pass (r9
     # verdict efficiency item).
     cents = S.label_centroids(e)
-    und = S.knn_scored_edges(e, centroids=cents, directed=False).localCheckpoint(
-        eager=True
-    )
+    und = S.knn_scored_edges(e, centroids=cents, directed=False).transform(materialize, eager=True)
     sd = S.semdedup(e, threshold=0.4, centroids=cents, scored_und=und).select(
         "vec_id", F.col("keep").alias("semantic_keep"), "cluster_size"
     )

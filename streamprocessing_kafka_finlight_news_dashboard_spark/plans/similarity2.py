@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import similarity as S
 from streamprocessing_kafka_finlight_news_dashboard_spark.plans.catalog import query
+from streamprocessing_kafka_finlight_news_dashboard_spark.session import materialize
 from streamprocessing_kafka_finlight_news_dashboard_spark.sources.tables import load_table
 
 _QUERY_IDS = list(range(10))
@@ -511,7 +512,7 @@ def emb_label_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame
     # dim self-join) — un-materialized, each re-ran the corpus-wide
     # posexplode + decimal-sum aggregate (4 wide scans in the r16 plan
     # audit for a 1-pass reduction; guide §2.4/§5)
-    md = means.localCheckpoint(eager=False).select(
+    md = materialize(means).select(
         "label",
         "dim",
         F.round(F.col("s").cast("double") / F.col("n"), 6)

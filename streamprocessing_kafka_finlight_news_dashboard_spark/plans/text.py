@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import dedup as D
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import text as X
-from streamprocessing_kafka_finlight_news_dashboard_spark.session import shuffle_partitions
+from streamprocessing_kafka_finlight_news_dashboard_spark.session import materialize, shuffle_partitions
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators.url import (
     DOMAIN_QUOTA as _URL_QUOTA,
     SYNTHETIC_URL_SQL as _URL_SYNTH,
@@ -420,7 +420,7 @@ def doc_langid_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         X.langid_predictions(d)
         .groupBy("lang", "pred_lang")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     act = cm.groupBy("lang").agg(
         F.sum("c").alias("n_actual"),
@@ -592,7 +592,7 @@ def doc_langid_nb_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         X.nb_langid_predictions(d)
         .groupBy("lang", "pred_lang")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     act = cm.groupBy("lang").agg(
         F.sum("c").alias("n_actual"),
@@ -734,7 +734,7 @@ def doc_langid_kappa_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         X.langid_dual_predictions(d)
         .groupBy("classifier", "lang", "pred_lang")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     parts = []
     for name in ("bigram", "nb"):
@@ -1595,7 +1595,7 @@ def doc_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the manifest carry-through) — aliased branches defeat
     # ReusedExchange, and without the checkpoint the plan re-scanned
     # the corpus five times (seen in the PLANS.md snapshot).
-    stats = X.mixture_stats_partial(d).localCheckpoint(eager=False)
+    stats = X.mixture_stats_partial(d).transform(materialize)
     rates = X.temperature_rates(stats, validate=False)
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 17, 8), 16, 10)
@@ -1702,7 +1702,7 @@ _TEMP_EXPONENT = repr(1.0 - _TEMP_ALPHA)
 )
 def doc_temperature_mixture_alpha3(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    stats = X.mixture_stats_partial(d).localCheckpoint(eager=False)
+    stats = X.mixture_stats_partial(d).transform(materialize)
     rates = X.temperature_rates(stats, validate=False, alpha=_TEMP_ALPHA)
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 25, 8), 16, 10)
@@ -2104,7 +2104,7 @@ def curation_stage_frames(
         # audit tier: materialize once for the two consumers (the
         # per-stage aggregate + the downstream stage); no-op on the
         # flagship's single-consumer path
-        return df.localCheckpoint(eager=False) if audit else df
+        return materialize(df) if audit else df
 
     d = _ck(
         UU.url_curation_gate(
@@ -2144,7 +2144,7 @@ def curation_stage_frames(
         .select("doc_id", "lang", "text")
         # kept feeds the repetition report AND the gate join back —
         # checkpoint so the URL-gate/line-filter subtree runs once
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     # stage 0.5 (r12): Gopher REPETITION rule gate (Rae et al. 2021
     # Table A1 — the published curation recipes run the repetition
@@ -2197,7 +2197,7 @@ def curation_stage_frames(
     # branches (window flagging + token rebuild), and aliased branches
     # defeat ReusedExchange — without this the gate→decontaminate
     # subtree would evaluate twice.
-    clean = train.join(dirty, "doc_id", "left_anti").localCheckpoint(eager=False)
+    clean = train.join(dirty, "doc_id", "left_anti").transform(materialize)
     # stage 1.75: substring-level exact dedup (Lee et al. 2022
     # ExactSubstr) — cut every non-canonical repeated 8-token span
     # from the cleaned corpus; docs cut to nothing drop here. Cutting
@@ -2225,7 +2225,7 @@ def curation_stage_frames(
         # defeat ReusedExchange — measured 57 s vs 6 s at sf0.1).
         # This is also what a production pipeline does: the cleaned
         # corpus is the persisted intermediate.
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     pairs = DD.minhash_lsh_candidates_portable(canon).select("id_a", "id_b")
     clusters = DD.connected_components(pairs, canon.select("doc_id"))
@@ -2694,7 +2694,7 @@ def doc_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize ONCE: the histogram pass, the fine pass and the final
     # bucketing projection all read the scored relation — without the
     # checkpoint the bigram-LM subtree would evaluate 3×
-    scores = X.bigram_lm_scores(d).localCheckpoint(eager=False)
+    scores = X.bigram_lm_scores(d).transform(materialize)
     t_lo, t_hi = exact_quantile_values(
         scores, "avg_logprob", [(1, 3), (2, 3)]
     )
@@ -2773,7 +2773,7 @@ def doc_perplexity_buckets_by_lang(spark: SparkSession, sf_dir: str) -> DataFram
         .join(
             d.filter(F.col("lang").isNotNull()).select("doc_id", "lang"), "doc_id"
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     thr = exact_quantile_values_by_group(scored, "lang", "avg_logprob", [(1, 3), (2, 3)])
     thr_df = spark.createDataFrame(

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import dedup as D
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import text as X
 from streamprocessing_kafka_finlight_news_dashboard_spark.plans.catalog import query
+from streamprocessing_kafka_finlight_news_dashboard_spark.session import materialize
 from streamprocessing_kafka_finlight_news_dashboard_spark.sources.tables import load_table
 
 
@@ -1091,7 +1092,7 @@ def doc_domain_mix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.size(X.tokens(F.col("text"))).cast("long")).alias("n_tokens"),
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     tot = per.agg(F.sum("n_tokens").alias("t"))
     w = W.orderBy(F.col("n_tokens").desc(), F.col("source"))
@@ -1483,7 +1484,7 @@ def training_shard_stage_frames(spark: SparkSession, sf_dir: str) -> dict:
     from pyspark.sql import Window as W
 
     d = load_table(spark, sf_dir, "documents")
-    stats = X.mixture_stats_partial(d).localCheckpoint(eager=False)
+    stats = X.mixture_stats_partial(d).transform(materialize)
     rates = X.temperature_rates(stats, validate=False, alpha=_TEMP_ALPHA)
     temp_bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 25, 8), 16, 10)
@@ -1505,7 +1506,7 @@ def training_shard_stage_frames(spark: SparkSession, sf_dir: str) -> dict:
         .join(F.broadcast(rates.select("lang", "rate_pct")), "lang")
         .filter(F.col("tb") < F.col("rate_pct"))
         .select("doc_id", "lang", "n_tok", "is_train")
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     counts = sel.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_selected"),
@@ -1704,14 +1705,12 @@ def decontamination_stage_frames(spark: SparkSession, sf_dir: str) -> dict:
     is_eval = F.col("doc_id") % _DECON_EVAL_MOD == 0
     train = d.filter(~is_eval)
     eval_df = d.filter(is_eval)
-    tg = shingle_rows_arrow(train, "text", "doc_id", _DECON_N).localCheckpoint(
-        eager=False
-    )
+    tg = shingle_rows_arrow(train, "text", "doc_id", _DECON_N).transform(materialize)
     eg = (
         shingle_rows_arrow(eval_df, "text", "doc_id", _DECON_N)
         .select("shingle")
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     # each tier feeds its own stage frame AND the audit join —
     # checkpoint all three so neither consumer re-executes a tier
@@ -1723,15 +1722,15 @@ def decontamination_stage_frames(spark: SparkSession, sf_dir: str) -> dict:
     # the tier linear in the corpus.
     exact = D.decontaminate_ngram(
         train, eval_df, n=_DECON_N, train_grams=tg, eval_grams=eg
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     bloom = D.decontaminate_bloom(
         train, eval_df, n=_DECON_N, train_grams=tg, eval_grams=eg
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     sem = S.semantic_decontaminate(
         e,
         F.col("vec_id") % _DECON_EVAL_MOD == 0,
         threshold=_DECON_SEM_THRESHOLD,
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     lex = F.col("contaminated")
     sema = F.coalesce(F.col("semantic_flagged"), F.lit(False))
     blo = F.col("bloom_flagged")

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from streamprocessing_kafka_finlight_news_dashboard_spark.plans.catalog import query
+from streamprocessing_kafka_finlight_news_dashboard_spark.session import materialize
 from streamprocessing_kafka_finlight_news_dashboard_spark.sources.tables import load_table
 
 
@@ -357,7 +358,7 @@ def events_session_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         gapped.withColumn("session_id", F.sum("is_new_session").over(wrun))
         .groupBy("user_id", "session_id")
         .agg(F.min("ts").alias("s_start"), F.max("ts").alias("s_end"))
-        .localCheckpoint(eager=False)  # feeds both sides of the self-join
+        .transform(materialize)  # feeds both sides of the self-join
     )
     banded = sessions.select(
         "user_id",
@@ -561,7 +562,7 @@ def activity_stage_frames(spark: SparkSession, sf_dir: str) -> dict:
         )
         # ONE materialization: per-user stats, both overlap self-join
         # sides, and the retention branch all read this relation.
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     user_sess = (
         sessions.groupBy("user_id")
@@ -574,7 +575,7 @@ def activity_stage_frames(spark: SparkSession, sf_dir: str) -> dict:
             F.date_trunc("week", F.min("s_start")).alias("cohort_week"),
         )
         # consumed by the final manifest AND the retention join
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     # stage 2: hour-bucket banded interval-overlap (the scalable form
     # of the oracle's pure range self-join; same machinery as
@@ -802,7 +803,7 @@ def events_drift_trend_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("week", F.col("ts")).cast("date").alias("wk"),
         F.col("value").cast("double").alias("value"),
         F.hour("ts").cast("double").alias("hour"),
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     # feats is checkpointed (narrow 3-col) because the min-week scalar
     # below would otherwise re-run the events scan INSIDE the tagged
     # materialization — the executed-scan audit showed 2 events passes
@@ -815,7 +816,7 @@ def events_drift_trend_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # before-dump for what is a 2-pass computation. One lazy
     # localCheckpoint of the narrow (wk, value, hour) relation runs
     # the scan/min-week once (guide §1.2/§2.4).
-    tagged = feats.crossJoin(F.broadcast(w0)).localCheckpoint(eager=False)
+    tagged = feats.crossJoin(F.broadcast(w0)).transform(materialize)
     base = tagged.filter(F.col("wk") == F.col("w0")).drop("wk", "w0")
     curw = tagged.filter(F.col("wk") > F.col("w0")).drop("w0")
     edges, base_counts = X.drift_reference(base, features)

@@ -1,4 +1,4 @@
-"""SparkSession factory.
+"""SparkSession factory, and the one way the package materializes a frame.
 
 The reference is strict about tz-aware UTC timestamps
 (reference scripts/04_correlation_analysis.py:20, 07_backtest.py:180-182),
@@ -9,13 +9,23 @@ Scale posture: AQE on (runtime partition coalescing + skew-join
 handling), Arrow on (vectorized pandas-UDF exchange), shuffle
 partitions sized by env for local runs but meant to be overridden to
 ~2-3x total cores on a real cluster.
+
+Every frame the package materializes goes through :func:`materialize`
+(a local checkpoint) or :func:`persisted` (an in-memory cache). Inside a
+:func:`released` scope each such frame is recorded and its blocks are
+freed when the scope ends; outside any scope nothing is recorded and the
+blocks live until the session drops them, as a plain
+``localCheckpoint``/``persist`` would.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -72,3 +82,52 @@ def shuffle_partitions(spark: SparkSession, default: int = 32) -> int:
             return spark.sparkContext.defaultParallelism or default
         except Exception:  # pragma: no cover - no active context
             return default
+
+
+# one stack of open scopes per thread: foreachBatch callbacks run on
+# their own threads, so a micro-batch's scope never mixes with the
+# caller's
+_scopes = threading.local()
+
+
+def _record(df: DataFrame, free: Callable[[], object]) -> DataFrame:
+    stack = getattr(_scopes, "stack", None)
+    if stack:
+        stack[-1].append(free)
+    return df
+
+
+def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
+    """``df.localCheckpoint(eager)``, freed when the enclosing
+    :func:`released` scope ends. ``DataFrame.unpersist()`` does not free
+    checkpoint blocks: they belong to the RDD under the checkpoint's
+    ``LogicalRDD``, so that RDD is the one unpersisted."""
+    out = df.localCheckpoint(eager=eager)
+    return _record(
+        out, lambda: out._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    )
+
+
+def persisted(df: DataFrame) -> DataFrame:
+    """``df.persist()``, freed when the enclosing :func:`released` scope
+    ends. The cache matches frames by plan, so a stale entry for the same
+    plan (the same files, since rewritten at the same paths) is dropped
+    first; the frame is then computed from what is on disk now. Use it
+    over :func:`materialize` where the plan above must stay visible."""
+    df.unpersist()
+    return _record(df.persist(), df.unpersist)
+
+
+@contextmanager
+def released() -> Iterator[None]:
+    """Free every frame materialized inside the block when it exits.
+    Every action on such a frame must run inside the block: a
+    checkpointed frame used after it fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``."""
+    stack = _scopes.__dict__.setdefault("stack", [])
+    stack.append([])
+    try:
+        yield
+    finally:
+        for free in reversed(stack.pop()):
+            free()

@@ -57,6 +57,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from streamprocessing_kafka_finlight_news_dashboard_spark.session import materialize, persisted, released
 from streamprocessing_kafka_finlight_news_dashboard_spark.streaming import ledger as L
 
 __all__ = [
@@ -151,7 +152,7 @@ def write_stream_curation_pipeline(
             shingle_rows_arrow(eval_docs, n=decontaminate_n)
             .select("shingle")
             .distinct()
-            .localCheckpoint(eager=True)
+            .transform(materialize, eager=True)
         )
     frozen_edges = None
     if drift_edges is not None:
@@ -164,7 +165,7 @@ def write_stream_curation_pipeline(
             raise ValueError(
                 "drift_edges requires drift_features and drift_annotate"
             )
-        frozen_edges = drift_edges.localCheckpoint(eager=True)
+        frozen_edges = materialize(drift_edges, eager=True)
         edge_feats = {r.feature for r in frozen_edges.select("feature").collect()}
         if edge_feats != set(drift_features):
             raise ValueError(
@@ -196,9 +197,9 @@ def write_stream_curation_pipeline(
 
     def write(batch_df: DataFrame, part_val: str) -> bool:
         spark = batch_df.sparkSession
-        batch = batch_df.persist()
-        pinned = [batch]  # persisted frames released in finally
-        try:
+        # every frame the batch materializes is freed when it returns
+        with released():
+            batch = persisted(batch_df)
             if not len(batch.take(1)):
                 return False
             # ---- stage -1: URL gate (frozen rates + seen-canon store)
@@ -221,8 +222,7 @@ def write_stream_curation_pipeline(
                 dup = F.col("__dup") | F.col("__seen").isNotNull()
             else:
                 dup = F.col("__dup")
-            marked = marked.persist()
-            pinned.append(marked)
+            marked = persisted(marked)
             funnel_stages: list[tuple[int, str, DataFrame]] = [
                 (0, "raw", batch)
             ]
@@ -258,16 +258,13 @@ def write_stream_curation_pipeline(
                 banned_re=r"(^| )dup( |$)",
             ).select("doc_id", "lang", F.col("clean_text").alias("text"))
             n_tok = F.size(X.tokens(F.col("text")))
-            kept = (
+            kept = persisted(
                 d_lf.filter(
                     (F.trim("text") != "")
                     & n_tok.between(5, 10000)
                     & F.col("lang").isin("en", "de", "fr", "es", "it")
-                )
-                .select("doc_id", "lang", "text")
-                .persist()
+                ).select("doc_id", "lang", "text")
             )
-            pinned.append(kept)
             funnel_stages.append((2, "line_quality_gate", kept))
             # ---- stage 0.5: repetition gate (per-doc)
             rep_ok = (
@@ -290,7 +287,7 @@ def write_stream_curation_pipeline(
                 clean = rkept.join(dirty, "doc_id", "left_anti")
             else:
                 clean = rkept
-            clean = clean.localCheckpoint(eager=False)
+            clean = materialize(clean)
             funnel_stages.append((4, "decontaminate", clean))
             # ---- stage 1.75: incremental ExactSubstr cut (span store)
             seen_spans = L.read_others(spark, paths["spans"], part_val, _FAMILY_SCHEMAS["spans"])
@@ -303,7 +300,7 @@ def write_stream_curation_pipeline(
             cutdocs = (
                 cut.filter(F.trim("clean_text") != "")
                 .select("doc_id", "lang", F.col("clean_text").alias("text"))
-                .localCheckpoint(eager=False)
+                .transform(materialize)
             )
             funnel_stages.append((5, "substring_cut", cutdocs))
             new_spans = DD.substring_window_keys(clean, k=substr_k)
@@ -334,9 +331,7 @@ def write_stream_curation_pipeline(
             else:
                 canon0 = fped.filter(F.col("doc_id") == F.col("__min_id"))
                 new_fps = fped.select("fp").distinct()
-            canon0 = canon0.select("doc_id", "lang", "text").localCheckpoint(
-                eager=False
-            )
+            canon0 = canon0.select("doc_id", "lang", "text").transform(materialize)
             funnel_stages.append((6, "exact_dedup", canon0))
             # ---- stage 3: near-dup LSH into the canonical store
             merge_canonical_docs(
@@ -354,12 +349,10 @@ def write_stream_curation_pipeline(
             # one persisted frame feeds every stats family (mixture +
             # domains' sibling + drift each run their own write action;
             # without the pin each re-scans the just-written partition)
-            kept_final = (
+            kept_final = persisted(
                 spark.read.schema("doc_id long, lang string, text string")
                 .parquet(L.partition_path(paths["docs"], part_val))
-                .persist()
             )
-            pinned.append(kept_final)
             funnel_stages.append((7, "lsh_cluster_canon", kept_final))
             mixture_partial = X.mixture_stats_partial(kept_final)
             # ---- per-stage survivor counts: the streaming twin of the
@@ -446,9 +439,6 @@ def write_stream_curation_pipeline(
             # intersecting with the main ledger
             L.commit(L.ledger_dir(stats_dir), part_val)
             return True
-        finally:
-            for frame in pinned:
-                frame.unpersist()
 
     return L.start_writer(docs_stream, store, checkpoint_dir, heal, write)
 

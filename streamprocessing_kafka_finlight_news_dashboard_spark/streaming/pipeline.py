@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from streamprocessing_kafka_finlight_news_dashboard_spark.session import materialize, persisted, released
 from streamprocessing_kafka_finlight_news_dashboard_spark.streaming import ledger as L
 
 # Explicit schema — never infer on a stream (SURVEY §1.3: the new
@@ -303,8 +304,8 @@ def write_stream_upsert_parquet(
         # (which gates the full-table rewrite) and the merge itself then
         # share ONE source read instead of the probe re-triggering the
         # micro-batch source scan (round-11 verdict nit).
-        new = batch_df.persist()
-        try:
+        with released():
+            new = persisted(batch_df)
             if not len(new.take(1)):
                 return
             if os.path.exists(table):
@@ -328,8 +329,6 @@ def write_stream_upsert_parquet(
                 shutil.move(table, backup)
             shutil.move(tmp, table)
             shutil.rmtree(backup, ignore_errors=True)
-        finally:
-            new.unpersist()
 
     return (
         stream_df.writeStream.foreachBatch(merge_batch)
@@ -987,8 +986,8 @@ def write_stream_dedup_canonical(
         # candidate pass, the signature pass and the two writes all
         # consume batch_df — without the persist each re-triggers the
         # micro-batch source read (round-11 verdict nit).
-        batch_df = batch_df.persist()
-        try:
+        with released():
+            batch_df = persisted(batch_df)
             if not len(batch_df.take(1)):
                 return False
             merge_canonical_docs(
@@ -1001,8 +1000,6 @@ def write_stream_dedup_canonical(
                 max_bucket=max_bucket,
             )
             return True
-        finally:
-            batch_df.unpersist()
 
     return L.start_writer(
         docs_stream,
@@ -1097,7 +1094,7 @@ def write_stream_text_stats(
         # mid-stream would re-bin within an epoch.
         if not drift_features:
             raise ValueError("drift_edges requires drift_features")
-        frozen_edges = drift_edges.localCheckpoint(eager=True)
+        frozen_edges = materialize(drift_edges, eager=True)
         edge_feats = {r.feature for r in frozen_edges.select("feature").collect()}
         if edge_feats != set(drift_features):
             raise ValueError(
@@ -1184,8 +1181,8 @@ def write_stream_text_stats(
         # mixture/domains) each run their own action — without this
         # bracket every one re-triggers the micro-batch source scan
         # (same class of fix as the upsert and canonical-store sinks).
-        batch = batch_df.persist()
-        try:
+        with released():
+            batch = persisted(batch_df)
             if not len(batch.take(1)):
                 return False
             partials = {}
@@ -1227,8 +1224,6 @@ def write_stream_text_stats(
                     L.partition_path(os.path.join(store_dir, sub), part)
                 )
             return True
-        finally:
-            batch.unpersist()
 
     return L.start_writer(docs_stream, store_dir, checkpoint_dir, heal, write)
 

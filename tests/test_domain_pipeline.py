@@ -5,6 +5,7 @@ pandas re-implementation of the reference's documented formulas."""
 from __future__ import annotations
 
 import math
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -565,3 +566,60 @@ def test_buy_hold_benchmark_aligns_with_strategy(spark):
     assert (bh["bh_equity"] > 0).all()
     for _, grp in bh.groupby("user_id"):
         assert grp.sort_values("day")["bh_equity"].iloc[0] == _INITIAL_CAPITAL
+
+
+def test_backtest_rerun_reads_inputs_rewritten_at_same_paths(spark, tmp_path):
+    """The dashboard's "Run Backtest" flow: rewrite news/prices at the
+    SAME paths and rerun in the same session. Each run sits inside a
+    ``released()`` scope, and the rerun must return the rewritten data's
+    trades and metrics (those of a run on a fresh copy at other paths),
+    not the first run's cached simulation. No persisted RDD outlives a
+    run."""
+    from streamprocessing_kafka_finlight_news_dashboard_spark.session import released
+
+    def write(seed: int, d) -> None:
+        # one parquet file per table, replaced outside Spark (as the
+        # dashboard's pandas scripts do): a Spark overwrite would itself
+        # invalidate cached plans over the path
+        tickers = FX.TICKERS[:3]
+        frames = {
+            "prices": FX.make_prices(spark, n_days=120, seed=seed, tickers=tickers),
+            "news": FX.make_news(spark, n_articles=800, span_days=170, seed=seed + 100, tickers=tickers),
+        }
+        d.mkdir(exist_ok=True)
+        for name, df in frames.items():
+            staged = tmp_path / f"staged-{name}-{seed}"
+            df.coalesce(1).write.mode("overwrite").parquet(str(staged))
+            shutil.copy(next(staged.glob("part-*.parquet")), d / f"{name}.parquet")
+
+    def persisted_ids() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    def run(d) -> tuple[list, dict]:
+        before = persisted_ids()
+        with released():
+            prices = spark.read.parquet(str(d / "prices.parquet"))
+            news = spark.read.parquet(str(d / "news.parquet"))
+            scored = P.add_sentiment(P.dedup_articles_keep_last(news))
+            sig = P.generate_signals(
+                prices, scored, P.best_configs(P.lag_sweep(prices, scored, min_news=3, min_obs=5)),
+                sentiment_threshold=0.2, min_news_count=3, min_correlation=0.05,
+            )
+            trades, equity = P.run_backtest(
+                sig, prices, hold_period_hours=240, stop_loss_pct=0.05, take_profit_pct=0.20
+            )
+            rows = sorted(tuple(r) for r in trades.collect())
+            metrics = P.backtest_metrics(trades, equity).first().asDict()
+        assert not persisted_ids() - before, "a backtest run left persisted RDDs behind"
+        return rows, metrics
+
+    same, fresh = tmp_path / "same", tmp_path / "fresh"
+    write(1, same)
+    first = run(same)
+    write(2, same)
+    rerun = run(same)
+    write(2, fresh)
+    want = run(fresh)
+    assert first[0] and want[0], "fixture produced no trades"
+    assert first != want, "the two seeds give the same backtest"
+    assert rerun == want

@@ -3,9 +3,12 @@ sf0.001 (fast) — the same check the driver runs at sf0.01."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 
 from streamprocessing_kafka_finlight_news_dashboard_spark import plans
+from streamprocessing_kafka_finlight_news_dashboard_spark.session import released
 from tests.conftest import SF_SMOKE
 from tests.oracle_compare import compare, duckdb_conn
 
@@ -20,20 +23,39 @@ def con():
     c.close()
 
 
+def _persisted_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@contextmanager
+def no_block_outlives(spark):
+    """Run the block inside one ``released()`` scope; afterwards no RDD
+    persisted during it may still be registered. Ids, not counts: the
+    ContextCleaner may drop older RDDs at any moment."""
+    before = _persisted_ids(spark)
+    with released():
+        yield
+        created = _persisted_ids(spark) - before
+    leaked = created & _persisted_ids(spark)
+    assert not leaked, f"persisted RDDs outlived the query's scope: {sorted(leaked)}"
+
+
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_oracle_match(spark, con, name):
     q = plans.CATALOG[name]
-    spark_df = q.builder(spark, SF_SMOKE)
-    oracle_df = con.execute(q.oracle).fetchdf()
-    problems = compare(spark_df, oracle_df)
+    with no_block_outlives(spark):
+        spark_df = q.builder(spark, SF_SMOKE)
+        oracle_df = con.execute(q.oracle).fetchdf()
+        problems = compare(spark_df, oracle_df)
     assert not problems, f"{name}: " + "; ".join(problems)
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
 def test_rows_only_runs(spark, name):
     q = plans.CATALOG[name]
-    df = q.builder(spark, SF_SMOKE)
-    assert df.count() >= 0
+    with no_block_outlives(spark):
+        df = q.builder(spark, SF_SMOKE)
+        assert df.count() >= 0
     assert len(df.columns) > 0
 
 

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from streamprocessing_kafka_finlight_news_dashboard_spark import get_spark
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import similarity as S
+from streamprocessing_kafka_finlight_news_dashboard_spark.session import materialize
 from streamprocessing_kafka_finlight_news_dashboard_spark.sources.tables import load_table
 
 K = 5
@@ -160,7 +161,7 @@ def main() -> int:
     # warm the Python worker pool so the first Arrow tier isn't charged
     # the ~3 s fork cost (same warmup bench.py applies)
     spark.range(0, 1000, 1, 32).mapInPandas(lambda it: it, "id long").count()
-    e = load_table(spark, sf_dir, "embeddings").localCheckpoint(eager=True)
+    e = load_table(spark, sf_dir, "embeddings").transform(materialize, eager=True)
     n = e.count()
     print(f"# ANN tier report — {sf_dir} ({n} vectors, {len(QUERY_IDS)} queries, k={K})")
     print("| tier | recall@5 | wall s |")
@@ -168,7 +169,7 @@ def main() -> int:
     for label, dt, rec in tier_recalls(spark, e, QUERY_IDS, K):
         print(f"| {label} | {rec:.2f} | {dt:.2f} |")
 
-    pc = planted_corpus(spark).localCheckpoint(eager=True)
+    pc = planted_corpus(spark).transform(materialize, eager=True)
     pq = [c * 6 for c in range(8)]
     print()
     print(

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from streamprocessing_kafka_finlight_news_dashboard_spark import get_spark
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import dedup as D
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import similarity as S
+from streamprocessing_kafka_finlight_news_dashboard_spark.session import materialize
 from streamprocessing_kafka_finlight_news_dashboard_spark.sources.tables import load_table
 
 MINHASH_CONFIGS = [(16, 4), (32, 4), (32, 8), (64, 16)]  # (num_hashes, bands)
@@ -52,7 +53,7 @@ def exact_jaccard(docs) -> dict[tuple[int, int], float]:
 def exact_cosine_pairs(emb, threshold: float) -> dict[tuple[int, int], float]:
     base = emb.select(
         F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("v")
-    ).localCheckpoint(eager=True)
+    ).transform(materialize, eager=True)
     a = base.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
     b = base.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
     pairs = (
@@ -125,7 +126,7 @@ def main() -> None:
         "|---|---|---|" + "---|" * len(COS_THRESHOLDS) + "\n",
     ]
     for bits in SIGNLSH_BITS:
-        b = S.sign_lsh_bands(emb, n_bands=4, band_bits=bits).localCheckpoint(eager=True)
+        b = S.sign_lsh_bands(emb, n_bands=4, band_bits=bits).transform(materialize, eager=True)
         left = b.select(F.col("vid").alias("id_a"), "band", "bkey")
         right = b.select(F.col("vid").alias("id_b"), "band", "bkey")
         cand = {

@@ -18,6 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from streamprocessing_kafka_finlight_news_dashboard_spark import get_spark, plans
+from streamprocessing_kafka_finlight_news_dashboard_spark.session import released
 from tests.oracle_compare import compare, duckdb_conn
 
 
@@ -39,18 +40,19 @@ def main() -> int:
         q = plans.CATALOG[name]
         tq = time.perf_counter()
         try:
-            if q.oracle is None:
-                n = q.builder(spark, args.sf).count()
-                status = f"rows-only ({n} rows)" + (" DEGENERATE" if n == 0 else "")
-                if n == 0:
-                    bad.append(name)
-                n_rows_only += 1
-            else:
-                issues = compare(q.builder(spark, args.sf), con.execute(q.oracle).df())
-                status = "OK" if not issues else f"MISMATCH {issues}"
-                if issues:
-                    bad.append(name)
-                n_oracle += 1
+            with released():
+                if q.oracle is None:
+                    n = q.builder(spark, args.sf).count()
+                    status = f"rows-only ({n} rows)" + (" DEGENERATE" if n == 0 else "")
+                    if n == 0:
+                        bad.append(name)
+                    n_rows_only += 1
+                else:
+                    issues = compare(q.builder(spark, args.sf), con.execute(q.oracle).df())
+                    status = "OK" if not issues else f"MISMATCH {issues}"
+                    if issues:
+                        bad.append(name)
+                    n_oracle += 1
         except Exception as e:  # noqa: BLE001 — report, keep sweeping
             status = f"ERROR {type(e).__name__}: {str(e)[:300]}"
             bad.append(name)

@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from streamprocessing_kafka_finlight_news_dashboard_spark import get_spark
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import dedup as D
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import text as X
+from streamprocessing_kafka_finlight_news_dashboard_spark.session import materialize
 from streamprocessing_kafka_finlight_news_dashboard_spark.sources.tables import load_table
 
 
@@ -297,7 +298,7 @@ def emb_main(mult: int) -> None:
     spark.range(0, 1000, 1, 32).mapInPandas(lambda it: it, "id long").count()
 
     for m in (1, mult):
-        emb = scaled_embeddings(spark, sf_dir, m).localCheckpoint(eager=True)
+        emb = scaled_embeddings(spark, sf_dir, m).transform(materialize, eager=True)
         n = emb.count()
         # cell count grows with the corpus → constant cell width
         # (~100): SemDeDup's own scaling contract for the quadratic
@@ -409,9 +410,9 @@ def r14ops_main(mults: tuple[int, ...]) -> None:
     spark = get_spark(app_name="scale-smoke-r14ops")
     spark.range(0, 1000, 1, 32).mapInPandas(lambda it: it, "id long").count()
     for m in mults:
-        docs = scaled_docs(spark, sf_dir, m).localCheckpoint(eager=True)
-        events = scaled_events(spark, sf_dir, m).localCheckpoint(eager=True)
-        embs = scaled_embeddings(spark, sf_dir, m).localCheckpoint(eager=True)
+        docs = scaled_docs(spark, sf_dir, m).transform(materialize, eager=True)
+        events = scaled_events(spark, sf_dir, m).transform(materialize, eager=True)
+        embs = scaled_embeddings(spark, sf_dir, m).transform(materialize, eager=True)
         print(
             f"\n=== x{m}: docs={docs.count()} events={events.count()} "
             f"vecs={embs.count()} ===",
@@ -516,7 +517,7 @@ def main() -> None:
     spark.range(0, 1000, 1, 32).mapInPandas(lambda it: it, "id long").count()
 
     for m in (1, mult):
-        docs = scaled_docs(spark, sf_dir, m).localCheckpoint(eager=True)
+        docs = scaled_docs(spark, sf_dir, m).transform(materialize, eager=True)
         n = docs.count()
         print(f"\n=== corpus × {m} = {n} docs ===", flush=True)
         for label, thunk in [

@@ -4,7 +4,8 @@ it once and read the SQL UI store for EVERY execution it triggered
 plan audit cannot see), summing each parquet scan node's actual
 "number of output rows" per table. scanned_rows / table_rows = the
 query's true corpus-pass multiplicity — a value far above the
-algorithm's pass count means a duplicate subtree is executing.
+algorithm's pass count means a duplicate subtree is executing. The
+last column is the number of Spark jobs the query ran.
 
 Run: python tools/scan_multiplicity_audit.py [NAME ...]   (default: bench HEADLINE)
 """
@@ -19,6 +20,7 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from streamprocessing_kafka_finlight_news_dashboard_spark import get_spark, plans
+from streamprocessing_kafka_finlight_news_dashboard_spark.session import released
 
 
 def main() -> int:
@@ -63,14 +65,17 @@ def main() -> int:
     spark.range(0, 1000, 1, 32).mapInPandas(lambda it: it, "id long").count()
 
     next_id = (executions(0)[-1] + 1) if executions(0) else 0
-    print("query\ttable\tscan_nodes\tscanned_rows\tmultiplicity")
+    print("query\ttable\tscan_nodes\tscanned_rows\tmultiplicity\tjobs")
     for name in names:
         q = plans.CATALOG[name]
+        spark.sparkContext.setJobGroup(f"audit-{name}", name)
         try:
-            q.builder(spark, sf_dir).count()
+            with released():
+                q.builder(spark, sf_dir).count()
         except Exception as exc:  # keep auditing the rest
             print(f"{name}\tERR\t{type(exc).__name__}")
             continue
+        jobs = len(spark.sparkContext.statusTracker().getJobIdsForGroup(f"audit-{name}"))
         per_table: dict[str, list[int]] = {}
         ids = executions(next_id)
         next_id = (ids[-1] + 1) if ids else next_id
@@ -102,7 +107,7 @@ def main() -> int:
             tot = sum(rows_list)
             denom = tables.get(table)
             mult = f"{tot / denom:.1f}" if denom else "?"
-            print(f"{name}\t{table}\t{len(rows_list)}\t{tot}\t{mult}", flush=True)
+            print(f"{name}\t{table}\t{len(rows_list)}\t{tot}\t{mult}\t{jobs}", flush=True)
     return 0
 
 
