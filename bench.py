@@ -1,11 +1,15 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
+    python bench.py [NAME...]   # named catalog queries instead of HEADLINE
+
 Output: the full per-query map is written to BENCH_detail.json beside
 this script and printed as ≤900-char JSON chunk lines; the FINAL stdout
 line is a compact JSON object {"metric", "value", "unit", "sf",
 "n_queries", "runs"} that fits a bounded tail capture. Diagnostics go
-to stderr.
+to stderr. BENCH_detail.json also carries each query's best-run
+``measure.Record`` (jobs, SQL executions, scan rows and multiplicity
+per table).
 
 Each query is fully materialized via a count-ish action (collect for
 small results) so the measured time includes the whole plan, not just
@@ -14,14 +18,16 @@ planning.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
-import time
+from dataclasses import asdict
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from streamprocessing_kafka_finlight_news_dashboard_spark import get_spark, plans
+from streamprocessing_kafka_finlight_news_dashboard_spark.measure import measured
 from streamprocessing_kafka_finlight_news_dashboard_spark.session import released
 
 # Headline set: one per operator family — the flagship PIT join, a
@@ -129,6 +135,12 @@ HEADLINE = [
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("names", nargs="*", help="catalog queries (default: HEADLINE)")
+    names = ap.parse_args().names or HEADLINE
+    unknown = [n for n in names if n not in plans.CATALOG]
+    if unknown:
+        ap.error(f"unknown catalog queries: {unknown}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # Console progress bars (`\r[Stage …]`) are pure noise in a batch
@@ -165,24 +177,30 @@ def main() -> None:
     # host noise (load rose under it) vs a real regression (load flat).
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
     timings: dict[str, float] = {}
-    for name in HEADLINE:
+    records: dict[str, dict] = {}
+    for name in names:
         q = plans.CATALOG[name]
         best, n = None, 0
         load0 = os.getloadavg()[0]
         for _ in range(runs):
             # the query's checkpoints and caches are freed after each
-            # run, outside the timed span
-            with released():
-                t0 = time.perf_counter()
+            # run, and its counters read, outside the timed span
+            with released(), measured(spark) as rec:
                 n = q.builder(spark, sf_dir).count()
-                dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        timings[name] = round(best, 3)
+            if best is None or rec.wall_s < best.wall_s:
+                best = rec
+        timings[name] = best.wall_s = round(best.wall_s, 3)
+        records[name] = asdict(best)
         dload = os.getloadavg()[0] - load0
+        scans = " ".join(
+            f"{t}={r}({best.multiplicity.get(t, '?')}x)"
+            for t, r in best.scan_rows.items()
+        )
         print(
             f"# {name}: {timings[name]}s ({n} rows)"
             + (f" [min of {runs}]" if runs > 1 else "")
-            + f" [load delta {dload:+.1f}]",
+            + f" [load delta {dload:+.1f}]"
+            + f" jobs={best.jobs} sql={best.sql_executions} scans: {scans}",
             file=sys.stderr,
         )
 
@@ -203,6 +221,7 @@ def main() -> None:
         "queries": timings,
         "sf": sf_val,
         "runs": runs,
+        "records": records,
     }
     try:
         with open(

@@ -199,7 +199,6 @@ def decontaminate_ngram(
     n: int = 4,
     text_col: str = "text",
     id_col: str = "doc_id",
-    tier: str = "jvm",
     train_grams: DataFrame | None = None,
     eval_grams: DataFrame | None = None,
 ) -> DataFrame:
@@ -214,35 +213,23 @@ def decontaminate_ngram(
     its distinct n-gram set is broadcast — the training corpus
     streams through a broadcast hash join with NO corpus-side
     shuffle except the per-document overlap count, keyed by doc id
-    (uniform). Both sides shingle via :func:`shingle_rows` (explicit
-    pre-explode repartition; distinct grams per doc).
+    (uniform). Both sides shingle via the Arrow gram builder
+    (arrow_docs.shingle_rows_arrow, bit-exact with :func:`shingle_rows`:
+    distinct grams per doc, no codegen compile or per-doc window
+    shuffle).
 
     Returns one row per TRAINING document: (id, n_grams,
     n_contaminated_grams, contamination_ratio, contaminated) —
     ``contaminated`` is the any-collision flag; filter on it (or on a
     ratio threshold) to produce the clean corpus.
 
-    ``tier='arrow'`` swaps the shingle grain for the bit-exact
-    mapInPandas twin (arrow_docs.shingle_rows_arrow) — same strings,
-    no codegen compile or per-doc window shuffle; the join and counts
-    are unchanged, so the DuckDB oracle holds for either tier.
-
     ``train_grams`` / ``eval_grams`` (the (id, shingle) grain and the
     distinct eval-shingle set) let a composed audit share ONE
     checkpointed gram pass across the exact and Bloom tiers instead
-    of shingling the corpus once per tier; when provided, ``tier``
-    and the text columns are ignored.
+    of shingling the corpus once per tier; when provided, the text
+    columns are ignored.
     """
-    if tier == "arrow":
-        from streamprocessing_kafka_finlight_news_dashboard_spark.operators.arrow_docs import shingle_rows_arrow
-
-        def grams(df: DataFrame) -> DataFrame:
-            return shingle_rows_arrow(df, text_col, id_col, n)
-
-    else:
-
-        def grams(df: DataFrame) -> DataFrame:
-            return shingle_rows(df, text_col, id_col, n)
+    from streamprocessing_kafka_finlight_news_dashboard_spark.operators.arrow_docs import shingle_rows_arrow
 
     # ONE pass over the train grams: a LEFT broadcast join marks each
     # gram's eval-collision, and a single doc-keyed groupBy computes
@@ -252,11 +239,11 @@ def decontaminate_ngram(
     # the full shingle pipeline executed twice (the same re-evaluation
     # cost the curation pipeline documents).
     if train_grams is None:
-        train_grams = grams(train)
+        train_grams = shingle_rows_arrow(train, text_col, id_col, n)
     else:
         _assert_gram_n(train_grams, n, "train_grams")
     if eval_grams is None:
-        eval_grams = grams(eval_df).select("shingle").distinct()
+        eval_grams = shingle_rows_arrow(eval_df, text_col, id_col, n).select("shingle").distinct()
     else:
         _assert_gram_n(eval_grams, n, "eval_grams")
     marked = train_grams.join(
@@ -283,7 +270,6 @@ def ngram_leakage_audit(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_gram_docs: int = 1000,
-    tier: str = "jvm",
 ) -> DataFrame:
     """Split-leakage audit: for every TEST document, how much of it
     leaks into the TRAIN split through exact token n-gram collisions —
@@ -311,25 +297,12 @@ def ngram_leakage_audit(
     text yield no shingle rows and are ABSENT from the output (they
     have no gram universe to leak; this matches the DuckDB oracle,
     which unnests the same empty set — r10 ADVICE asked this be
-    documented rather than changed)."""
-    if tier not in ("jvm", "arrow"):
-        raise ValueError(
-            f"ngram_leakage_audit: unknown tier {tier!r} (expected "
-            "'jvm' or 'arrow') — refusing to silently fall back"
-        )
-    if tier == "arrow":
-        from streamprocessing_kafka_finlight_news_dashboard_spark.operators.arrow_docs import shingle_rows_arrow
+    documented rather than changed). Both sides shingle via the Arrow
+    gram builder (arrow_docs.shingle_rows_arrow)."""
+    from streamprocessing_kafka_finlight_news_dashboard_spark.operators.arrow_docs import shingle_rows_arrow
 
-        def grams(df: DataFrame) -> DataFrame:
-            return shingle_rows_arrow(df, text_col, id_col, n)
-
-    else:
-
-        def grams(df: DataFrame) -> DataFrame:
-            return shingle_rows(df, text_col, id_col, n)
-
-    tg = grams(test).transform(materialize)
-    pg = grams(train).transform(materialize)
+    tg = shingle_rows_arrow(test, text_col, id_col, n).transform(materialize)
+    pg = shingle_rows_arrow(train, text_col, id_col, n).transform(materialize)
     capped = (
         pg.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("_df"))

@@ -2311,7 +2311,7 @@ def doc_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     eval_df = d.filter(F.col("doc_id") % 97 == 0)
     train = d.filter(F.col("doc_id") % 97 != 0)
-    return D.decontaminate_ngram(train, eval_df, n=4, tier="arrow")
+    return D.decontaminate_ngram(train, eval_df, n=4)
 
 
 @query(
@@ -2391,7 +2391,6 @@ def doc_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         split.filter(F.col("bucket") < 80),
         split.filter(F.col("bucket") >= 90),
         n=4,
-        tier="arrow",
     )
 
 

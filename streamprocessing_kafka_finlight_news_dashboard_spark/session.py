@@ -101,10 +101,13 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
     """``df.localCheckpoint(eager)``, freed when the enclosing
     :func:`released` scope ends. ``DataFrame.unpersist()`` does not free
     checkpoint blocks: they belong to the RDD under the checkpoint's
-    ``LogicalRDD``, so that RDD is the one unpersisted."""
+    ``LogicalRDD``, so that RDD is the one unpersisted. The scope also
+    holds ``df`` until it ends: a lazy checkpoint's scans run inside a
+    later SQL execution, and :mod:`measure` reads their row counts from
+    the metrics of ``df``'s plan."""
     out = df.localCheckpoint(eager=eager)
     return _record(
-        out, lambda: out._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        out, lambda: (df, out._jdf.queryExecution().analyzed().rdd().unpersist(False))
     )
 
 

@@ -61,3 +61,10 @@ def plan_fingerprint(df) -> dict[str, int]:
     if single:
         counts["exchange_single"] = single
     return counts
+
+
+def query_profile(rec) -> dict:
+    """The pinned part of a :class:`measure.Record`: SQL executions and
+    scan rows per table. Jobs stay out: under AQE their count can depend
+    on the core count."""
+    return {"sql_executions": rec.sql_executions, "scan_rows": rec.scan_rows}

@@ -1,16 +1,24 @@
 """Every catalog query with an oracle must hash-match DuckDB at
-sf0.001 (fast) — the same check the driver runs at sf0.01."""
+sf0.001 (fast) — the same check the driver runs at sf0.01.
+
+Every catalog query must also run the SQL executions and scan the rows
+per table pinned in tests/data/query_profiles.json, so a subtree that
+executes twice or an extra collect fails here."""
 
 from __future__ import annotations
 
+import json
+import os
 from contextlib import contextmanager
 
 import pytest
 
 from streamprocessing_kafka_finlight_news_dashboard_spark import plans
+from streamprocessing_kafka_finlight_news_dashboard_spark.measure import measured
 from streamprocessing_kafka_finlight_news_dashboard_spark.session import released
 from tests.conftest import SF_SMOKE
 from tests.oracle_compare import compare, duckdb_conn
+from tests.plan_fingerprint import query_profile
 
 ORACLE_QUERIES = sorted(n for n, q in plans.CATALOG.items() if q.oracle is not None)
 ROWS_ONLY_QUERIES = sorted(n for n, q in plans.CATALOG.items() if q.oracle is None)
@@ -21,6 +29,19 @@ def con():
     c = duckdb_conn(SF_SMOKE)
     yield c
     c.close()
+
+
+@pytest.fixture(scope="module")
+def profiles():
+    with open(os.path.join(os.path.dirname(__file__), "data", "query_profiles.json")) as fh:
+        return json.load(fh)
+
+
+def assert_profile(profiles, name, rec):
+    assert query_profile(rec) == profiles[name], (
+        f"{name}: execution profile {query_profile(rec)} != pinned {profiles[name]} "
+        "(regenerate tests/data/query_profiles.json via tools/dump_plans.py if intentional)"
+    )
 
 
 def _persisted_ids(spark) -> set[int]:
@@ -41,22 +62,34 @@ def no_block_outlives(spark):
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
-def test_oracle_match(spark, con, name):
+def test_oracle_match(spark, con, profiles, name):
     q = plans.CATALOG[name]
-    with no_block_outlives(spark):
+    with no_block_outlives(spark), measured(spark) as rec:
         spark_df = q.builder(spark, SF_SMOKE)
         oracle_df = con.execute(q.oracle).fetchdf()
         problems = compare(spark_df, oracle_df)
     assert not problems, f"{name}: " + "; ".join(problems)
+    assert_profile(profiles, name, rec)
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
-def test_rows_only_runs(spark, name):
+def test_rows_only_runs(spark, profiles, name):
     q = plans.CATALOG[name]
-    with no_block_outlives(spark):
+    with no_block_outlives(spark), measured(spark) as rec:
         df = q.builder(spark, SF_SMOKE)
         assert df.count() >= 0
     assert len(df.columns) > 0
+    assert_profile(profiles, name, rec)
+
+
+def test_measured_names_scanned_tables(spark):
+    """The record names each scanned table from the scan node's own
+    Location and counts one SQL execution for a single-action query."""
+    with measured(spark) as rec:
+        plans.CATALOG["q3_shipping_priority"].builder(spark, SF_SMOKE).count()
+    assert rec.scan_rows == {"lineitem": 6000, "orders": 1500, "customer": 150}
+    assert rec.sql_executions == 1
+    assert rec.multiplicity == {"lineitem": 1.0, "orders": 1.0, "customer": 1.0}
 
 
 def test_coverage_doc_header_matches_catalog():

@@ -3,6 +3,9 @@ queries, kept in-repo as plan-quality regression artifacts (the
 assertable invariants live in tests/test_plan_quality.py; this file is
 the human-readable evidence trail).
 
+Also rewrites the two files the tests pin at sf0.001:
+tests/data/plan_fingerprints.json and tests/data/query_profiles.json.
+
 Run: python tools/dump_plans.py [sf_dir]
 """
 
@@ -14,6 +17,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from streamprocessing_kafka_finlight_news_dashboard_spark import get_spark, plans
+from streamprocessing_kafka_finlight_news_dashboard_spark.measure import measured
+from streamprocessing_kafka_finlight_news_dashboard_spark.session import released
 
 SNAPSHOT = [
     "pit_lookback_join",
@@ -147,7 +152,7 @@ def main() -> None:
     import json
 
     from tests.conftest import SF_SMOKE
-    from tests.plan_fingerprint import plan_fingerprint
+    from tests.plan_fingerprint import plan_fingerprint, query_profile
 
     fp_names = list(dict.fromkeys(list(SNAPSHOT) + list(plans.CATALOG)))
     fps = {}
@@ -158,6 +163,21 @@ def main() -> None:
         json.dump(fps, fh, indent=1, sort_keys=True)
         fh.write("\n")
     print("fingerprints written:", fp_path)
+
+    # Pinned execution profiles (tests/test_queries_oracle.py measures
+    # the same builder + action at SF_SMOKE): toPandas for an oracle
+    # query, as compare() collects it; count for a rows-only one.
+    profiles = {}
+    for name, q in plans.CATALOG.items():
+        with released(), measured(spark) as rec:
+            df = q.builder(spark, SF_SMOKE)
+            df.toPandas() if q.oracle is not None else df.count()
+        profiles[name] = query_profile(rec)
+    prof_path = os.path.join(repo, "tests", "data", "query_profiles.json")
+    with open(prof_path, "w") as fh:
+        json.dump(profiles, fh, indent=1, sort_keys=True)
+        fh.write("\n")
+    print("query profiles written:", prof_path)
     spark.stop()
 
 
