@@ -10,6 +10,7 @@ from streamprocessing_kafka_finlight_news_dashboard_spark.pipeline.features impo
     best_configs,
     forward_returns,
     lag_sweep,
+    lookback_per_day,
     sentiment_features,
 )
 from streamprocessing_kafka_finlight_news_dashboard_spark.pipeline.news import (
@@ -31,6 +32,7 @@ __all__ = [
     "forward_returns",
     "generate_signals",
     "lag_sweep",
+    "lookback_per_day",
     "run_backtest",
     "sentiment_distribution",
     "sentiment_features",

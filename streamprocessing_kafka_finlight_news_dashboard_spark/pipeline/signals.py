@@ -9,6 +9,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from streamprocessing_kafka_finlight_news_dashboard_spark.pipeline.features import (
+    lookback_join,
+    scored_articles,
+)
+
+
 def generate_signals(
     prices: DataFrame,
     news_scored: DataFrame,
@@ -25,10 +31,13 @@ def generate_signals(
 
     Single-pass formulation (same shape as features.lag_sweep): the
     tiny config table broadcasts onto the price spine, and ONE
-    article range-join uses each row's own ``cfg_lookback`` via
-    make_interval — no driver-side collect of the lookback set and no
-    per-lookback re-join, so the plan carries exactly one range join
-    regardless of how many configs are in play.
+    article range-join (``features.lookback_join``, banded by UTC day)
+    uses each row's own ``cfg_lookback`` — the lookback set is never
+    collected and there is no per-lookback re-join, so the plan carries
+    exactly one range join regardless of how many configs are in play.
+    Each bar is exploded into the day bins of its own window, so a
+    72 h config meets up to four days of articles and a 6 h one one
+    or two.
     """
     chosen = best.filter(F.abs(F.col("correlation")) >= min_correlation).select(
         "ticker",
@@ -37,20 +46,13 @@ def generate_signals(
         F.col("correlation").alias("cfg_corr"),
     )
     spine = prices.select("ticker", "date", "close").join(F.broadcast(chosen), "ticker")
-    articles = news_scored.select(
-        F.col("ticker_queried").alias("a_ticker"), "published_utc", "sentiment", "id"
-    )
     # Half-open window [date − cfg_lookback h, date) with the PER-ROW
     # lookback column (SURVEY §7.3: boundary semantics must match the
     # reference exactly — >= on the left, < on the right).
-    window_start = F.expr("date - make_interval(0, 0, 0, 0, cfg_lookback, 0, 0)")
     joined = (
-        spine.join(
-            articles,
-            (F.col("a_ticker") == F.col("ticker"))
-            & (F.col("published_utc") >= window_start)
-            & (F.col("published_utc") < F.col("date")),
-            "inner",
+        lookback_join(
+            spine, scored_articles(news_scored), ("ticker", "a_ticker"), "date", "published_utc",
+            F.col("cfg_lookback"),
         )
         .groupBy("ticker", "date", "close", "cfg_lookback", "cfg_lead", "cfg_corr")
         .agg(

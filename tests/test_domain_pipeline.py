@@ -74,6 +74,127 @@ def test_sentiment_features_match_pandas_loop(spark, domain):
         assert math.isclose(row.avg_sentiment, s, rel_tol=1e-9)
 
 
+def _utc(stamp: str) -> pd.Timestamp:
+    return pd.Timestamp(stamp, tz="UTC")
+
+
+# Window-edge frames for the day-banded lookback join: bars at 14:30
+# and at UTC midnight, and for each lookback the articles exactly at
+# the window start (kept) and 1 µs before it (dropped), exactly at the
+# bar (dropped) and 1 µs before it (kept), on a UTC-midnight bin edge,
+# and with a null timestamp (dropped).
+_EDGE_BAR = _utc("2024-03-05 14:30")
+_EDGE_BARS = [
+    ("AAA", _EDGE_BAR),
+    ("AAA", _utc("2024-03-06 00:00")),
+    ("AAA", _utc("2024-03-07 14:30")),
+    ("AAA", _utc("2024-03-11 09:00")),
+    ("BBB", _EDGE_BAR),
+    ("AAA", None),
+]
+
+
+@pytest.fixture(scope="module")
+def edge_frames(spark):
+    one_us = pd.Timedelta(microseconds=1)
+    times = [_EDGE_BAR, _EDGE_BAR - one_us, _utc("2024-03-05 00:00"), _utc("2024-03-04 00:00"),
+             _utc("2024-03-06 00:00") - one_us, _utc("2024-03-06 00:00"), None]
+    for lb in (*P.features.DEFAULT_LOOKBACKS, 30):
+        start = _EDGE_BAR - pd.Timedelta(hours=lb)
+        times += [start, start - one_us]
+    arts = [
+        (f"a{i}", tk, None if t is None else t.to_pydatetime(), round(0.37 - 0.013 * i, 6))
+        for i, t in enumerate(times)
+        for tk in ("AAA", "BBB")
+        if tk == "AAA" or i % 3 == 0
+    ]
+    scored = spark.createDataFrame(
+        arts, "id string, ticker_queried string, published_utc timestamp, sentiment double"
+    )
+    prices = spark.createDataFrame(
+        [(tk, None if d is None else d.to_pydatetime(), 100.0 + i) for i, (tk, d) in enumerate(_EDGE_BARS)],
+        "ticker string, date timestamp, close double",
+    )
+    # the edges survive the trip into Spark: a UTC-midnight bin edge,
+    # the bar itself and 1 µs before it, a null timestamp
+    us = scored.select(F.unix_micros("published_utc").alias("us")).toPandas()["us"]
+    bar = _EDGE_BAR.value // 1000
+    assert (us % 86_400_000_000 == 0).any() and (us == bar).any() and (us == bar - 1).any()
+    assert us.isna().any()
+    return prices, scored
+
+
+def _window_loop(prices, scored, lookback_h) -> dict:
+    """The reference's aggregate_sentiment loop: per price row, the
+    articles of its ticker in [date − lookback_h, date)."""
+    news_pd = scored.toPandas()
+    out = {}
+    for row in prices.toPandas().itertuples():
+        w = news_pd[
+            (news_pd["ticker_queried"] == row.ticker)
+            & (news_pd["published_utc"] >= row.date - pd.Timedelta(hours=lookback_h))
+            & (news_pd["published_utc"] < row.date)
+        ]
+        out[(row.ticker, row.date)] = (w["sentiment"].mean() if len(w) else None, len(w))
+    return out
+
+
+@pytest.mark.parametrize("lookback_h", [6, 30, 72])
+def test_sentiment_features_window_edges_match_loop(spark, edge_frames, lookback_h):
+    prices, scored = edge_frames
+    got = P.sentiment_features(prices, scored, lookback_h, 1).toPandas()
+    want = {k: v for k, v in _window_loop(prices, scored, lookback_h).items() if v[1] >= 1}
+    assert len(got) == len(want)
+    for row in got.itertuples():
+        s, c = want[(row.ticker, row.date)]
+        assert row.news_count == c
+        assert math.isclose(row.avg_sentiment, s, rel_tol=1e-12)
+
+
+def test_lookback_per_day_window_edges_match_loop(spark, edge_frames):
+    """Every lookback's per-day count and mean at once, through the
+    sweep's LEFT join: a null-``date`` bar and bars with no article in
+    any window are kept with 0 counts."""
+    prices, scored = edge_frames
+    got = P.lookback_per_day(prices, scored).toPandas()
+    assert len(got) == len(_EDGE_BARS)
+    assert got["date"].isna().sum() == 1
+    for lb in P.features.DEFAULT_LOOKBACKS:
+        want = _window_loop(prices, scored, lb)
+        for row in got.itertuples():
+            s, c = want[(row.ticker, row.date)]
+            assert getattr(row, f"cnt_{lb}") == c, (lb, row)
+            got_s = getattr(row, f"sent_{lb}")
+            assert (s is None and pd.isna(got_s)) or math.isclose(got_s, s, rel_tol=1e-12), (lb, row)
+
+
+def test_generate_signals_per_row_lookback_window_edges(spark, edge_frames):
+    """``cfg_lookback`` is a per-row column and 30 h is no whole number
+    of day bins; each ticker's signal rows must equal the loop at its
+    own lookback."""
+    prices, scored = edge_frames
+    lookbacks = {"AAA": 30, "BBB": 6}
+    best = spark.createDataFrame(
+        [("AAA", 30, 1, 0.5), ("BBB", 6, 2, -0.5)],
+        "ticker string, lookback_hours int, lead_days int, correlation double",
+    )
+    got = P.generate_signals(
+        prices, scored, best, sentiment_threshold=0.1, min_news_count=1, min_correlation=0.25
+    ).toPandas()
+    want = {
+        k: v
+        for tk, lb in lookbacks.items()
+        for k, v in _window_loop(prices.filter(F.col("ticker") == tk), scored, lb).items()
+        if v[1] >= 1
+    }
+    assert len(got) == len(want) and len(want) > 0
+    for row in got.itertuples():
+        s, c = want[(row.ticker, row.date)]
+        assert row.lookback_hours == lookbacks[row.ticker]
+        assert row.news_count == c
+        assert math.isclose(row.sentiment, s, rel_tol=1e-12)
+
+
 def test_lag_sweep_single_pass_matches_direct_corr(spark, domain):
     """One cell of the 5x4 grid must equal a directly-computed
     pandas correlation of (lookback sentiment, forward return)."""

@@ -333,6 +333,55 @@ def test_equity_curve_windows_see_only_post_aggregation_rows(spark):
     assert unbounded_global_windows(P.equity_analytics(equity)) == []
 
 
+_EQUI_JOINS = ("BroadcastHashJoinExec", "ShuffledHashJoinExec", "SortMergeJoinExec")
+
+
+def equi_joins_filtering_on(df, column: str) -> list[tuple[str, str]]:
+    """(left keys, right keys) of every hash or sort-merge join in the
+    physical plan whose residual condition reads ``column``."""
+    found = []
+
+    def walk(node):
+        if node.getClass().getSimpleName() in _EQUI_JOINS:
+            cond = node.condition()
+            if cond.isDefined() and column in cond.get().toString():
+                found.append((node.leftKeys().toString(), node.rightKeys().toString()))
+        for c in _plan_children(node):
+            walk(c)
+
+    walk(df._jdf.queryExecution().sparkPlan())
+    return found
+
+
+def test_pipeline_article_joins_are_banded_by_day(spark):
+    """The article range joins of ``lag_sweep`` and ``generate_signals``
+    must carry the UTC-day bin (``features.lookback_join``) among their
+    equi-join keys, with the time range as the residual filter. Keyed
+    on the ticker alone, every bar is tested against all of its
+    ticker's articles: ~7.3 M candidate pairs per join at 5000 bars ×
+    30k articles, about 100× the pairs kept. Plans only, nothing runs."""
+    from streamprocessing_kafka_finlight_news_dashboard_spark import pipeline as P
+    from streamprocessing_kafka_finlight_news_dashboard_spark.pipeline import fixtures as FX
+
+    prices = FX.make_prices(spark, n_days=40, tickers=FX.TICKERS[:2])
+    news = FX.make_news(spark, n_articles=200, span_days=60, tickers=FX.TICKERS[:2])
+    scored = P.add_sentiment(P.dedup_articles_keep_last(news))
+    sweep = P.lag_sweep(prices, scored, min_news=3, min_obs=5)
+    sig = P.generate_signals(
+        prices, scored, P.best_configs(sweep),
+        sentiment_threshold=0.2, min_news_count=3, min_correlation=0.05,
+    )
+    # the signals plan holds its own join and, through best_configs, the sweep's
+    for name, df, n_joins in (("lag_sweep", sweep, 1), ("generate_signals", sig, 2)):
+        joins = equi_joins_filtering_on(df, "published_utc")
+        assert len(joins) == n_joins, (name, joins)
+        for left, right in joins:
+            assert "_at_bin" in left + right and "_ts_bin" in left + right, (name, joins)
+        plan = plan_of(df)
+        assert "BroadcastNestedLoopJoin" not in plan, (name, plan)
+        assert "CartesianProduct" not in plan, (name, plan)
+
+
 @pytest.fixture(scope="module")
 def catalog_dfs(spark):
     """Every catalog query built ONCE for the plan sweeps below. Some
