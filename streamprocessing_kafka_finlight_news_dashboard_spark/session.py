@@ -10,6 +10,12 @@ handling), Arrow on (vectorized pandas-UDF exchange), shuffle
 partitions sized by env for local runs but meant to be overridden to
 ~2-3x total cores on a real cluster.
 
+Streaming checkpoints are written through the Hadoop FileSystem API
+(``FileSystemBasedCheckpointFileManager``), not FileContext: without a
+native Hadoop library the FileContext manager forks a process per file
+create and per rename, about 90 per micro-batch, and the two managers'
+no-overwrite rename is equally safe (see the comment at the setting).
+
 Every frame the package materializes goes through :func:`materialize`
 (a local checkpoint) or :func:`persisted` (an in-memory cache). Inside a
 :func:`released` scope each such frame is recorded and its blocks are
@@ -61,6 +67,32 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
+        # Streaming checkpoints (offsets, commits, source/sink metadata
+        # logs, state-store delta and checksum files) go through the
+        # Hadoop FileSystem API. The default FileContext manager forks a
+        # `chmod` on every file it creates and a `readlink` in every
+        # rename when no native Hadoop library is loaded: ~90 processes
+        # per micro-batch. Batch paths open no checkpoint manager.
+        # Why it is as safe as the default (read from the bytecode of
+        # spark-sql 4.1.2 and hadoop-client-api 3.4.2):
+        # - this manager's renameTempFile(overwrite=false) runs
+        #   exists(dst) -> throw, then FileSystem.rename;
+        # - the FileContext manager's Rename.NONE rename goes through
+        #   ChecksumFs and AbstractFileSystem.renameInternal, which run
+        #   getFileLinkStatus(dst) -> throw, then rename. On a local
+        #   file system both check and then rename, and neither is
+        #   atomic against a concurrent writer;
+        # - HDFS's FileSystem.rename refuses to replace a file, and
+        #   object stores already fall back to this manager;
+        # - temp files (`.<name>.<uuid>.tmp`) and `.crc` files are
+        #   named and handled the same way by both.
+        # Spark 4 moved the class into `checkpointing`; before 4.0 it
+        # lived in `org.apache.spark.sql.execution.streaming`.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -138,6 +138,107 @@ def test_checkpointed_parquet_sink_resumes_exactly_once(spark, stream_dir):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
+def _checkpoint_file_manager(spark, path):
+    """The checkpoint manager a streaming query opens under ``path``,
+    built from the session's Hadoop conf the way the engine builds it."""
+    jvm = spark._jvm
+    return jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+
+
+def test_checkpoints_are_written_through_filesystem_api(spark, tmp_path):
+    """Without a native Hadoop library the FileContext manager forks a
+    `chmod` per file create and a `readlink` per rename; the session
+    pins the FileSystem-based manager for every streaming query."""
+    mgr = _checkpoint_file_manager(spark, tmp_path)
+    assert mgr.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+
+def test_checkpoint_batch_file_is_never_overwritten(spark, tmp_path):
+    """The offsets and commit logs claim a batch id by creating its file
+    without overwrite: a second writer of the same batch fails on close,
+    and the file keeps the first writer's bytes."""
+    from py4j.protocol import Py4JJavaError
+
+    mgr = _checkpoint_file_manager(spark, tmp_path)
+    batch = tmp_path / "offsets" / "0"
+    jbatch = spark._jvm.org.apache.hadoop.fs.Path(str(batch))
+    mgr.mkdirs(jbatch.getParent())
+
+    def write(data: bytes) -> None:
+        out = mgr.createAtomic(jbatch, False)
+        out.write(bytearray(data))
+        out.close()
+
+    write(b"v1\nfirst")
+    with pytest.raises(Py4JJavaError, match="already exists"):
+        write(b"v1\nsecond")
+    assert batch.read_bytes() == b"v1\nfirst"
+
+
+def test_dedup_sink_restarts_over_crash_leftover_temp_files(spark, tmp_path):
+    """A writer killed between create and rename leaves a half-written
+    `.<name>.<uuid>.tmp` in the checkpoint. A restart on that checkpoint
+    with new input must ignore such files: every id lands in the sink
+    exactly once, including ids re-delivered inside the watermark, which
+    only the restored dedup state can drop."""
+    import datetime as dt
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    drops, ckpt, out = tmp_path / "drops", tmp_path / "ckpt", str(tmp_path / "out")
+    drops.mkdir()
+    base = dt.datetime(2024, 1, 1)
+
+    def drop(name: str, ids: list[int]) -> None:
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array(ids, pa.int64()),
+                    "ts": pa.array(
+                        [base + dt.timedelta(minutes=i) for i in ids], pa.timestamp("us")
+                    ),
+                    "user_id": pa.array([i % 3 for i in ids], pa.int64()),
+                    "event_type": pa.array(["view"] * len(ids), pa.string()),
+                    "value": pa.array([float(i) for i in ids], pa.float64()),
+                    "props": pa.array([None] * len(ids), pa.string()),
+                }
+            ),
+            drops / name,
+        )
+
+    def drain() -> None:
+        stream = P.dedup_stream(P.read_event_file_stream(spark, str(drops)))
+        q = P.write_stream_parquet(stream, out, str(ckpt))
+        assert q.awaitTermination(600), "drain did not finish"
+        assert q.exception() is None
+
+    drop("drop1.parquet", list(range(20)))
+    drain()
+    nxt = 1 + max(int(f.name) for f in (ckpt / "offsets").iterdir() if f.name.isdigit())
+    planted = [
+        ckpt / "offsets" / f".{nxt}.{uuid.uuid4()}.tmp",
+        ckpt / "commits" / f".{nxt}.{uuid.uuid4()}.tmp",
+        ckpt / "state" / "0" / "0" / f".{nxt + 1}.delta.{uuid.uuid4()}.tmp",
+    ]
+    for p in planted:
+        assert p.parent.is_dir()
+        p.write_bytes(b'v1\n{"batchWatermarkMs":')
+    # ids 15-19 again, with their original times: inside the 1 hour watermark
+    drop("drop2.parquet", list(range(15, 40)))
+    drain()
+    got = spark.read.parquet(out).groupBy("event_id").count().collect()
+    assert sorted(r.event_id for r in got) == list(range(40))
+    assert all(r["count"] == 1 for r in got)
+
+
 def test_upsert_recovers_table_from_backup(spark, stream_dir):
     """Crash-safety of the upsert promotion: if a previous run died
     after moving the live table aside (backup exists, table missing),
