@@ -11,9 +11,10 @@ to stderr. BENCH_detail.json also carries each query's best-run
 ``measure.Record`` (jobs, SQL executions, scan rows and multiplicity
 per table).
 
-Each query is fully materialized via a count-ish action (collect for
-small results) so the measured time includes the whole plan, not just
-planning.
+Each query is written to Spark's ``noop`` sink, which computes every
+row and every column and stores nothing, so the measured time covers
+the whole plan: a ``count()`` would let the optimizer drop columns and
+join sides that the count does not read.
 """
 
 from __future__ import annotations
@@ -134,6 +135,11 @@ HEADLINE = [
 ]
 
 
+def _run(df) -> None:
+    """Compute every row and column of ``df`` and keep nothing."""
+    df.write.format("noop").mode("overwrite").save()
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("names", nargs="*", help="catalog queries (default: HEADLINE)")
@@ -156,7 +162,7 @@ def main() -> None:
     # pay one-time startup costs; also spin up the Python worker pool
     # (one trivial mapInPandas) so the first Arrow-tier query isn't
     # charged the one-time ~3 s process-fork + import cost either.
-    plans.CATALOG["q1_pricing_summary"].builder(spark, sf_dir).count()
+    _run(plans.CATALOG["q1_pricing_summary"].builder(spark, sf_dir))
     spark.range(0, 1000, 1, int(os.environ.get("SPARK_GRAFT_CPUS", "32"))).mapInPandas(
         lambda it: it, "id long"
     ).count()
@@ -180,13 +186,13 @@ def main() -> None:
     records: dict[str, dict] = {}
     for name in names:
         q = plans.CATALOG[name]
-        best, n = None, 0
+        best = None
         load0 = os.getloadavg()[0]
         for _ in range(runs):
             # the query's checkpoints and caches are freed after each
             # run, and its counters read, outside the timed span
             with released(), measured(spark) as rec:
-                n = q.builder(spark, sf_dir).count()
+                _run(q.builder(spark, sf_dir))
             if best is None or rec.wall_s < best.wall_s:
                 best = rec
         timings[name] = best.wall_s = round(best.wall_s, 3)
@@ -197,7 +203,7 @@ def main() -> None:
             for t, r in best.scan_rows.items()
         )
         print(
-            f"# {name}: {timings[name]}s ({n} rows)"
+            f"# {name}: {timings[name]}s"
             + (f" [min of {runs}]" if runs > 1 else "")
             + f" [load delta {dload:+.1f}]"
             + f" jobs={best.jobs} sql={best.sql_executions} scans: {scans}",

@@ -343,23 +343,6 @@ def ngram_leakage_audit(
 # ---------------------------------------------------------------------------
 # Tier 3 — MinHash signatures + LSH banding
 # ---------------------------------------------------------------------------
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    n: int = 3,
-) -> DataFrame:
-    """(id, h0..h{k-1}) — k independent min-hashes of each doc's
-    shingle set. Hash family: xxhash64(shingle, seed=i), JVM-side.
-    One grouped aggregation over the shingle rows; partial (map-side)
-    min makes the shuffle tiny regardless of doc length."""
-    rows = shingle_rows(df, text_col, id_col, n)
-    return rows.groupBy("id").agg(
-        *[F.min(F.xxhash64("shingle", F.lit(i))).alias(f"h{i}") for i in range(num_hashes)]
-    )
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -475,9 +458,10 @@ def minhash_signatures_portable(
     num_hashes: int = 32,
     n: int = 3,
 ) -> DataFrame:
-    """MinHash signatures with the portable affine family — same plan
-    shape as :func:`minhash_signatures` (shingle rows → one grouped
-    partial-min aggregation), different hash family."""
+    """MinHash signatures with the portable affine family — the same
+    plan shape as the xxhash64 signatures inside
+    :func:`minhash_lsh_candidates` (shingle rows → one grouped
+    partial-min aggregation), a different hash family."""
     rows = shingle_rows(df, text_col, id_col, n).withColumn(
         "hv", portable_hash_value(F.col("shingle"))
     )

@@ -4,9 +4,10 @@ The simulation itself (reference scripts/07_backtest.py:37-264) is a
 single global portfolio whose every decision depends on prior state
 (cash, open positions, MAX_POSITIONS cap) — inherently serial, so it
 lives in ONE ``applyInPandas`` over the date-ordered signal×price
-panel (SURVEY T8/F5: "a UDF by nature, not a plan node"). Everything
-around it — the ~30-metric report, drawdown window analysis, streak
-detection — is relational Spark (A9, A14, W1-W5), not Python.
+panel (SURVEY T8/F5: "a UDF by nature, not a plan node"). The
+34-metric report after it is relational Spark, not Python: one ordered
+window pass and one aggregate over the trades (A9, A14), the same over
+the equity curve (W1-W7), and a 1×1 cross join of the two rows.
 
 Semantics faithfully reproduced from the reference (studied, not
 copied): slippage ±0.05% on fills, 0.1% fees both sides
@@ -194,8 +195,10 @@ def run_backtest(
         return _simulate(pdf, hold_days, stop_loss_pct, take_profit_pct)
 
     # one simulation feeds both trades and equity; persisted, not
-    # checkpointed, so the grouped apply stays visible to the plan guard
-    result = persisted(panel.groupBy("_g").applyInPandas(sim, _SIM_SCHEMA))
+    # checkpointed, so the grouped apply stays visible to the plan guard.
+    # Its one group goes to ONE partition, so the metrics' ordered
+    # window passes read the cache with no exchange of their own.
+    result = persisted(panel.repartition(1).groupBy("_g").applyInPandas(sim, _SIM_SCHEMA))
     trades = result.filter(F.col("row_type") == "trade").select(
         "ticker", "entry_date", "exit_date", "entry_price", "exit_price", "shares",
         "pnl", "pnl_pct", "exit_reason", "sentiment", "news_count",
@@ -231,16 +234,31 @@ def equity_analytics(equity: DataFrame) -> DataFrame:
 
 def backtest_metrics(trades: DataFrame, equity: DataFrame) -> DataFrame:
     """The reference's full metrics block (scripts/07_backtest.py:266-418)
-    as ONE relational plan: wide conditional aggregates over trades
-    (A9), gaps-and-islands streaks (A14/W5), window-based drawdown
-    analysis (W3/W4/W7), population-std Sharpe/Sortino/Calmar.
-    Returns a single-row DataFrame."""
-    eq = persisted(equity_analytics(equity))
-
-    # --- trade-level aggregates (one pass) ---
+    as one ordered window pass and one aggregate per side, joined 1×1;
+    returns a single-row DataFrame. Streaks (A14): a trade whose win
+    flag differs from the previous one's (by exit_date, ticker) starts
+    a run, so its run length is its row number minus the latest
+    start's, plus one. Drawdown (W3/W4/W7): the trough is the earliest
+    row of least drawdown; its start is the first date equity reached
+    the trough's running peak (a flat stretch at the peak keeps the
+    date the peak was set). Population std, as the reference's np.std."""
+    # --- trades: run length per row, then one aggregate ---
     win = F.col("pnl") > 0
     loss = F.col("pnl") < 0
-    t_agg = trades.agg(
+    wt = W.orderBy("exit_date", "ticker")
+    run = trades.select(
+        "*",
+        F.row_number().over(wt).cast("long").alias("_rn"),  # streaks stay long
+        (~win.eqNullSafe(F.lag(win).over(wt))).alias("_new"),
+    ).withColumn(  # a second select: window functions do not nest
+        "_run",
+        F.col("_rn")
+        - F.max(F.when(F.col("_new"), F.col("_rn"))).over(
+            wt.rowsBetween(W.unboundedPreceding, W.currentRow)
+        )
+        + 1,
+    )
+    t_agg = run.agg(
         F.count(F.lit(1)).alias("num_trades"),
         F.sum(win.cast("long")).alias("num_wins"),
         F.sum(loss.cast("long")).alias("num_losses"),
@@ -256,59 +274,34 @@ def backtest_metrics(trades: DataFrame, equity: DataFrame) -> DataFrame:
         F.sum(F.when(loss, F.col("pnl")).otherwise(0.0)).alias("gross_loss"),
         F.avg("pnl").alias("expectancy"),
         F.avg("days_held").alias("avg_days_held"),
+        F.max(F.when(win, F.col("_run"))).alias("max_win_streak"),
+        F.max(F.when(~win, F.col("_run"))).alias("max_loss_streak"),
     )
 
-    # --- streaks: order trades by exit date, gaps-and-islands on win flag ---
-    wt = W.orderBy("exit_date", "ticker")
-    wrun = wt.rowsBetween(W.unboundedPreceding, W.currentRow)
-    streaked = (
-        trades.select("exit_date", "ticker", win.alias("win"))
-        .withColumn(
-            "new_streak",
-            F.when(~F.col("win").eqNullSafe(F.lag("win").over(wt)), 1).otherwise(0),
-        )
-        .withColumn("streak_id", F.sum("new_streak").over(wrun))
-        .groupBy("win", "streak_id")
-        .agg(F.count(F.lit(1)).alias("len"))
-        .groupBy()
-        .agg(
-            F.max(F.when(F.col("win"), F.col("len"))).alias("max_win_streak"),
-            F.max(F.when(~F.col("win"), F.col("len"))).alias("max_loss_streak"),
-        )
+    # --- equity: first date of the running peak, then one aggregate ---
+    eq = equity_analytics(equity).withColumn(
+        "_peak_date",
+        F.min_by("date", F.struct(-F.col("equity"), F.col("date"))).over(
+            W.orderBy("date").rowsBetween(W.unboundedPreceding, W.currentRow)
+        ),
     )
-
-    # --- drawdown trough + period (W7: argmin via min_by) ---
-    dd = eq.agg(
-        F.min("drawdown").alias("max_drawdown"),
-        F.min_by("date", "drawdown").alias("max_drawdown_end"),
-        F.min_by("peak", F.struct("drawdown", "date")).alias("dd_peak_value"),
-    )
-    # drawdown start = first date equity hit the peak that preceded the trough
-    dd_start = (
-        eq.join(F.broadcast(dd), eq.equity == dd.dd_peak_value, "inner")
-        .agg(F.min("date").alias("max_drawdown_start"))
-    )
-
-    # --- equity/risk metrics (population std per reference np.std) ---
+    trough = F.struct("drawdown", "date")
     e_agg = eq.agg(
         F.min("date").alias("start_date"),
         F.max("date").alias("end_date"),
         F.count(F.lit(1)).alias("trading_days"),
-        F.first("equity").alias("_ignore_first"),
         F.max_by("equity", "date").alias("final_equity"),
         F.avg("daily_return").alias("avg_daily_return"),
         F.stddev_pop("daily_return").alias("daily_volatility"),
         F.stddev_pop(F.when(F.col("daily_return") < 0, F.col("daily_return"))).alias(
             "downside_std"
         ),
-    ).drop("_ignore_first")
-
-    row = (
-        t_agg.crossJoin(streaked)
-        .crossJoin(dd.select("max_drawdown", "max_drawdown_end"))
-        .crossJoin(dd_start)
-        .crossJoin(e_agg)
+        F.min("drawdown").alias("max_drawdown"),
+        F.min_by("_peak_date", trough).alias("max_drawdown_start"),
+        F.min_by("date", trough).alias("max_drawdown_end"),
     )
+
+    row = t_agg.crossJoin(e_agg)
     annual_return = F.pow(1 + F.col("avg_daily_return"), 252) - 1
     annual_vol = F.col("daily_volatility") * F.sqrt(F.lit(252.0))
     downside_vol = F.col("downside_std") * F.sqrt(F.lit(252.0))

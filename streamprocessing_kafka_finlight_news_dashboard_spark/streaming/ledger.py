@@ -14,14 +14,18 @@ by ``batch_id``, next to the store's ledger::
     <store>/_ledger/batch-<part>
 
 ``<part>`` is ``<gen>-<N>``: ``<gen>`` is the first 8 hex digits of
-the md5 of the writer's absolute checkpoint path, ``<N>`` Spark's
-micro-batch id. Batch ids restart at 0 under a fresh checkpoint, so
-without the generation a prior run's ``batch-0`` would swallow the new
-run's first batch. The append sink keeps bare ``<N>`` parts and a
-sibling ``<table>._ledger`` (a re-ingest under a fresh checkpoint must
-hit the old markers), and stores written by older code carry bare
-numeric parts too — readers cast the partition column to string before
-comparing. A compaction's part is ``compact-<12 hex>``.
+the md5 of the writer's absolute checkpoint path and of the query id
+in the checkpoint's ``metadata`` file, ``<N>`` Spark's micro-batch id.
+Batch ids restart at 0 under a fresh checkpoint, so without the
+generation a prior run's ``batch-0`` would swallow the new run's first
+batch. The path alone is not enough: a checkpoint deleted and
+re-created at the same path gets a new query id, and so a new
+generation, while a restart of the same checkpoint keeps both. The
+append sink keeps bare ``<N>`` parts and a sibling ``<table>._ledger``
+(a re-ingest under a fresh checkpoint must hit the old markers), and
+stores written by older code carry bare numeric parts too — readers
+cast the partition column to string before comparing. A compaction's
+part is ``compact-<12 hex>``.
 
 An ordinary marker's body is ``committed``; a compaction marker's body
 is the JSON manifest ``{"replaces": [<part>, ...]}``. Every marker, and
@@ -85,8 +89,14 @@ _COMPACT_PREFIX = "compact-"
 
 
 def _generation(checkpoint_dir: str) -> str:
-    """Stable per checkpoint, distinct across checkpoints."""
-    return hashlib.md5(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:8]
+    """Stable per checkpoint, distinct across checkpoints, including one
+    re-created at the same path. Spark writes ``<checkpoint>/metadata``
+    (``{"id": <query id>}``) when the query first starts and keeps it
+    across restarts, so this is called once the query runs."""
+    path = os.path.abspath(checkpoint_dir)
+    with open(os.path.join(path, "metadata")) as fh:
+        query_id = json.load(fh)["id"]
+    return hashlib.md5(f"{path}|{query_id}".encode()).hexdigest()[:8]
 
 
 def atomic_write(path: str, text: str) -> None:
@@ -266,20 +276,19 @@ def read_others(spark, root: str, part: str, schema: str | None = None):
 
 def start_writer(stream_df: DataFrame, store_dir: str, checkpoint_dir: str, heal_store, write):
     """Start a ledgered store's availableNow foreachBatch query. Per
-    micro-batch: ensure the ledger dir, run ``heal_store()`` once per
-    query, skip a committed part, else call ``write(batch_df, part)``
-    and commit the part's marker if it returns True (False: nothing
-    was written, e.g. an empty batch)."""
+    micro-batch: ensure the ledger dir, run ``heal_store()`` and read
+    the checkpoint's generation once per query, skip a committed part,
+    else call ``write(batch_df, part)`` and commit the part's marker if
+    it returns True (False: nothing was written, e.g. an empty batch)."""
     ledger = ledger_dir(store_dir)
-    gen = _generation(checkpoint_dir)
-    healed: list[bool] = []
+    gen: list[str] = []
 
     def run(batch_df: DataFrame, batch_id: int) -> None:
         os.makedirs(ledger, exist_ok=True)
-        if not healed:
+        if not gen:
             heal_store()
-            healed.append(True)
-        part = f"{gen}-{batch_id}"
+            gen.append(_generation(checkpoint_dir))
+        part = f"{gen[0]}-{batch_id}"
         if is_committed(ledger, part):
             return
         if write(batch_df, part):

@@ -365,9 +365,16 @@ def test_backtest_metrics_golden_replica(spark, domain, hold_hours):
         # ~1 day), or the parameterization degenerates into 240 h
         hp = t.loc[t["exit_reason"] == "hold_period", "days_held"]
         assert len(hp) and hp.min() <= 4, "24 h hold never bound"
-    cap = P.backtest.INITIAL_CAPITAL
+    _assert_matches_replica(P.backtest_metrics(trades, equity), _replica_metrics(t, eq))
 
-    # ---- independent replica of the published definitions ----
+
+def _replica_metrics(t: pd.DataFrame, eq: pd.DataFrame) -> dict[str, object]:
+    """Independent pandas/numpy replica of the reference's published
+    metric definitions over a trade log ``t`` and a date-sorted equity
+    curve ``eq`` (index 0..n-1). Ties: the trough is the FIRST date of
+    least drawdown, its start the FIRST date equity equalled the
+    trough's peak (the reference's ``idxmin`` and first match)."""
+    cap = P.backtest.INITIAL_CAPITAL
     g: dict[str, object] = {
         "start_date": eq["date"].iloc[0],
         "end_date": eq["date"].iloc[-1],
@@ -425,9 +432,12 @@ def test_backtest_metrics_golden_replica(spark, domain, hold_hours):
         g["annual_return"] / abs(g["max_drawdown"]) if g["max_drawdown"] != 0 else 0.0
     )
 
-    # ---- engine row: every metric name present, every value equal ----
-    row = P.backtest_metrics(trades, equity).first()
-    got = row.asDict()
+    return g
+
+
+def _assert_matches_replica(metrics, g: dict[str, object]) -> None:
+    """Every metric name present, every value equal to the replica's."""
+    got = metrics.first().asDict()
     assert set(g) == set(got), (
         f"metric-name drift: only-engine={set(got) - set(g)}, "
         f"only-replica={set(g) - set(got)}"
@@ -442,6 +452,92 @@ def test_backtest_metrics_golden_replica(spark, domain, hold_hours):
             assert math.isclose(float(have), float(want), rel_tol=1e-9, abs_tol=1e-12), (
                 f"{name}: engine={have} replica={want}"
             )
+
+
+_TRADE_SCHEMA = (
+    "ticker string, entry_date timestamp, exit_date timestamp, entry_price double, "
+    "exit_price double, shares double, pnl double, pnl_pct double, exit_reason string, "
+    "sentiment double, news_count long, lookback_hours int, lead_days int, days_held int"
+)
+
+#: equity curves whose drawdown dates hinge on a tie rule
+_TIE_CURVES = {
+    # flat at the initial capital before the first trade: the drawdown
+    # starts on the first day, not the last day of the flat stretch
+    "flat_start": [100_000.0] * 4 + [99_000.0, 98_000.0, 99_500.0, 101_000.0],
+    # an exact return to the earlier peak before the trough, and a
+    # second trough of the same depth: start and end are the FIRST dates
+    "return_to_peak": [
+        100_000.0, 103_000.0, 101_000.0, 103_000.0, 103_000.0, 97_000.0, 103_000.0, 97_000.0,
+    ],
+    # no drawdown at all: start = end = the first day, duration 0
+    "monotone": [100_000.0, 100_000.0, 100_500.0, 101_000.0, 102_000.0],
+}
+
+
+@pytest.mark.parametrize("curve", sorted(_TIE_CURVES))
+def test_backtest_metrics_tie_cases_match_replica(spark, curve):
+    """Drawdown start/end/duration and both streaks on hand-built
+    frames, equal to the golden replica. The trades tie on exit dates
+    (ordered by ticker), include a zero-pnl trade (not a win), and
+    arrive out of order."""
+    import datetime as dt
+
+    day = dt.datetime(2024, 1, 1)
+    equity = spark.createDataFrame(
+        [
+            (day + dt.timedelta(days=i), v, v, 0)
+            for i, v in enumerate(_TIE_CURVES[curve])
+        ],
+        "date timestamp, equity double, cash double, num_positions int",
+    )
+    # (exit day, ticker, pnl) by (exit_date, ticker):
+    # + - + + + 0 - - + +  → longest win run 3, longest non-win run 3
+    legs = [
+        (1, "A", 50.0), (1, "B", -20.0), (2, "A", 10.0), (2, "B", 5.0), (2, "C", 7.0),
+        (3, "A", 0.0), (3, "B", -1.0), (4, "A", -3.0), (5, "B", 9.0), (5, "C", 4.0),
+    ]
+    trades = spark.createDataFrame(
+        [
+            (tkr, day, day + dt.timedelta(days=d), 10.0, 10.0, 1.0, pnl, pnl / 10.0,
+             "hold_period", 0.5, 3, 24, 1, d)
+            for d, tkr, pnl in reversed(legs)
+        ],
+        _TRADE_SCHEMA,
+    )
+    t = trades.toPandas()
+    eq = equity.toPandas().sort_values("date").reset_index(drop=True)
+    g = _replica_metrics(t, eq)
+    assert (g["max_win_streak"], g["max_loss_streak"]) == (3, 3)
+    _assert_matches_replica(P.backtest_metrics(trades, equity), g)
+
+
+def test_backtest_metrics_runs_three_jobs_and_caches_nothing(spark, domain):
+    """With the simulation already cached, the metrics row costs at most
+    3 jobs and persists no RDD of its own: the simulation's single
+    partition feeds both ordered passes with no exchange, and the 1×1
+    join broadcasts one side's row."""
+    from streamprocessing_kafka_finlight_news_dashboard_spark.measure import measured
+    from streamprocessing_kafka_finlight_news_dashboard_spark.session import released
+
+    def persisted_ids() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    prices, scored = domain
+    with released():
+        sig = P.generate_signals(
+            prices, scored, P.best_configs(P.lag_sweep(prices, scored, min_news=3, min_obs=10)),
+            sentiment_threshold=0.2, min_news_count=3, min_correlation=0.05,
+        )
+        trades, equity = P.run_backtest(
+            sig, prices, hold_period_hours=240, stop_loss_pct=0.05, take_profit_pct=0.20
+        )
+        assert trades.count() > 3, "fixture must produce a non-trivial trade log"
+        before = persisted_ids()
+        with measured(spark) as rec:
+            P.backtest_metrics(trades, equity).collect()
+        assert not persisted_ids() - before, "backtest_metrics persisted an RDD"
+    assert rec.jobs <= 3, f"backtest_metrics ran {rec.jobs} jobs"
 
 
 #: The reference's PUBLISHED conservative-variant backtest summary

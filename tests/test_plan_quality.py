@@ -311,8 +311,9 @@ def test_global_window_guard_redlines_corpus_input(spark):
 
 
 def test_equity_curve_windows_see_only_post_aggregation_rows(spark):
-    """The single-series equity analytics (pipeline/backtest.py) run
-    unpartitioned windows BY DESIGN over the daily curve; the plan must
+    """The single-series equity analytics and the metrics block's trade
+    and equity passes (pipeline/backtest.py) run unpartitioned windows
+    BY DESIGN over the daily curve and the trade log; the plan must
     prove the curve is grouped-apply output (one row per day), not a
     corpus — the guard red-lines any future caller that funnels raw
     rows through them."""
@@ -327,10 +328,11 @@ def test_equity_curve_windows_see_only_post_aggregation_rows(spark):
         prices, scored, P.best_configs(sweep),
         sentiment_threshold=0.2, min_news_count=3, min_correlation=0.05,
     )
-    _, equity = P.run_backtest(
+    trades, equity = P.run_backtest(
         sig, prices, hold_period_hours=240, stop_loss_pct=0.05, take_profit_pct=0.20
     )
     assert unbounded_global_windows(P.equity_analytics(equity)) == []
+    assert unbounded_global_windows(P.backtest_metrics(trades, equity)) == []
 
 
 _EQUI_JOINS = ("BroadcastHashJoinExec", "ShuffledHashJoinExec", "SortMergeJoinExec")

@@ -578,6 +578,17 @@ def test_stream_dedup_canonical_fresh_checkpoint_same_store(spark, tmp_path):
     would swallow the new run's first batch. New unique docs must be
     admitted, and near-dups of already-stored docs must still be
     dropped (committed prior-generation bands keep participating)."""
+    _second_generation_round_trip(spark, tmp_path, recreate_same_path=False)
+
+
+def test_stream_dedup_canonical_recreated_checkpoint_same_path(spark, tmp_path):
+    """The same, with the first checkpoint deleted and re-created at the
+    SAME path: a generation hashed from the path alone repeats, and the
+    new run's batch 0 would be skipped as already committed."""
+    _second_generation_round_trip(spark, tmp_path, recreate_same_path=True)
+
+
+def _second_generation_round_trip(spark, tmp_path, recreate_same_path: bool) -> None:
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "lang", "text")
     first = docs.filter(F.col("doc_id") < 150)
     store = str(tmp_path / "gen_store")
@@ -600,8 +611,12 @@ def test_stream_dedup_canonical_fresh_checkpoint_same_store(spark, tmp_path):
     fresh = docs.filter((F.col("doc_id") >= 150) & (F.col("doc_id") < 250))
     drops2 = str(tmp_path / "gen_drops2")
     resent.unionByName(fresh).coalesce(1).write.parquet(drops2)
+    ck2 = tmp_path / "gen_ck2"
+    if recreate_same_path:
+        shutil.rmtree(tmp_path / "gen_ck1")
+        ck2 = tmp_path / "gen_ck1"
     q = P.write_stream_dedup_canonical(
-        spark.readStream.schema(schema).parquet(drops2), store, str(tmp_path / "gen_ck2")
+        spark.readStream.schema(schema).parquet(drops2), store, str(ck2)
     )
     q.awaitTermination(600)
     stored2 = {r.doc_id for r in spark.read.parquet(store + "/docs").collect()}
