@@ -1,28 +1,29 @@
-"""Arrow-batched document tiers: per-document shingle/fingerprint/
+"""Arrow-batched document grams: per-document shingle/fingerprint/
 bigram computation in ONE ``mapInPandas`` pass.
 
-Why this exists: the JVM formulations (operators/dedup.py,
-operators/text.py) express per-document set math as posexplode →
-window-sort → distinct-shuffle → 60-wide conditional aggregates. That
-is correct and fully declarative, but at bench time the cost is
-dominated by (a) whole-stage-codegen compilation of the very wide
-generated classes and (b) two extra shuffles per operator that exist
-only to rebuild per-document groups Spark just exploded. Measured at
-sf0.1 / local[32]: SimHash fingerprints 4.5 s cold / 1.5 s warm via
-the JVM pipeline vs well under 1 s for the same math done per-document
-inside an Arrow batch.
+This module is the engine's only implementation of per-document grams
+(word shingles as rows or sorted arrays, portable SimHash and MinHash,
+character-bigram and token counts); operators/dedup.py and
+operators/text.py build on it. The declarative alternative —
+posexplode → window-sort → distinct-shuffle → 60-wide conditional
+aggregates — rebuilds per-document groups Spark just exploded, and at
+bench time its cost is dominated by (a) whole-stage-codegen
+compilation of the very wide generated classes and (b) two extra
+shuffles per operator. Measured at sf0.1 / local[32]: SimHash
+fingerprints 4.5 s cold / 1.5 s warm via that pipeline vs well under
+1 s for the same math done per-document inside an Arrow batch.
 
 Scale shape: one explicit-count round-robin repartition (documents
 tables often arrive as a single parquet split) followed by linear,
 embarrassingly-parallel batch work — no sort, no intermediate shuffle,
-state bounded to one Arrow batch. This is exactly the "vectorized
-Pandas UDF over mapInPandas" tier the engine reserves for semantics
-the built-in operators can't express *efficiently*.
+state bounded to one Arrow batch.
 
-Every function here is a bit-exact twin of its JVM counterpart (same
-md5-derived hash families, same token/shingle/bigram boundaries) —
-asserted by tests/test_arrow_tiers.py and by the unchanged DuckDB
-oracles of the catalog entries that consume them.
+The specification is the DuckDB SQL of the catalog oracles (the
+shingle CTEs, the MinHash signature and SimHash vote expressions, the
+``range(1, len(lower(text)))`` bigram grain in plans/text.py): same
+md5-derived hash families, same token/shingle/bigram boundaries.
+tests/test_arrow_tiers.py asserts equality with that SQL on the
+sf0.001 corpus and on an edge-case corpus.
 """
 
 from __future__ import annotations
@@ -42,10 +43,37 @@ from pyspark.sql import functions as F
 # silently diverge from the oracle on non-ASCII whitespace.
 _WS_RE = re.compile(r"\s+", re.ASCII)
 
-#: Affine MinHash family — shared constants with operators/dedup.py
-#: (_MH_P, _mh_a, _mh_b). Imported there, re-declared here to avoid a
-#: circular import; test_arrow_tiers.py asserts they stay in sync.
+# Portable MinHash family, shared with the oracle SQL
+# (plans/text.py::_MH_SIG_EXPRS): shingle value = first 8 hex chars of
+# md5 (bit-identical across engines, < 2^32), then k affine hashes
+# h_i(v) = (a_i·v + b_i) mod P with P prime > 2^32. The md5-derived
+# 20-bit multipliers give a_i·v ≤ ~2^52 — within int64 on every engine
+# (see _mh_a's docstring). xxhash64 stays the production tier
+# (dedup.minhash_lsh_candidates: one JVM intrinsic vs md5+conv); this
+# family exists so the SAME algorithm is hash-verifiable against DuckDB.
 MH_P = 4_294_967_311
+
+
+def _mh_a(i: int) -> int:
+    """i-th minhash multiplier: md5-derived 20-bit value in
+    [1, 2^20-1]. Small enough that a·hv ≤ 2^52 never overflows int64
+    (Spark long / numpy int64 / DuckDB BIGINT all agree), random
+    enough that components are effectively independent. The previous
+    arithmetic-progression family (131 + 2i) made CONSECUTIVE hashes
+    correlated (h_{i+1} − h_i = 2·hv + const), which the estimator
+    query exposed: a 0.011-Jaccard pair matched 15/32 components and
+    rode that correlation into a band collision. md5-derived
+    constants put the estimator back inside its binomial error band
+    (measured in CALIBRATION.md)."""
+    return (
+        int(hashlib.md5(f"mh-a-{i}".encode()).hexdigest()[:5], 16)
+        % ((1 << 20) - 1)
+    ) + 1
+
+
+def _mh_b(i: int) -> int:
+    """i-th minhash offset: md5-derived value in [0, P)."""
+    return int(hashlib.md5(f"mh-b-{i}".encode()).hexdigest()[:8], 16) % MH_P
 
 
 def _tokens(text: str) -> list[str]:
@@ -57,11 +85,10 @@ def _tokens(text: str) -> list[str]:
 
 
 def _shingle_set(text: str, n: int = 3) -> set[str]:
-    """Twin of operators.dedup.shingle_rows: distinct word n-grams;
-    documents shorter than n tokens yield one shingle = all tokens
-    joined (concat_ws skips the null leads). NULL text yields NO
-    shingles — the JVM formulation's posexplode drops the row
-    entirely (split(trim(null)) is null), so the twin must too."""
+    """Distinct word n-grams of one document, as the oracle's shingle
+    CTEs define them: documents shorter than n tokens yield one
+    shingle = all tokens joined; NULL text yields NO shingles (the
+    SQL's unnest over a NULL token list emits no row)."""
     if text is None:
         return set()
     toks = _tokens(text)
@@ -71,9 +98,9 @@ def _shingle_set(text: str, n: int = 3) -> set[str]:
 
 
 def bigram_counter(text: str | None) -> Counter:
-    """Character-bigram Counter of lower(text) — the per-document twin
-    of the explode-and-count formulation (every length-2 substring
-    except the one starting at the last character). Any non-``str``
+    """Character-bigram Counter of lower(text): every length-2
+    substring except the one starting at the last character (the
+    oracle's ``range(1, len(lower(text)))`` grain). Any non-``str``
     input (None, or NaN/pd.NA for a SQL NULL) counts as empty text."""
     t = text.lower() if isinstance(text, str) else ""
     return Counter(t[i : i + 2] for i in range(len(t) - 1))
@@ -100,49 +127,90 @@ def scatter_rr(df: DataFrame) -> DataFrame:
     return df.repartition(n_part)
 
 
-_SHINGLE_ROWS_SCHEMA = "id bigint, shingle string"
+def _shingle_map(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int,
+    keep_cols: tuple[str, ...],
+    gram_col: str,
+    gram_type: str,
+    finish,
+) -> DataFrame:
+    """One mapInPandas pass emitting (id, *keep_cols, gram_col): each
+    batch becomes a frame of per-doc shingle SETS in ``gram_col``,
+    which ``finish`` reshapes. ``keep_cols`` are per-document
+    constants (source, lang) carried with their input types, so
+    group-level consumers need no corpus re-join. The gram size
+    travels as column metadata: mapInPandas' DDL-string schema can't
+    carry it, so it is re-attached after — a consumer accepting
+    PREBUILT grams (dedup.decontaminate_ngram/_bloom) then fails
+    loudly on an n-mismatch instead of silently mislabeling
+    documents."""
+    types = dict(df.dtypes)
+    schema = ", ".join(
+        ["id bigint", *(f"{c} {types[c]}" for c in keep_cols), f"{gram_col} {gram_type}"]
+    )
+
+    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = pdf[[id_col, *keep_cols]].rename(columns={id_col: "id"})
+            out[gram_col] = [_shingle_set(t, n) for t in pdf[text_col]]
+            yield finish(out)
+
+    out = scatter_rr(df.select(id_col, *keep_cols, text_col)).mapInPandas(op, schema)
+    return out.withColumn(
+        gram_col, F.col(gram_col).alias(gram_col, metadata={"gram_n": n})
+    )
 
 
 def shingle_rows_arrow(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Arrow twin of dedup.shingle_rows: per-document distinct word
-    n-gram ROWS, computed inside mapInPandas batches instead of the
-    posexplode → lead-window → global-distinct pipeline. Bit-exact
-    string output (same tokenizer/short-doc/null semantics via
-    _shingle_set — equality-asserted in tests), so callers joining on
-    the raw shingle string (decontamination) can swap tiers freely.
-    Per-doc set construction makes the global distinct unnecessary:
+    """Distinct word n-gram shingles as (id, *keep_cols, shingle) ROWS.
+    Per-doc set construction makes a global distinct unnecessary:
     (id, shingle) is unique by construction. No codegen class, no
     per-doc window shuffle — only the round-robin compute scatter.
-    Feeds any JVM-side aggregation that wants shingle rows (e.g. the
-    xxhash64 production MinHash tier) without the window sort or the
-    distinct shuffle."""
-    import pandas as pd
+    Feeds any JVM-side aggregation or join that wants shingle rows
+    (the xxhash64 MinHash/SimHash tiers, decontamination, novelty,
+    source overlap). NULL text yields no rows."""
 
-    def op(batches):
-        for pdf in batches:
-            ids: list[int] = []
-            grams: list[str] = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                for s in _shingle_set(text, n):
-                    ids.append(doc_id)
-                    grams.append(s)
-            yield pd.DataFrame({"id": ids, "shingle": grams})
+    def explode(out: pd.DataFrame) -> pd.DataFrame:
+        out = out.explode("shingle")
+        return out[out["shingle"].notna()]  # a NULL text's empty set
 
-    # mapInPandas' DDL-string schema can't carry column metadata, so
-    # re-attach the gram size after — same prebuilt-grain contract as
-    # dedup.shingle_rows (decontaminate_* validates it)
-    out = scatter_rr(df.select(id_col, text_col)).mapInPandas(
-        op, _SHINGLE_ROWS_SCHEMA
+    return _shingle_map(
+        df, text_col, id_col, n, keep_cols, "shingle", "string", explode
     )
-    return out.withColumn(
-        "shingle", F.col("shingle").alias("shingle", metadata={"gram_n": n})
+
+
+def shingle_arrays_arrow(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    keep_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """(id, *keep_cols, shingles) with ``shingles`` the doc's SORTED
+    distinct word n-grams — the array grain a pairwise
+    ``array_intersect`` needs, built in the same pass as the rows
+    (no explode → collect_set regroup). NULL text yields no row."""
+
+    def to_sorted(out: pd.DataFrame) -> pd.DataFrame:
+        out["shingles"] = [sorted(s) for s in out["shingles"]]
+        return out[out["shingles"].map(len) > 0]
+
+    return _shingle_map(
+        df, text_col, id_col, n, keep_cols, "shingles", "array<string>", to_sorted
     )
 
 
 # ---------------------------------------------------------------------------
-# SimHash (portable 60-bit) — twin of dedup.simhash_table_portable
+# SimHash (portable 60-bit)
 # ---------------------------------------------------------------------------
 _SIMHASH_SCHEMA = "doc_id bigint, n_shingles bigint, simhash60 bigint"
 
@@ -153,8 +221,7 @@ def simhash_table_arrow(
     """60-bit portable SimHash per document, computed inside Arrow
     batches: shingle set → md5-derived 60-bit values → per-bit majority
     vote, all per-row Python/numpy instead of a 61-aggregate shuffle.
-    Bit-exact twin of :func:`dedup.simhash_table_portable` (asserted in
-    tests); same DuckDB oracle applies."""
+    Specified by the doc_simhash_portable oracle's vote SQL."""
     shifts = np.arange(60, dtype=np.uint64)
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -162,7 +229,7 @@ def simhash_table_arrow(
             ids, counts, fps = [], [], []
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
                 shingles = _shingle_set(text, n)
-                if not shingles:  # null text: JVM twin emits no row
+                if not shingles:  # null text: no row
                     continue
                 hv = np.array(
                     [_md5_long(s, 15) for s in shingles],
@@ -189,7 +256,7 @@ def simhash_table_arrow(
 
 
 # ---------------------------------------------------------------------------
-# MinHash (portable affine family) — twin of dedup.minhash_signatures_portable
+# MinHash (portable affine family)
 # ---------------------------------------------------------------------------
 def minhash_signatures_arrow(
     df: DataFrame,
@@ -201,27 +268,9 @@ def minhash_signatures_arrow(
     """Portable MinHash signatures inside Arrow batches: per document,
     h_i = min((a_i·v + b_i) mod P) over the md5-derived shingle values
     — one numpy broadcast per doc instead of 32 min-aggregates over
-    exploded rows. Bit-exact twin of
-    :func:`dedup.minhash_signatures_portable`."""
-    # md5-derived constants — the bit-exact twin of dedup._mh_a/_mh_b
-    # (re-declared to avoid the circular import; kept in sync by
-    # test_arrow_tiers.py)
-    import hashlib
-
-    a = np.array(
-        [
-            (int(hashlib.md5(f"mh-a-{i}".encode()).hexdigest()[:5], 16) % ((1 << 20) - 1)) + 1
-            for i in range(num_hashes)
-        ],
-        dtype=np.int64,
-    )
-    b = np.array(
-        [
-            int(hashlib.md5(f"mh-b-{i}".encode()).hexdigest()[:8], 16) % 4294967311
-            for i in range(num_hashes)
-        ],
-        dtype=np.int64,
-    )
+    exploded rows. Specified by plans/text.py::_MH_SIG_EXPRS."""
+    a = np.array([_mh_a(i) for i in range(num_hashes)], dtype=np.int64)
+    b = np.array([_mh_b(i) for i in range(num_hashes)], dtype=np.int64)
     schema = "id bigint, " + ", ".join(f"h{i} bigint" for i in range(num_hashes))
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -229,14 +278,14 @@ def minhash_signatures_arrow(
             rows = []
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
                 shingles = _shingle_set(text, n)
-                if not shingles:  # null text: JVM twin emits no row
+                if not shingles:  # null text: no row
                     continue
                 hv = np.array(
                     [_md5_long(s, 8) for s in shingles],
                     dtype=np.int64,
                 )
-                # a_i·v < 2^40 — no int64 overflow (same bound as the
-                # JVM/DuckDB formulation).
+                # a_i·v < 2^52 — no int64 overflow (same bound as the
+                # DuckDB formulation).
                 sig = ((hv[:, None] * a[None, :] + b[None, :]) % MH_P).min(axis=0)
                 rows.append((doc_id, *sig.tolist()))
             yield pd.DataFrame(rows, columns=["id"] + [f"h{i}" for i in range(num_hashes)])
@@ -245,7 +294,7 @@ def minhash_signatures_arrow(
 
 
 # ---------------------------------------------------------------------------
-# Character-bigram counts — twin of text.char_bigram_counts
+# Character-bigram counts
 # ---------------------------------------------------------------------------
 def char_bigram_counts_arrow(
     df: DataFrame, text_col: str = "text", id_cols: tuple[str, ...] = ("doc_id",)
@@ -253,9 +302,9 @@ def char_bigram_counts_arrow(
     """Per-document character-bigram counts built with a Counter inside
     Arrow batches — replaces the 1-row-per-character explode + groupBy
     (the count is already per-document, so the (doc, bigram) shuffle
-    disappears entirely). Bigram boundaries are the bit-exact twin of
-    the JVM/DuckDB formulation: lower(text), substrings of length 2
-    starting at every position except the last."""
+    disappears entirely). Bigram boundaries are the oracle's:
+    lower(text), substrings of length 2 starting at every position
+    except the last (:func:`bigram_counter`)."""
     id_types = dict(df.select(*id_cols).dtypes)
     schema = (
         ", ".join(f"{c} {id_types[c]}" for c in id_cols) + ", bg string, cnt bigint"

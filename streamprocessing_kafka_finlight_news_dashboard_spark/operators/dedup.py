@@ -19,12 +19,15 @@ The reference's only dedup is exact drop_duplicates on article_url
 set (ingestion/producer.py:184-197); tiers 2-4 are the generalization
 a training-data pipeline needs.
 
-Implementation note (measured on sf0.1): shingles are built as ROWS
-(posexplode tokens → window lead → concat), not as per-row arrays —
-Spark's nested higher-order array functions (transform+slice) run
-interpreted and were 8× slower than the exploded window formulation.
-Arrays are reassembled with collect_set only where a pairwise
-array_intersect genuinely needs them.
+Implementation note: every per-document gram (shingle rows, sorted
+shingle arrays, portable SimHash and MinHash) comes from the Arrow
+builders in operators/arrow_docs.py — one mapInPandas pass per
+document batch, no posexplode → window-sort → distinct pipeline and
+no collect_set regroup. Spark's nested higher-order array functions
+(transform+slice) run interpreted and were 8× slower than an exploded
+formulation at sf0.1, so shingles are never built as in-row array
+expressions either. The JVM side keeps what Spark does well: the
+xxhash64 aggregates, the doc- and gram-keyed joins, and banding.
 """
 
 from __future__ import annotations
@@ -33,6 +36,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from streamprocessing_kafka_finlight_news_dashboard_spark.operators.arrow_docs import (
+    minhash_signatures_arrow,
+    shingle_arrays_arrow,
+    shingle_rows_arrow,
+    simhash_table_arrow,
+)
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators.text import fingerprint, tokens
 from streamprocessing_kafka_finlight_news_dashboard_spark.session import materialize, shuffle_partitions
 
@@ -55,81 +64,6 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
 
 
 # ---------------------------------------------------------------------------
-# Shingling (shared by tiers 2-4)
-# ---------------------------------------------------------------------------
-def shingle_rows(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    keep_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Distinct word n-gram shingles as (id, *keep_cols, shingle) ROWS.
-    ``keep_cols`` are per-document constants (source, lang) carried
-    through the explode so group-level consumers need no corpus
-    re-join; they leave the distinct grain unchanged.
-
-    posexplode(tokens) → lead-window concat per doc → distinct. The
-    window partitions by doc id, so the only shuffle is keyed by doc —
-    uniform, and exactly the key the downstream signature groupBy
-    needs (Catalyst reuses the partitioning).
-
-    Documents shorter than ``n`` tokens yield one shingle = the whole
-    text (lead nulls are skipped by concat_ws on the last full row).
-
-    The input is repartitioned by id with an EXPLICIT count before the
-    explode: document tables often arrive as one file split, and AQE
-    sizes shuffles on pre-explode bytes, so without this the ~|tokens|×
-    fan-out (and everything downstream of it) runs on a single task.
-    """
-    n_part = shuffle_partitions(df.sparkSession)
-    tok = df.repartition(n_part, F.col(id_col)).select(
-        F.col(id_col).alias("id"),
-        *[F.col(c) for c in keep_cols],
-        F.posexplode(tokens(F.col(text_col))).alias("pos", "tok"),
-    )
-    w = W.partitionBy("id").orderBy("pos")
-    leads = [F.lead("tok", j).over(w) for j in range(1, n)]
-    gram = F.concat_ws(" ", F.col("tok"), *leads)
-    # keep rows that have a full n-gram, OR the first row of a short doc
-    full = leads[-1].isNotNull() if leads else F.lit(True)
-    # gram_n travels as column metadata so a consumer accepting PREBUILT
-    # gram rows (decontaminate_ngram/_bloom) can fail loudly on an
-    # n-mismatch instead of silently mislabeling documents
-    return (
-        tok.select(
-            "id",
-            *keep_cols,
-            gram.alias("shingle", metadata={"gram_n": n}),
-            full.alias("_full"),
-            F.col("pos"),
-        )
-        .filter(F.col("_full") | (F.col("pos") == 0))
-        .select("id", *keep_cols, "shingle")
-        .distinct()
-    )
-
-
-def shingle_arrays(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    keep_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """(id, shingles array, *keep_cols) assembled from shingle rows."""
-    arrays = (
-        shingle_rows(df, text_col, id_col, n)
-        .groupBy("id")
-        .agg(F.array_sort(F.collect_set("shingle")).alias("shingles"))
-    )
-    if keep_cols:
-        side = df.select(F.col(id_col).alias("id"), *keep_cols)
-        arrays = arrays.join(side, "id")
-    return arrays
-
-
-# ---------------------------------------------------------------------------
 # Tier 2 — exact n-gram Jaccard on blocked candidate pairs
 # ---------------------------------------------------------------------------
 def jaccard_similar_pairs(
@@ -148,7 +82,9 @@ def jaccard_similar_pairs(
     # un-materialized, the tokenize+shingle pass runs twice (aliased
     # branches defeat ReusedExchange; r16, guide §2.4 — same fix as
     # minhash_jaccard_estimates)
-    s = shingle_arrays(df, text_col, id_col, n, keep_cols=block_cols).transform(materialize)
+    s = shingle_arrays_arrow(
+        df, text_col, id_col, n, keep_cols=block_cols
+    ).transform(materialize)
     a = s.select(
         F.col("id").alias("id_a"),
         *[F.col(c).alias(f"{c}_a") for c in block_cols],
@@ -177,7 +113,7 @@ def jaccard_similar_pairs(
 
 def _assert_gram_n(grams: DataFrame, n: int, arg: str) -> None:
     """Loud-failure half of the prebuilt-gram contract: gram builders
-    (shingle_rows / shingle_rows_arrow) stamp ``gram_n`` into the
+    (arrow_docs.shingle_rows_arrow) stamp ``gram_n`` into the
     shingle column's metadata; a consumer that accepts prebuilt grams
     alongside an ``n`` argument must reject a mismatch instead of
     silently labeling documents against the wrong gram size. Grams
@@ -214,9 +150,8 @@ def decontaminate_ngram(
     streams through a broadcast hash join with NO corpus-side
     shuffle except the per-document overlap count, keyed by doc id
     (uniform). Both sides shingle via the Arrow gram builder
-    (arrow_docs.shingle_rows_arrow, bit-exact with :func:`shingle_rows`:
-    distinct grams per doc, no codegen compile or per-doc window
-    shuffle).
+    (arrow_docs.shingle_rows_arrow: distinct grams per doc, no codegen
+    compile or per-doc window shuffle).
 
     Returns one row per TRAINING document: (id, n_grams,
     n_contaminated_grams, contamination_ratio, contaminated) —
@@ -229,8 +164,6 @@ def decontaminate_ngram(
     of shingling the corpus once per tier; when provided, the text
     columns are ignored.
     """
-    from streamprocessing_kafka_finlight_news_dashboard_spark.operators.arrow_docs import shingle_rows_arrow
-
     # ONE pass over the train grams: a LEFT broadcast join marks each
     # gram's eval-collision, and a single doc-keyed groupBy computes
     # total and hit counts together. The earlier two-branch
@@ -299,8 +232,6 @@ def ngram_leakage_audit(
     which unnests the same empty set — r10 ADVICE asked this be
     documented rather than changed). Both sides shingle via the Arrow
     gram builder (arrow_docs.shingle_rows_arrow)."""
-    from streamprocessing_kafka_finlight_news_dashboard_spark.operators.arrow_docs import shingle_rows_arrow
-
     tg = shingle_rows_arrow(test, text_col, id_col, n).transform(materialize)
     pg = shingle_rows_arrow(train, text_col, id_col, n).transform(materialize)
     capped = (
@@ -363,10 +294,7 @@ def minhash_lsh_candidates(
     """
     rows_per_band = num_hashes // bands
     # Arrow shingle rows + JVM xxhash64 min-aggregates: the hash family
-    # stays the JVM intrinsic, but the shingle build skips the
-    # posexplode/window-sort/distinct pipeline (see arrow_docs).
-    from streamprocessing_kafka_finlight_news_dashboard_spark.operators.arrow_docs import shingle_rows_arrow
-
+    # stays the JVM intrinsic.
     rows = shingle_rows_arrow(df, text_col, id_col, n)
     sig = rows.groupBy("id").agg(
         *[F.min(F.xxhash64("shingle", F.lit(i))).alias(f"h{i}") for i in range(num_hashes)]
@@ -410,67 +338,9 @@ def minhash_lsh_candidates(
     return pairs.select("p.id_a", "p.id_b").distinct()
 
 
-# Portable hash family for oracle-checked variants: shingle value =
-# first 8 hex chars of md5 (bit-identical across engines, < 2^32),
-# then k affine hashes h_i(v) = (a_i·v + b_i) mod P with P prime
-# > 2^32. The md5-derived 20-bit multipliers give a_i·v ≤ ~2^52 —
-# within int64 on every engine (see _mh_a's docstring). xxhash64
-# stays the production tier (one JVM intrinsic vs md5+conv), these
-# exist so the SAME algorithm is hash-verifiable against DuckDB.
-_MH_P = 4_294_967_311
-
-
-def _mh_a(i: int) -> int:
-    """i-th minhash multiplier: md5-derived 20-bit value in
-    [1, 2^20-1]. Small enough that a·hv ≤ 2^52 never overflows int64
-    (Spark long / numpy int64 / DuckDB BIGINT all agree), random
-    enough that components are effectively independent. The previous
-    arithmetic-progression family (131 + 2i) made CONSECUTIVE hashes
-    correlated (h_{i+1} − h_i = 2·hv + const), which the estimator
-    query exposed: a 0.011-Jaccard pair matched 15/32 components and
-    rode that correlation into a band collision. md5-derived
-    constants put the estimator back inside its binomial error band
-    (measured in CALIBRATION.md)."""
-    import hashlib
-
-    return (
-        int(hashlib.md5(f"mh-a-{i}".encode()).hexdigest()[:5], 16)
-        % ((1 << 20) - 1)
-    ) + 1
-
-
-def _mh_b(i: int) -> int:
-    """i-th minhash offset: md5-derived value in [0, P)."""
-    import hashlib
-
-    return int(hashlib.md5(f"mh-b-{i}".encode()).hexdigest()[:8], 16) % 4294967311
-
-
 def portable_hash_value(col: Column) -> Column:
     """First 8 hex chars of md5 as a long — the cross-engine hash seed."""
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
-def minhash_signatures_portable(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    n: int = 3,
-) -> DataFrame:
-    """MinHash signatures with the portable affine family — the same
-    plan shape as the xxhash64 signatures inside
-    :func:`minhash_lsh_candidates` (shingle rows → one grouped
-    partial-min aggregation), a different hash family."""
-    rows = shingle_rows(df, text_col, id_col, n).withColumn(
-        "hv", portable_hash_value(F.col("shingle"))
-    )
-    return rows.groupBy("id").agg(
-        *[
-            F.min((F.lit(_mh_a(i)) * F.col("hv") + F.lit(_mh_b(i))) % _MH_P).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-    )
 
 
 def minhash_lsh_candidates_portable(
@@ -492,11 +362,6 @@ def minhash_lsh_candidates_portable(
     aliased branches would otherwise re-run the whole signature
     pipeline."""
     rows_per_band = num_hashes // bands
-    # Arrow tier: bit-exact twin of minhash_signatures_portable (same
-    # affine family over md5 values) without the exploded-row shuffle
-    # or the 32-wide min-aggregate — the oracle SQL is unchanged.
-    from streamprocessing_kafka_finlight_news_dashboard_spark.operators.arrow_docs import minhash_signatures_arrow
-
     if sig is None:
         sig = minhash_signatures_arrow(df, text_col, id_col, num_hashes, n)
     banded = sig.select(
@@ -536,29 +401,6 @@ def minhash_lsh_candidates_portable(
     return pairs.select("p.id_a", "p.id_b").distinct()
 
 
-def simhash_table_portable(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
-    """60-bit SimHash with the portable hash (15 md5 hex chars < 2^60):
-    same bit-vote construction as :func:`simhash_table`, reproducible
-    in the DuckDB oracle."""
-    rows = shingle_rows(df, text_col, id_col, n).withColumn(
-        "hv", F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long")
-    )
-    ones = [
-        F.sum(F.shiftright("hv", b).bitwiseAND(F.lit(1))).alias(f"b{b}")
-        for b in range(60)
-    ]
-    per_doc = rows.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"), *ones)
-    out = F.lit(0).cast("long")
-    for b in range(60):
-        bit = (F.col(f"b{b}") * 2 > F.col("n_sh")).cast("long")
-        out = out.bitwiseOR(F.shiftleft(bit, b))
-    return per_doc.select(
-        F.col("id").alias(id_col), F.col("n_sh").alias("n_shingles"), out.alias("simhash60")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Tier 4 — SimHash (64-bit)
 # ---------------------------------------------------------------------------
@@ -567,9 +409,12 @@ def simhash_table(
 ) -> DataFrame:
     """64-bit SimHash per doc: for each bit, count shingle hashes with
     that bit set; the fingerprint bit is 1 iff strictly more than half
-    are. Computed as 64 conditional-sum aggregates over the exploded
-    shingle rows — all codegen'd bit arithmetic, one doc-keyed shuffle."""
-    rows = shingle_rows(df, text_col, id_col, n).withColumn(
+    are. The shingle rows come from the Arrow gram builder
+    (arrow_docs.shingle_rows_arrow); the xxhash64 bit votes are 64
+    conditional-sum aggregates over them — all codegen'd bit
+    arithmetic, one doc-keyed shuffle. The portable 60-bit variant is
+    arrow_docs.simhash_table_arrow."""
+    rows = shingle_rows_arrow(df, text_col, id_col, n).withColumn(
         "h", F.xxhash64("shingle")
     )
     ones = [
@@ -614,16 +459,14 @@ def simhash_hamming_pairs(
     n_bands = radius + 1
     band_bits = bits // n_bands
     mask = (1 << band_bits) - 1
-    # Arrow fingerprint tier (bit-exact twin of simhash_table_portable;
-    # measured 4.5 s cold → <1 s at sf0.1), materialized ONCE before
-    # the band self-join: the two join branches alias columns
+    # Arrow fingerprint tier (measured 4.5 s cold → <1 s at sf0.1 against
+    # a 61-aggregate JVM vote), materialized ONCE before the band
+    # self-join: the two join branches alias columns
     # differently, which defeats Catalyst's ReusedExchange, so without
     # the checkpoint the whole fingerprint pipeline executes TWICE.
     # The checkpointed relation is one narrow row per document (id +
     # 60-bit fingerprint) — at corpus scale that is the small, uniform
     # table you WANT materialized before a self-join.
-    from streamprocessing_kafka_finlight_news_dashboard_spark.operators.arrow_docs import simhash_table_arrow
-
     sh = (
         simhash_table_arrow(df, text_col, id_col, n)
         .select(F.col(id_col).alias("id"), "simhash60")
@@ -1129,8 +972,8 @@ def source_overlap(
     reads before mixing (which crawls duplicate each other, is the
     eval source leaked into a train source).
 
-    Plan shape: one doc-keyed shingle pass (shingle_rows, group col
-    carried through the explode — no corpus re-join), collapsed to
+    Plan shape: one Arrow shingle pass (arrow_docs.shingle_rows_arrow,
+    group col carried per document — no corpus re-join), collapsed to
     DISTINCT (group, md5(gram)) and checkpointed NARROW once (the
     relation feeds per-group sizes AND both sides of the gram self-
     join — the aliased-branch double-eval guard). The self-join is
@@ -1140,7 +983,7 @@ def source_overlap(
     (|groups| rows). Zero-overlap pairs are absent by construction
     (inner join) — stated contract.
     """
-    rows = shingle_rows(df, text_col, id_col, n, keep_cols=(group_col,))
+    rows = shingle_rows_arrow(df, text_col, id_col, n, keep_cols=(group_col,))
     g = (
         rows.select(F.col(group_col).alias("grp"), F.md5(F.col("shingle")).alias("key"))
         .distinct()
@@ -1198,20 +1041,20 @@ def ngram_novelty(
     round(n_novel / n_grams, 6), NULL for gram-less docs (the
     completion left join keeps them, the repetition-gate lesson).
 
-    Plan shape: two shingle passes (:func:`shingle_rows` — doc-keyed
-    repartition before the explode, so single-file tables still fan
-    out distributed), the reference collapsed to DISTINCT md5(gram)
-    keys, then ONE gram-hash-keyed LEFT equi join (uniform 128-bit
-    key; no broadcast of either corpus-sized side) and a doc-keyed
-    count. Cost ∝ distinct grams of both sides — the split-leakage
+    Plan shape: two Arrow shingle passes (arrow_docs.shingle_rows_arrow
+    — an explicit-count scatter before the batch op, so single-file
+    tables still fan out distributed), the reference collapsed to
+    DISTINCT md5(gram) keys, then ONE gram-hash-keyed LEFT equi join
+    (uniform 128-bit key; no broadcast of either corpus-sized side)
+    and a doc-keyed count. Cost ∝ distinct grams of both sides — the split-leakage
     audit's shape, never pairwise."""
     not_blank = F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
     cur_base = cur.filter(not_blank)
-    cgr = shingle_rows(cur_base, text_col, id_col, n, keep_cols=keep_cols).select(
+    cgr = shingle_rows_arrow(cur_base, text_col, id_col, n, keep_cols=keep_cols).select(
         "id", *keep_cols, F.md5("shingle").alias("key")
     )
     ref_keys = (
-        shingle_rows(ref.filter(not_blank), text_col, id_col, n)
+        shingle_rows_arrow(ref.filter(not_blank), text_col, id_col, n)
         .select(F.md5("shingle").alias("key"))
         .distinct()
         .withColumn("__seen", F.lit(1))
@@ -1280,10 +1123,11 @@ def decontaminate_bloom(
     the standard (1-e^{-kn/m})^k rate, which for decontamination
     means over-cleaning a little, never leaking eval data.
 
-    Plan shape: per-hash LEFT broadcast joins on the position columns
-    (no explode, no extra shuffle — the train grams keep their
-    doc-keyed partitioning), one doc-keyed aggregation. Deterministic:
-    positions are md5-derived, so the whole tier is oracle-checkable.
+    Plan shape: both sides shingle via the Arrow gram builder
+    (arrow_docs.shingle_rows_arrow), then per-hash LEFT broadcast joins
+    on the position columns (no explode, no extra shuffle), one
+    doc-keyed aggregation. Deterministic: positions are md5-derived,
+    so the whole tier is oracle-checkable.
 
     ``train_grams`` / ``eval_grams`` share a prebuilt gram grain with
     the exact tier (same contract as decontaminate_ngram).
@@ -1292,13 +1136,13 @@ def decontaminate_bloom(
         _assert_gram_n(train_grams, n, "train_grams")
     if eval_grams is not None:
         _assert_gram_n(eval_grams, n, "eval_grams")
-    tg = train_grams if train_grams is not None else shingle_rows(
+    tg = train_grams if train_grams is not None else shingle_rows_arrow(
         train, text_col, id_col, n
     )
     eg = (
         eval_grams
         if eval_grams is not None
-        else shingle_rows(eval_df, text_col, id_col, n).select("shingle").distinct()
+        else shingle_rows_arrow(eval_df, text_col, id_col, n).select("shingle").distinct()
     )
     bits = (
         eg.select(
@@ -1364,8 +1208,6 @@ def minhash_jaccard_estimates(
     match count is a fixed-order sum of 32 equality indicators —
     exact integers, engine-portable.
     """
-    from streamprocessing_kafka_finlight_news_dashboard_spark.operators.arrow_docs import minhash_signatures_arrow
-
     sig = minhash_signatures_arrow(df, text_col, id_col, num_hashes, n).transform(materialize)
     pairs = minhash_lsh_candidates_portable(
         df, text_col, id_col, num_hashes, sig=sig
@@ -1396,7 +1238,7 @@ def minhash_jaccard_estimates(
     # semi-join + text scan + shingle build execute twice (r16, guide
     # §2.4; the plan showed two full-text parquet scans). The
     # materialized frame is pair-member-sized, not corpus-sized.
-    arrays = shingle_arrays(docs_in_pairs, text_col, id_col, n).transform(materialize)
+    arrays = shingle_arrays_arrow(docs_in_pairs, text_col, id_col, n).transform(materialize)
     aa = arrays.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
     ab = arrays.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))

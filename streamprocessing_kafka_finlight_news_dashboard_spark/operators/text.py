@@ -138,11 +138,11 @@ def bigram_lm_scores(
     P(w2 | w1) = (C(w1,w2) + k) / (C(w1) + k·V), V = |vocab|.
 
     Execution shape: the bigram grain is built once (doc-keyed
-    posexplode + lead window, same recipe as shingle_rows but keeping
-    occurrence multiplicity); model counts are two uniform-key
-    groupBys over that grain; scoring joins occurrences to the model
-    on (w1, w2) — at 100 TB a shuffle join on near-uniform token-pair
-    keys, at small SF broadcast by AQE — and reduces per document.
+    posexplode + lead window, keeping occurrence multiplicity); model
+    counts are two uniform-key groupBys over that grain; scoring joins
+    occurrences to the model on (w1, w2) — at 100 TB a shuffle join on
+    near-uniform token-pair keys, at small SF broadcast by AQE — and
+    reduces per document.
     Training on the corpus being scored is the self-scoring variant;
     pass a reference model by pre-computing counts if needed.
 
@@ -540,41 +540,6 @@ def repetition_report(
 
 #: Language-ID profile size: top-N character bigrams per language.
 _LANGID_TOP = 64
-
-
-def char_bigram_counts(
-    df: DataFrame, text_col: str = "text", id_cols: tuple[str, ...] = ("doc_id",)
-) -> DataFrame:
-    """Per-document character-bigram counts (lowercased, whitespace
-    kept — word-boundary bigrams carry signal). posexplode over the
-    bigram positions then a count groupBy keyed by (doc, bigram):
-    uniform keys, linear in corpus bytes. Explicit repartition before
-    the fan-out — see langid_predictions."""
-    n_part = shuffle_partitions(df.sparkSession)
-    # Build the bigram ARRAY in-row and explode that, rather than
-    # posexploding positions and substring-ing after the Generate: the
-    # generated rows then carry 2-char strings instead of the whole
-    # document text (3.5× faster at sf0.1, and the per-row width no
-    # longer scales with document length).
-    # greatest(..., 1) + length-2 filter: Spark's sequence(a, b)
-    # DESCENDS when b < a, so empty/1-char text would generate
-    # sequence(1, -1) = [1, 0, -1] and three phantom '' bigrams —
-    # where both DuckDB's range() and the Arrow twin correctly emit
-    # none (caught by tests/test_arrow_tiers.py nasty-strings case).
-    exploded = (
-        df.repartition(n_part, *[F.col(c) for c in id_cols])
-        .select(*id_cols, F.lower(F.col(text_col)).alias("_lt"))
-        .select(
-            *id_cols,
-            F.explode(
-                F.expr(
-                    "filter(transform(sequence(1, greatest(length(_lt) - 1, 1)),"
-                    " i -> substring(_lt, i, 2)), x -> length(x) = 2)"
-                )
-            ).alias("bg"),
-        )
-    )
-    return exploded.groupBy(*id_cols, "bg").agg(F.count(F.lit(1)).alias("cnt"))
 
 
 def _score_bigram_counts(counts, prof):

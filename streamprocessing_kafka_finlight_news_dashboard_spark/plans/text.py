@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from streamprocessing_kafka_finlight_news_dashboard_spark.operators import arrow_docs as A
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import dedup as D
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import text as X
 from streamprocessing_kafka_finlight_news_dashboard_spark.session import materialize, shuffle_partitions
@@ -799,9 +800,9 @@ def doc_langid_kappa_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Generated oracle SQL for the portable MinHash/SimHash variants —
 # the hash families are plain affine/md5 arithmetic, so the oracle is
 # the SAME algorithm written in SQL (constants shared via
-# operators/dedup.py).
+# operators/arrow_docs.py).
 _MH_SIG_EXPRS = ",\n                   ".join(
-    f"min(({D._mh_a(i)} * hv + {D._mh_b(i)}) % 4294967311) AS h{i}"
+    f"min(({A._mh_a(i)} * hv + {A._mh_b(i)}) % {A.MH_P}) AS h{i}"
     for i in range(32)
 )
 _MH_BAND_SELECTS = "\n            UNION ALL ".join(
@@ -811,17 +812,26 @@ _MH_BAND_SELECTS = "\n            UNION ALL ".join(
     )
     for b in range(8)
 )
-_SHINGLE_CTES = r"""
+
+
+def _shingle_ctes(n: int) -> str:
+    """``toks`` / ``sh`` CTEs: the distinct word n-gram shingles of every
+    document, one (doc_id, shingle) row each — the SQL specification
+    of arrow_docs._shingle_set."""
+    return rf"""
         toks AS (
             SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
         ), sh AS (
             SELECT doc_id,
                    unnest(list_distinct(list_transform(
-                       range(1, greatest(len(t) - 2, 1) + 1),
-                       i -> array_to_string(t[i:i+2], ' ')))) AS shingle
+                       range(1, greatest(len(t) - {n - 1}, 1) + 1),
+                       i -> array_to_string(t[i:i+{n - 1}], ' ')))) AS shingle
             FROM toks
         )
 """
+
+
+_SHINGLE_CTES = _shingle_ctes(3)
 
 
 @query(
@@ -886,15 +896,15 @@ _SH_ASSEMBLE = " + ".join(f"(CASE WHEN 2 * b{b} > n_sh THEN {1 << b} ELSE 0 END)
         FROM votes
     """,
     survey_ops="dedup SimHash, portable hash family (beyond-reference; "
-    "oracle-checked twin of doc_simhash)",
+    "oracle-checked sibling of doc_simhash)",
     doc="60-bit SimHash per document from per-bit majority votes over "
-    "md5-derived 3-gram shingle hashes — one doc-keyed shuffle, all "
-    "bit arithmetic codegen'd; hash-verified end-to-end against the "
-    "same construction in DuckDB.",
+    "md5-derived 3-gram shingle hashes — one Arrow batch pass after "
+    "the compute scatter, no aggregate shuffle; hash-verified "
+    "end-to-end against the same construction in DuckDB.",
 )
 def doc_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    return D.simhash_table_portable(d)
+    return A.simhash_table_arrow(d)
 
 
 @query(

@@ -535,8 +535,8 @@ def curation_gate_stream(
     the membership-structure-at-ingest design real pipelines use;
     the eval side is benchmark-sized, MBs against a TB stream). A
     pure row-wise map: no join state, no watermark interaction, and
-    the per-doc gram semantics are the bit-exact _shingle_set twin
-    shared with the batch oracle-checked operator.
+    the per-doc grams come from arrow_docs._shingle_set, the same
+    function behind the batch oracle-checked operator.
 
     ``line_rules`` (a dict of :func:`operators.text.line_keep` kwargs)
     turns on C4-style boilerplate-line removal BEFORE the gate — the

@@ -1,22 +1,66 @@
-"""Arrow batch tiers must be bit-exact twins of the JVM formulations.
-
-The catalog's DuckDB oracles were written against the JVM pipelines;
-the Arrow tiers (operators/arrow_docs.py) replace them in the hot
-paths, so any divergence here would silently break the oracle gate.
+"""The Arrow document-gram builders (operators/arrow_docs.py) are the
+engine's only implementation of per-document grams, and their
+specification is the DuckDB SQL the catalog oracles run. Each test
+runs a builder and that SQL on the same input — the sf0.001 corpus,
+or an edge-case corpus — and requires identical rows. (The
+``_matches_jvm`` names are kept from when a JVM formulation was the
+reference, so the test ids stay stable.)
 """
 
 from __future__ import annotations
 
+import hashlib
 from collections import Counter
 
+import duckdb
+import pandas as pd
 import pytest
 
+from streamprocessing_kafka_finlight_news_dashboard_spark import plans
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import arrow_docs as A
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import dedup as D
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import text as T
+from streamprocessing_kafka_finlight_news_dashboard_spark.plans import text as P
 from streamprocessing_kafka_finlight_news_dashboard_spark.sources.tables import load_table
+from tests.oracle_compare import duckdb_conn
 
 SF_DIR = "/root/testdata/sf0.001"
+
+_SIMHASH_SQL = plans.CATALOG["doc_simhash_portable"].oracle
+_MINHASH_SQL = f"""
+    WITH {P._SHINGLE_CTES}
+    , vals AS (
+        SELECT doc_id, CAST('0x' || substring(md5(shingle), 1, 8) AS BIGINT) AS hv
+        FROM sh
+    )
+    SELECT doc_id, {P._MH_SIG_EXPRS} FROM vals GROUP BY doc_id
+"""
+_BIGRAM_SQL = """
+    SELECT doc_id, lang, substring(lower(text), i, 2) AS bg, count(*) AS cnt
+    FROM documents,
+         LATERAL (SELECT unnest(range(1, len(lower(text)))) AS i) pos
+    GROUP BY doc_id, lang, substring(lower(text), i, 2)
+"""
+
+#: Edge-case corpus: unicode whitespace (which Python's default \s
+#: would eat but Java/RE2 do not), leading/trailing mixed whitespace,
+#: empty and null text, runs of separators, single tokens.
+NASTY = [
+    (0, "plain three token doc"),
+    (1, "  leading spaces"),
+    (2, "trailing spaces   "),
+    (3, "tab\tseparated\ttokens here"),
+    (4, "newline\nseparated\ntokens here"),
+    (5, "multiple    spaces   between"),
+    (6, "nbsp\u00a0is not ascii whitespace"),  # NBSP must stay inside a token
+    (7, "single"),
+    (8, "two tokens"),
+    (9, ""),
+    (10, None),
+    (11, "\t\n starts with whitespace"),
+    (12, "CRLF\r\nline break doc"),
+    (13, "x " * 50),  # heavy repetition
+]
 
 
 @pytest.fixture(scope="module")
@@ -24,51 +68,79 @@ def docs(spark):
     return load_table(spark, SF_DIR, "documents")
 
 
-def _sorted_rows(df, cols):
-    return df.select(*cols).orderBy(*cols).collect()
+def _rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _duck(sql: str, pdf: pd.DataFrame | None = None) -> list[tuple]:
+    """Rows of ``sql`` over the sf0.001 tables, or over ``pdf`` as
+    ``documents``."""
+    con = duckdb_conn(SF_DIR) if pdf is None else duckdb.connect()
+    try:
+        if pdf is not None:
+            con.register("documents", pdf)
+        return sorted(con.execute(sql).fetchall())
+    finally:
+        con.close()
+
+
+def _shingle_sql(n: int) -> str:
+    return f"WITH {P._shingle_ctes(n)} SELECT doc_id, shingle FROM sh"
 
 
 def test_mh_constants_in_sync():
-    import hashlib
-
-    assert A.MH_P == D._MH_P
+    """The Arrow MinHash and the oracle's signature SQL take their
+    md5-derived constants from the one definition in arrow_docs."""
+    assert A.MH_P == 4_294_967_311
     for i in (0, 1, 7, 31):
         want_a = (
             int(hashlib.md5(f"mh-a-{i}".encode()).hexdigest()[:5], 16)
             % ((1 << 20) - 1)
         ) + 1
-        want_b = int(hashlib.md5(f"mh-b-{i}".encode()).hexdigest()[:8], 16) % 4294967311
-        assert D._mh_a(i) == want_a
-        assert 1 <= D._mh_a(i) < (1 << 20)  # int64-overflow-safe bound
-        assert D._mh_b(i) == want_b
+        want_b = int(hashlib.md5(f"mh-b-{i}".encode()).hexdigest()[:8], 16) % A.MH_P
+        assert A._mh_a(i) == want_a
+        assert 1 <= want_a < (1 << 20)  # int64-overflow-safe bound
+        assert A._mh_b(i) == want_b
+        assert f"min(({want_a} * hv + {want_b}) % {A.MH_P}) AS h{i}" in P._MH_SIG_EXPRS
 
 
 def test_simhash_arrow_matches_jvm(docs):
-    jvm = D.simhash_table_portable(docs)
-    arrow = A.simhash_table_arrow(docs)
-    cols = ["doc_id", "n_shingles", "simhash60"]
-    assert _sorted_rows(jvm, cols) == _sorted_rows(arrow, cols)
+    got = _rows(A.simhash_table_arrow(docs))
+    assert got and got == _duck(_SIMHASH_SQL)
 
 
 def test_minhash_arrow_matches_jvm(docs):
-    jvm = D.minhash_signatures_portable(docs)
-    arrow = A.minhash_signatures_arrow(docs)
-    cols = ["id"] + [f"h{i}" for i in range(32)]
-    assert _sorted_rows(jvm, cols) == _sorted_rows(arrow, cols)
+    got = _rows(A.minhash_signatures_arrow(docs))
+    assert got and got == _duck(_MINHASH_SQL)
 
 
-def test_shingle_rows_arrow_matches_jvm(docs):
-    jvm = D.shingle_rows(docs)
-    arrow = A.shingle_rows_arrow(docs)
-    cols = ["id", "shingle"]
-    assert _sorted_rows(jvm, cols) == _sorted_rows(arrow, cols)
+def test_shingle_rows_arrow_matches_jvm(docs, spark):
+    """Shingle rows at n=3 (with a carried per-doc column) and n=4 on
+    the corpus, and the sorted arrays built in the same pass; then
+    blank, short and mixed-whitespace texts at n=4."""
+    got = _rows(A.shingle_rows_arrow(docs, keep_cols=("lang",)))
+    want = _duck(
+        f"WITH {P._shingle_ctes(3)} "
+        "SELECT doc_id, d.lang, shingle FROM sh JOIN documents d USING (doc_id)"
+    )
+    assert got and got == want
+
+    want4 = _duck(_shingle_sql(4))
+    assert _rows(A.shingle_rows_arrow(docs, n=4)) == want4
+    arrays: dict[int, list[str]] = {}
+    for doc_id, shingle in want4:
+        arrays.setdefault(doc_id, []).append(shingle)
+    assert _rows(A.shingle_arrays_arrow(docs, n=4)) == sorted(arrays.items())
+
+    small = [(1, None), (2, ""), (3, "  "), (4, "one two"), (5, "a  b\tc d e f")]
+    df = spark.createDataFrame(small, "doc_id bigint, text string")
+    pdf = pd.DataFrame(small, columns=["doc_id", "text"])
+    assert _rows(A.shingle_rows_arrow(df, n=4)) == _duck(_shingle_sql(4), pdf)
 
 
 def test_bigram_counts_arrow_matches_jvm(docs):
-    jvm = T.char_bigram_counts(docs, id_cols=("doc_id", "lang"))
-    arrow = A.char_bigram_counts_arrow(docs, id_cols=("doc_id", "lang"))
-    cols = ["doc_id", "lang", "bg", "cnt"]
-    assert _sorted_rows(jvm, cols) == _sorted_rows(arrow, cols)
+    got = _rows(A.char_bigram_counts_arrow(docs, id_cols=("doc_id", "lang")))
+    assert got and got == _duck(_BIGRAM_SQL)
 
 
 def test_token_counts_arrow_matches_jvm(docs, spark):
@@ -82,7 +154,7 @@ def test_token_counts_arrow_matches_jvm(docs, spark):
     )
     arrow = A.token_counts_arrow(docs)
     cols = ["doc_id", "token", "tf"]
-    assert _sorted_rows(jvm, cols) == _sorted_rows(arrow, cols)
+    assert _rows(jvm.select(*cols)) == _rows(arrow.select(*cols))
 
 
 def test_shingle_set_edge_cases():
@@ -97,48 +169,21 @@ def test_shingle_set_edge_cases():
 
 
 def test_twins_agree_on_nasty_strings(spark):
-    """Edge-case corpus: unicode whitespace (which Python's default \\s
-    would eat but Java/RE2 do not), leading/trailing mixed whitespace,
-    empty and null text, runs of separators, single tokens. The Arrow
-    twins must agree with the JVM formulations row-for-row on all of
-    them — including the null-text row, which the JVM explode DROPS."""
-    nasty = [
-        (0, "plain three token doc"),
-        (1, "  leading spaces"),
-        (2, "trailing spaces   "),
-        (3, "tab\tseparated\ttokens here"),
-        (4, "newline\nseparated\ntokens here"),
-        (5, "multiple    spaces   between"),
-        (6, "nbsp is not ascii whitespace"),  # NBSP must stay inside a token
-        (7, "single"),
-        (8, "two tokens"),
-        (9, ""),
-        (10, None),
-        (11, "\t\n starts with whitespace"),
-        (12, "CRLF\r\nline break doc"),
-        (13, "x " * 50),  # heavy repetition
-    ]
-    df = spark.createDataFrame(nasty, "doc_id bigint, text string")
-
-    jvm_sh = D.shingle_rows(df)
-    arrow_sh = A.shingle_rows_arrow(df)
-    assert _sorted_rows(jvm_sh, ["id", "shingle"]) == _sorted_rows(
-        arrow_sh, ["id", "shingle"]
-    )
-
-    jvm_fp = D.simhash_table_portable(df)
-    arrow_fp = A.simhash_table_arrow(df)
-    cols = ["doc_id", "n_shingles", "simhash60"]
-    assert _sorted_rows(jvm_fp, cols) == _sorted_rows(arrow_fp, cols)
+    """Every builder equals its oracle SQL row-for-row on the edge-case
+    corpus — including the null-text row, for which both emit
+    nothing."""
+    df = spark.createDataFrame(NASTY, "doc_id bigint, text string")
+    pdf = pd.DataFrame(NASTY, columns=["doc_id", "text"])
+    assert _rows(A.shingle_rows_arrow(df)) == _duck(_shingle_sql(3), pdf)
+    assert _rows(A.simhash_table_arrow(df)) == _duck(_SIMHASH_SQL, pdf)
+    assert _rows(A.minhash_signatures_arrow(df)) == _duck(_MINHASH_SQL, pdf)
 
     df2 = df.withColumn("lang", df.doc_id.cast("string"))
-    jvm_bg = T.char_bigram_counts(df2, id_cols=("doc_id", "lang"))
-    arrow_bg = A.char_bigram_counts_arrow(df2, id_cols=("doc_id", "lang"))
-    cols = ["doc_id", "lang", "bg", "cnt"]
-    assert _sorted_rows(jvm_bg, cols) == _sorted_rows(arrow_bg, cols)
+    pdf2 = pdf.assign(lang=pdf.doc_id.astype(str))
+    got = _rows(A.char_bigram_counts_arrow(df2, id_cols=("doc_id", "lang")))
+    assert got == _duck(_BIGRAM_SQL, pdf2)
     # pandas can surface a SQL NULL string as NaN instead of None
     assert A.bigram_counter(float("nan")) == Counter()
-
 
 
 @pytest.mark.parametrize("eval_type", ["pandas_udf", "mapInPandas", "applyInPandas"])
@@ -187,6 +232,7 @@ def test_worker_zip_directories_survive_task_setup(spark, eval_type):
     assert int(n_archives) > 0  # the worker imported from zip archives
     assert replaced == "", replaced
 
+
 def test_operators_invariant_to_input_partitioning(docs, spark):
     """Distributed-correctness property: operator results must not
     depend on how the input happens to be partitioned (a partition-
@@ -204,28 +250,3 @@ def test_operators_invariant_to_input_partitioning(docs, spark):
     tf_a = sorted(map(tuple, A.token_counts_arrow(docs).collect()))
     tf_b = sorted(map(tuple, A.token_counts_arrow(odd).collect()))
     assert tf_a == tf_b
-
-
-def test_shingle_rows_arrow_matches_jvm(spark):
-    """The Arrow shingle-row tier must emit exactly the JVM tier's
-    (id, shingle) set — including short-doc whole-text shingles and
-    null/empty/nasty texts — so decontamination joins on raw strings
-    can swap tiers freely."""
-    from streamprocessing_kafka_finlight_news_dashboard_spark.operators.arrow_docs import shingle_rows_arrow
-    from streamprocessing_kafka_finlight_news_dashboard_spark.operators.dedup import shingle_rows
-    from streamprocessing_kafka_finlight_news_dashboard_spark.sources.tables import load_table
-    from tests.conftest import SF_SMOKE
-
-    d = load_table(spark, SF_SMOKE, "documents")
-    for n in (3, 4):
-        jvm = set(map(tuple, shingle_rows(d, n=n).collect()))
-        arrow = set(map(tuple, shingle_rows_arrow(d, n=n).collect()))
-        assert jvm == arrow and jvm
-
-    nasty = spark.createDataFrame(
-        [(1, None), (2, ""), (3, "  "), (4, "one two"), (5, "a  b\tc d e f")],
-        "doc_id long, text string",
-    )
-    jvm = set(map(tuple, shingle_rows(nasty, n=4).collect()))
-    arrow = set(map(tuple, shingle_rows_arrow(nasty, n=4).collect()))
-    assert jvm == arrow

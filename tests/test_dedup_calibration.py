@@ -17,12 +17,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import dedup as D
+from streamprocessing_kafka_finlight_news_dashboard_spark.operators.arrow_docs import shingle_rows_arrow
 from streamprocessing_kafka_finlight_news_dashboard_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 
 
 def _exact_jaccard_pairs(docs) -> dict[tuple[int, int], float]:
-    rows = D.shingle_rows(docs)
+    rows = shingle_rows_arrow(docs)
     sizes = rows.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     a = rows.select(F.col("id").alias("id_a"), "shingle")
     b = rows.select(F.col("id").alias("id_b"), "shingle")

@@ -130,34 +130,27 @@ def test_parquet_aggregate_pushdown(spark):
 
 
 def test_document_fanout_is_distributed(spark):
-    """The explode fan-out operators must repartition BEFORE the
-    generate: a single-split document table otherwise runs the whole
-    pipeline on one task (AQE coalesces bare keyed repartitions, so
-    the plan must carry an explicit-count exchange below the
-    Generate)."""
-    for name in ("doc_simhash",):
-        plan = plan_of(plans.CATALOG[name].builder(spark, SF_SMOKE))
-        gen_pos = plan.find("Generate")
-        assert gen_pos != -1, plan
-        assert "REPARTITION_BY_NUM" in plan or "hashpartitioning" in plan, plan
+    """The document fan-out operators must repartition BEFORE the
+    fan-out (a Generate, or the Arrow batch op): a single-split
+    document table otherwise runs the whole pipeline on one task (AQE
+    coalesces bare keyed repartitions, so the plan must carry an
+    explicit-count exchange below the fan-out)."""
     # doc_bigram_jaccard_pairs checkpoints its shingle relation (r16
     # dual-branch fix), so the catalog plan legitimately starts from
     # the checkpointed RDD scan — assert the fan-out on the
     # pre-checkpoint shingle subtree instead (the same re-anchoring as
     # the tfidf clause below).
-    from streamprocessing_kafka_finlight_news_dashboard_spark.operators.dedup import shingle_arrays
+    from streamprocessing_kafka_finlight_news_dashboard_spark.operators.arrow_docs import shingle_arrays_arrow
 
     plan = plan_of(
-        shingle_arrays(
+        shingle_arrays_arrow(
             load_table(spark, SF_SMOKE, "documents"), "text", "doc_id", 2,
             keep_cols=("lang",),
         )
     )
-    assert "Generate" in plan or "MapInPandas" in plan, (
-        f"jaccard shingle grain lost its fan-out:\n{plan}"
-    )
-    assert "REPARTITION_BY_NUM" in plan or "hashpartitioning" in plan, (
-        f"jaccard shingle grain lacks a distributing exchange:\n{plan}"
+    assert "MapInPandas" in plan, f"jaccard shingle grain lost its Arrow batch op:\n{plan}"
+    assert "REPARTITION_BY_NUM" in plan, (
+        f"jaccard shingle grain lacks explicit-count repartition:\n{plan}"
     )
     # Arrow-tier operators: the fan-out moved inside mapInPandas, but
     # the same trap applies — the plan must scatter the single-split
@@ -165,7 +158,7 @@ def test_document_fanout_is_distributed(spark):
     # (doc_simhash_hamming_pairs is excluded: its fingerprint table is
     # localCheckpoint-materialized before the band self-join, so the
     # final plan legitimately starts from the checkpointed RDD scan.)
-    for name in ("doc_langid_ngram", "doc_minhash_lsh_portable"):
+    for name in ("doc_simhash", "doc_langid_ngram", "doc_minhash_lsh_portable"):
         plan = plan_of(plans.CATALOG[name].builder(spark, SF_SMOKE))
         assert "MapInPandas" in plan, f"{name} lost its Arrow batch op:\n{plan}"
         assert "REPARTITION_BY_NUM" in plan, f"{name} lacks explicit-count repartition:\n{plan}"

@@ -1300,7 +1300,6 @@ def test_decontaminate_prebuilt_gram_n_contract(spark):
     from streamprocessing_kafka_finlight_news_dashboard_spark.operators.dedup import (
         decontaminate_bloom,
         decontaminate_ngram,
-        shingle_rows,
     )
 
     train = spark.createDataFrame(
@@ -1309,14 +1308,15 @@ def test_decontaminate_prebuilt_gram_n_contract(spark):
     ev = spark.createDataFrame(
         [(9, "charlie delta echo foxtrot")], "doc_id long, text string"
     )
-    tg3 = shingle_rows(train, n=3)
-    eg3 = shingle_rows(ev, n=3).select("shingle").distinct()
+    tg3 = shingle_rows_arrow(train, n=3)
+    eg3 = shingle_rows_arrow(ev, n=3).select("shingle").distinct()
     # matching n: accepted, and equal to the self-built path
     ok = decontaminate_ngram(train, ev, n=3, train_grams=tg3, eval_grams=eg3)
     base = decontaminate_ngram(train, ev, n=3)
     assert [tuple(r) for r in ok.collect()] == [tuple(r) for r in base.collect()]
-    # metadata survives select/distinct and the Arrow tier stamps it too
+    # metadata survives select/distinct, and tracks n
     assert (tg3.schema["shingle"].metadata or {}).get("gram_n") == 3
+    assert (eg3.schema["shingle"].metadata or {}).get("gram_n") == 3
     assert (
         shingle_rows_arrow(train, n=4).schema["shingle"].metadata or {}
     ).get("gram_n") == 4
@@ -1603,7 +1603,7 @@ def test_ngram_novelty_planted(spark):
     """Planted novelty semantics: a verbatim copy of a reference doc
     scores 0.0, fully-new text scores 1.0, a half-overlapping doc
     scores the exact distinct-gram fraction, a short (<n tokens) doc
-    degrades to its whole-text shingle (the shingle_rows contract),
+    degrades to its whole-text shingle (the _shingle_set contract),
     and blank-text docs are excluded entirely."""
     from streamprocessing_kafka_finlight_news_dashboard_spark.operators.dedup import ngram_novelty
 

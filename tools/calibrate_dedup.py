@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from streamprocessing_kafka_finlight_news_dashboard_spark import get_spark
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import dedup as D
 from streamprocessing_kafka_finlight_news_dashboard_spark.operators import similarity as S
+from streamprocessing_kafka_finlight_news_dashboard_spark.operators.arrow_docs import shingle_rows_arrow
 from streamprocessing_kafka_finlight_news_dashboard_spark.session import materialize
 from streamprocessing_kafka_finlight_news_dashboard_spark.sources.tables import load_table
 
@@ -32,7 +33,7 @@ COS_THRESHOLDS = (0.4, 0.7, 0.9)
 
 
 def exact_jaccard(docs) -> dict[tuple[int, int], float]:
-    rows = D.shingle_rows(docs)
+    rows = shingle_rows_arrow(docs)
     sizes = rows.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     a = rows.select(F.col("id").alias("id_a"), "shingle")
     b = rows.select(F.col("id").alias("id_b"), "shingle")
